@@ -562,9 +562,9 @@ def q_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", rebalance=True)
     # Both sides derive from the session's shared materialized signature
     # stage (one shingle→minhash pipeline for the whole dedup family);
-    # banding from materialized signatures is cheap md5 concat, so the
-    # r8 cache_bands measurement (persist loses to recompute) still
-    # holds — only the expensive upstream is shared.
+    # banding from materialized signatures is cheap md5 concat, which
+    # measured cheaper to recompute per job than to persist — only the
+    # expensive upstream is shared.
     sigs = _shared_minhash_sigs(spark, sf_dir)
     store = band_store(
         docs, signatures=sigs.where(F.col("doc_id") % 2 == 0)

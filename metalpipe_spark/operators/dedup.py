@@ -54,7 +54,6 @@ def jaccard_candidate_pairs(
     n: int = 3,
     threshold: float = 0.05,
     max_doc_frequency: int | None = 1000,
-    cache_shingles: bool = False,
     pair_partitions: int | None = None,
 ) -> DataFrame:
     """N-gram Jaccard near-duplicate pairs.
@@ -89,16 +88,12 @@ def jaccard_candidate_pairs(
     construction few, so the hot list always fits a broadcast.
     """
     # The shingle table feeds three consumers (both self-join sides and
-    # the per-doc sizes).  At warehouse scale the right move is writing
-    # the shingle-index TABLE once and joining it (storage, not executor
-    # cache).  In-session, ``cache_shingles`` is OFF by default: the
-    # explode is a cheap scan-side recompute, and measured at sf0.1 the
-    # cache materialization costs ~4x the recompute it saves.
+    # the per-doc sizes) and is not persisted: the explode is a cheap
+    # scan-side recompute, and measured at sf0.1 caching it cost ~4x
+    # the recompute it saves.
     sh = df.select(
         F.col(id_col), F.explode(word_shingles(text_col, n)).alias("shingle")
     )
-    if cache_shingles:
-        sh = sh.persist()
     joinable = sh
     if max_doc_frequency is not None:
         hot = (
@@ -266,7 +261,6 @@ def minhash_lsh_pairs(
     n: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
-    cache_signatures: bool = False,
     signatures: DataFrame | None = None,
     threshold: float | None = None,
     hash: str = "md5",
@@ -276,11 +270,6 @@ def minhash_lsh_pairs(
     components.  Pairs meet through band buckets (groupBy band key), so
     the join is bucket-local — the standard shape that survives 100 TB.
 
-    At warehouse scale, write the signature table once and join it
-    (storage, not executor cache).  In-session ``cache_signatures`` is
-    OFF by default: recomputing the signature pipeline for the second
-    join side measured faster than persisting it at sf0.1 (cache
-    materialization + read beat by the map-side-combined recompute).
     ``signatures`` accepts a prebuilt/materialized signature table
     (``(id, minhash)`` with ``num_hashes`` components — e.g. the
     catalog's shared signature stage) so several consumers in one
@@ -298,8 +287,6 @@ def minhash_lsh_pairs(
         if signatures is not None
         else minhash_signatures(df, text_col, id_col, n, num_hashes, hash)
     )
-    if cache_signatures:
-        sigs = sigs.persist()
     banded = _banded_signatures(sigs, id_col, num_hashes, bands)
     return _pairs_from_bands(banded, id_col, num_hashes)
 
@@ -895,7 +882,6 @@ def simhash_neardup_pairs(
     blocks: int | None = None,
     combo: int = 1,
     hash: str = "md5",
-    cache_codes: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance ≤ ``max_hamming``,
     found via block banding (Manku et al., WWW'07): split the
@@ -923,7 +909,7 @@ def simhash_neardup_pairs(
     ``bits`` (e.g. 64 via a second hash) so the combined key keeps
     clearing log2(n)."""
     fp = simhash(df, text_col, id_col, bits, hash)
-    # cache_codes defaults ON here (unlike the raw hamming engine): the
+    # Codes are always cached here (unlike the raw hamming engine): the
     # simhash code pipeline is a token explode + packed-lane groupBy —
     # a full shuffle-aggregate per reference — and the banded self-join
     # references it once per side, so without the 16-byte/doc
@@ -932,7 +918,7 @@ def simhash_neardup_pairs(
     return hamming_neardup_pairs(
         fp, code_col="simhash", id_col=id_col,
         bits=bits, max_hamming=max_hamming, blocks=blocks, combo=combo,
-        cache_codes=cache_codes,
+        cache_codes=True,
     )
 
 
@@ -1007,8 +993,8 @@ def hamming_neardup_pairs(
     that pipeline is expensive — the multimodal numpy kernels pay the
     Arrow boundary plus per-row decode twice (r17 A/B: q_audio_neardup
     ~2x faster, guide §2.4/§5); leave it off for cheap map-side code
-    pipelines, where recompute beats cache write+read (the
-    minhash_lsh_pairs cache_signatures precedent).  Cached state is 16
+    pipelines, where recompute beats cache write+read (as for the
+    minhash signature pipeline).  Cached state is 16
     bytes/doc — never payloads."""
     if cache_codes:
         codes = codes.select(id_col, code_col).localCheckpoint(eager=False)
@@ -2051,7 +2037,6 @@ def incremental_neardup_dedup(
     num_hashes: int = 16,
     bands: int = 8,
     threshold: float = 0.5,
-    cache_bands: bool = False,
     signatures: DataFrame | None = None,
     hash: str = "md5",
 ) -> tuple[DataFrame, DataFrame]:
@@ -2065,17 +2050,6 @@ def incremental_neardup_dedup(
     Returns ``(fresh, updated_store)``; the store grows only by the
     surviving docs, so contested future batches dedup against
     canonical survivors, never against already-dropped text.
-
-    The batch band table feeds every stage (in-batch pair generation,
-    the survivor semi-join, the store join), and the connected-components
-    pass splits the work into separate jobs, so exchange reuse cannot
-    carry it across — ``cache_bands=True`` persists it once instead of
-    re-running the shingle→minhash pipeline per job (the caller owns the
-    blocks' lifetime: drop them via ``spark.catalog.clearCache()`` or a
-    fresh session once the returned frames are drained).  OFF by default,
-    matching the ``cache_signatures``/``cache_shingles`` house rule: at
-    warehouse scale the band table is a bucketed TABLE (storage), and an
-    executor-cache default would silently pin memory.
 
     Semantics note (inherent to ANY incremental near-dedup): a
     transitive chain spanning batches — A≈B in batch 1+2, B≈C in 2+3,
@@ -2132,8 +2106,6 @@ def incremental_neardup_dedup(
                     f"{batch_hash!r}; rebuild the store or drop the knob"
                 )
             batch_bands = batch_bands.drop("h")  # keep the old schema
-    if cache_bands:
-        batch_bands = batch_bands.persist()
     # in-batch near-dups -> keep component minimum; pairs derive from the
     # SAME band table every other stage uses (one signature pipeline).
     in_pairs = _pairs_from_bands(batch_bands, id_col, num_hashes).where(

@@ -237,7 +237,6 @@ def edit_distance_join(
     id_col: str = "doc_id",
     max_edits: int = 1,
     max_bucket_size: int | None = None,
-    cache_variants: bool = True,
 ) -> DataFrame:
     """Fuzzy self-join: every pair of rows whose ``col`` values are
     within Levenshtein distance ``max_edits`` — ``(id1, id2, s1, s2,
@@ -260,13 +259,13 @@ def edit_distance_join(
     HOF work is O(len^k) per row: this operator targets short keys;
     for document-scale near-dup use the minhash/simhash family.
 
-    ``cache_variants=True`` (default) lazily local-checkpoints the
-    exploded variant table before the self-join: the table is
-    referenced from 2 subtrees (4 with ``max_bucket_size``) and
-    Catalyst replays un-exchanged subtrees per reference, so without
-    it the O(len^k) neighborhood expansion AND the caller's whole
-    upstream (typically a corpus tokenize+distinct) execute once per
-    side (the hamming/semdedup ``cache_codes`` finding).  State is
+    The exploded variant table is lazily local-checkpointed before the
+    self-join (materialized at the first action, nothing pinned for the
+    session): the table is referenced from 2 subtrees (4 with
+    ``max_bucket_size``) and Catalyst replays un-exchanged subtrees per
+    reference, so without it the O(len^k) neighborhood expansion AND
+    the caller's whole upstream (typically a corpus tokenize+distinct)
+    execute once per side (as for the hamming engine's codes).  State is
     key-scale ``(id, s, variant)`` rows — names/tokens, never document
     payloads — and ContextCleaner drops it with the plan."""
     if max_edits < 1:
@@ -279,11 +278,8 @@ def edit_distance_join(
             s.alias("__s"),
             F.explode(_deletion_variants(s, max_edits)).alias("__v"),
         )
+        .localCheckpoint(eager=False)
     )
-    if cache_variants:
-        # Lazy: materializes at the first action, nothing pinned for
-        # the session (the cache_codes idiom).
-        variants = variants.localCheckpoint(eager=False)
     if max_bucket_size is not None:
         counts = variants.groupBy("__v").agg(
             F.count(F.lit(1)).alias("__bn")

@@ -928,7 +928,6 @@ def semantic_neardup_pairs(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     dim: int | None = None,
-    cache_sigs: bool = True,
 ) -> DataFrame:
     """Within-cell embedding-cosine near-duplicate pairs: every vector is
     assigned to its nearest centroid cell (map-side, centroids as plan
@@ -947,15 +946,15 @@ def semantic_neardup_pairs(
     :func:`pairwise_topk_per_label` — refit/expand the centroid set, or
     pre-split with that function's salting pattern.
 
-    ``cache_sigs=True`` (default) materializes the assigned
-    ``(id, _vd, cell, nrm)`` frame once (lazy localCheckpoint,
-    ContextCleaner-dropped) before the self-join references it twice.
-    Without it the nearest-centroid assignment — k dot products per
-    row, each an interpreted HOF fold — executes once per join side,
-    and the join's pushed ``isnotnull(cell)`` null-filter re-evaluates
-    the WHOLE assignment expression a second time per row below each
-    Project (the guide §4.4 duplication, with a built-in expression):
-    ~4 assignment passes per action where one suffices.  Materializing
+    The assigned ``(id, _vd, cell, nrm)`` frame is materialized once
+    (lazy localCheckpoint, ContextCleaner-dropped) before the self-join
+    references it twice.  Otherwise the nearest-centroid assignment —
+    k dot products per row, each an interpreted HOF fold — executes
+    once per join side, and the join's pushed ``isnotnull(cell)``
+    null-filter re-evaluates the WHOLE assignment expression a second
+    time per row below each Project (the guide §4.4 duplication, with a
+    built-in expression): ~4 assignment passes per action where one
+    suffices.  Materializing
     the assignment is what SemDeDup's own pipeline does anyway (the
     cell table IS the index); state is id + dim doubles + cell + nrm
     per row, payloads never enter block storage.
@@ -970,9 +969,7 @@ def semantic_neardup_pairs(
         F.col("_vd"),
         F.element_at(_probe_cells(centroids, 1), 1).alias("cell"),
         F.expr(norm_sql("_vd", dim, cast=False)).alias("nrm"),
-    )
-    if cache_sigs:
-        sigs = sigs.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     a = sigs.select(
         F.col("cell"),
         F.col(id_col).alias("d1"),
@@ -1073,8 +1070,6 @@ def incremental_semantic_dedup(
     threshold: float = 0.9,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    use_gemm: bool = True,
-    checkpoint_batch: bool = False,
     return_delta: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Semantic dedup of a NEW batch against the accumulated corpus —
@@ -1090,56 +1085,32 @@ def incremental_semantic_dedup(
     only by surviving docs, so future batches dedup against canonical
     survivors.
 
-    ``use_gemm`` (default — the production path) runs both the in-batch
-    step and the cross-store check as per-cell BLAS matmuls
-    (:func:`semantic_dedup_gemm`'s kernel; the cross check is a
-    cogrouped batch×store matrix per cell) instead of per-pair
+    Both the in-batch step and the cross-store check run as per-cell
+    BLAS matmuls (:func:`semantic_dedup_gemm`'s kernel; the cross check
+    is a cogrouped batch×store matrix per cell) instead of per-pair
     interpreted array folds — measured 170 s → ~4 s on the dense sf1
     scaling corpus.  Decisions compare the 6-decimal-QUANTIZED
-    similarity either way, so the two modes agree everywhere except
-    pairs whose raw cosine sits within an ulp of a rounding boundary;
-    ``use_gemm=False`` is the SQL-replayable fold the oracle uses.
+    similarity, so they agree with the oracle's SQL fold everywhere
+    except pairs whose raw cosine sits within an ulp of a rounding
+    boundary.
 
     Same cross-batch chain semantics as the other incremental ops
     (documented on ``incremental_neardup_dedup``): membership is
     decided against surviving canonicals at arrival time.
     """
-    if use_gemm:
-        batch_survivors = semantic_dedup_gemm(
-            new_docs, centroids, threshold=threshold, vec_col=vec_col, id_col=id_col
-        )
-    else:
-        batch_survivors = semantic_dedup(
-            new_docs, centroids, threshold=threshold, vec_col=vec_col, id_col=id_col
-        )
-    if checkpoint_batch:
-        # Materialize the BATCH-scale GEMM results once so a caller
-        # running several actions over (fresh, updated) — e.g. the
-        # streaming sink's kept-append + store-rewrite — doesn't re-run
-        # the dedup kernels per action.  Only batch-sized relations are
-        # checkpointed; the accumulated store never enters block
-        # storage.
-        batch_survivors = batch_survivors.localCheckpoint(eager=True)
+    # Materialize the BATCH-scale GEMM results once so a caller
+    # running several actions over (fresh, updated) — e.g. the
+    # streaming sink's kept-append + store-rewrite — doesn't re-run
+    # the dedup kernels per action.  Only batch-sized relations are
+    # checkpointed; the accumulated store never enters block storage.
+    batch_survivors = semantic_dedup_gemm(
+        new_docs, centroids, threshold=threshold, vec_col=vec_col, id_col=id_col
+    ).localCheckpoint(eager=True)
     surv_store = cell_store(batch_survivors, centroids, vec_col, id_col)
     if store is not None:
-        if use_gemm:
-            hits = _cross_hits_gemm(surv_store, store, threshold, id_col)
-        else:
-            a = surv_store.alias("a")
-            b = store.alias("b")
-            cos = F.round(
-                dot(F.col("a.vec"), F.col("b.vec"))
-                / (F.col("a.nrm") * F.col("b.nrm")),
-                6,
-            )
-            hits = (
-                a.join(b, F.col("a.cell") == F.col("b.cell"))
-                .where(cos >= F.lit(threshold))
-                .select(F.col(f"a.{id_col}").alias(id_col))
-                .distinct()
-            )
-        if checkpoint_batch:
-            hits = hits.localCheckpoint(eager=True)  # ids only — tiny
+        hits = _cross_hits_gemm(
+            surv_store, store, threshold, id_col
+        ).localCheckpoint(eager=True)  # ids only — tiny
         fresh = batch_survivors.join(hits, id_col, "left_anti")
         surv_store = surv_store.join(hits, id_col, "left_anti")
         # return_delta: the store is strictly append-only (survivors
@@ -1623,7 +1594,6 @@ def incremental_semantic_dedup_scaled(
     id_col: str = "vec_id",
     chunk: int = 1024,
     max_cell_size: int = 65_536,
-    checkpoint_batch: bool = False,
     check_geometry: bool = True,
     return_delta: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
@@ -1671,60 +1641,57 @@ def incremental_semantic_dedup_scaled(
                 f"{batch_gen!r} — cells would never align; refit the "
                 "store or use its original table"
             )
-    sigs = _assign_with_matrix(new_docs, mat, batch_gen, vec_col, id_col)
-    if checkpoint_batch:
-        sigs = sigs.localCheckpoint(eager=True)
+    sigs = _assign_with_matrix(
+        new_docs, mat, batch_gen, vec_col, id_col
+    ).localCheckpoint(eager=True)
     id_type = new_docs.schema[id_col].dataType.simpleString()
+    # Materialize the loser ID SET itself (id-scale), not just its two
+    # consumers: batch_survivors and surv_sigs each anti-join against
+    # ``losers``, so eagerly checkpointing only those two frames
+    # executed the in-batch GEMM kernel — and its corpus-scale vector
+    # shuffle into applyInPandas — once per consumer (guide §2.4
+    # duplicated-subtree rule).
     losers = _gemm_cell_losers(
         sigs.select(id_col, "cell", "vec", "nrm"),
         id_col, id_type, threshold, chunk, max_cell_size,
-    )
-    if checkpoint_batch:
-        # Materialize the loser ID SET itself (id-scale), not just its
-        # two consumers: batch_survivors and surv_sigs each anti-join
-        # against ``losers``, so eagerly checkpointing only those two
-        # frames executed the in-batch GEMM kernel — and its
-        # corpus-scale vector shuffle into applyInPandas — once per
-        # consumer (guide §2.4 duplicated-subtree rule).
-        losers = losers.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     batch_survivors = new_docs.join(losers, id_col, "left_anti")
     surv_sigs = sigs.join(losers, id_col, "left_anti")
-    if checkpoint_batch:
-        # The two survivor frames are INDEPENDENT anti-joins of
-        # already-checkpointed inputs; materialize them concurrently —
-        # each job under-fills the cluster at batch scale, so running
-        # them back-to-back serializes idle cores (thread-pool job
-        # overlap; Spark schedules jobs from separate threads fine).
-        # inheritable_thread_target so the checkpoint jobs carry the
-        # caller's Spark local properties (job group/tags, scheduler
-        # pool): a plain thread under pinned-thread mode detaches them,
-        # so cancelling the caller's job group — e.g. stopping the
-        # streaming query whose foreachBatch is running this — would
-        # not reach an in-flight checkpoint job (ADVICE r17).
-        from concurrent.futures import ThreadPoolExecutor
+    # The two survivor frames are INDEPENDENT anti-joins of
+    # already-checkpointed inputs; materialize them concurrently —
+    # each job under-fills the cluster at batch scale, so running
+    # them back-to-back serializes idle cores (thread-pool job
+    # overlap; Spark schedules jobs from separate threads fine).
+    # inheritable_thread_target so the checkpoint jobs carry the
+    # caller's Spark local properties (job group/tags, scheduler
+    # pool): a plain thread under pinned-thread mode detaches them,
+    # so cancelling the caller's job group — e.g. stopping the
+    # streaming query whose foreachBatch is running this — would
+    # not reach an in-flight checkpoint job (ADVICE r17).
+    from concurrent.futures import ThreadPoolExecutor
 
-        from pyspark import inheritable_thread_target
+    from pyspark import inheritable_thread_target
 
-        spark = new_docs.sparkSession
+    spark = new_docs.sparkSession
 
-        def _inherit(fn):
-            try:
-                return inheritable_thread_target(spark)(fn)
-            except TypeError:
-                # Pinned-thread mode off: the session form degrades to
-                # returning the session itself; properties are shared
-                # JVM-side there anyway, so run the target as-is.
-                return fn
+    def _inherit(fn):
+        try:
+            return inheritable_thread_target(spark)(fn)
+        except TypeError:
+            # Pinned-thread mode off: the session form degrades to
+            # returning the session itself; properties are shared
+            # JVM-side there anyway, so run the target as-is.
+            return fn
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_bs = pool.submit(
-                _inherit(lambda: batch_survivors.localCheckpoint(eager=True))
-            )
-            f_ss = pool.submit(
-                _inherit(lambda: surv_sigs.localCheckpoint(eager=True))
-            )
-            batch_survivors = f_bs.result()
-            surv_sigs = f_ss.result()
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_bs = pool.submit(
+            _inherit(lambda: batch_survivors.localCheckpoint(eager=True))
+        )
+        f_ss = pool.submit(
+            _inherit(lambda: surv_sigs.localCheckpoint(eager=True))
+        )
+        batch_survivors = f_bs.result()
+        surv_sigs = f_ss.result()
     if store is not None:
         # Only store cells the BATCH touches enter the cross GEMM: a
         # batch of B rows names <= B distinct cells, so the semi-join
@@ -1743,9 +1710,7 @@ def incremental_semantic_dedup_scaled(
             store_touched,
             threshold,
             id_col,
-        )
-        if checkpoint_batch:
-            hits = hits.localCheckpoint(eager=True)
+        ).localCheckpoint(eager=True)
         batch_survivors = batch_survivors.join(hits, id_col, "left_anti")
         surv_sigs = surv_sigs.join(hits, id_col, "left_anti")
         # return_delta: append-only store — delta-segment sink contract

@@ -33,14 +33,12 @@ _DEFAULT_CONF = {
     # coalescing genuinely tiny shuffles.
     "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # RocksDB state store (r18, measured): stateful streaming state
-    # lives off-heap in a compacting LSM instead of the HDFS-backed
-    # provider's in-heap map + per-commit full-snapshot file.  At scale
-    # this is the standard choice for large state (bounded executor
-    # heap, incremental changelog commits); measured on the stateful
-    # catalog rows it is also the faster availableNow lifecycle here
-    # (interleaved A/B in OPTIMIZATION_r18.md).  Changelog
-    # checkpointing avoids re-uploading a full snapshot per commit.
+    # RocksDB state store: stateful streaming state lives off-heap in a
+    # compacting LSM instead of the HDFS-backed provider's in-heap map
+    # + per-commit full-snapshot file.  At scale this is the standard
+    # choice for large state (bounded executor heap, incremental
+    # changelog commits).  Changelog checkpointing avoids re-uploading
+    # a full snapshot per commit.
     "spark.sql.streaming.stateStore.providerClass":
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider",

@@ -383,10 +383,10 @@ def stream_semantic_dedup_sink(
     self-heals any crash debris at the start of the next batch — no
     crash point leaves zero complete copies, and a reader using
     ``load_store`` racing the swap sees entirely-old or entirely-new
-    state.  Batch-scale GEMM results are materialized once
-    (``checkpoint_batch`` in ``incremental_semantic_dedup``) so the
-    kept-append and the version write don't re-run the dedup kernels;
-    the store itself streams scan→parquet exactly once.
+    state.  ``incremental_semantic_dedup`` materializes its batch-scale
+    GEMM results once, so the kept-append and the version write don't
+    re-run the dedup kernels; the store itself streams scan→parquet
+    exactly once.
 
     ``centroid_table`` (a ``fit_semantic_cells`` table, mutually
     exclusive with literal ``centroids``) routes every micro-batch
@@ -413,7 +413,6 @@ def stream_semantic_dedup_sink(
             fresh_pair = incremental_semantic_dedup_scaled(
                 batch_df, store, centroid_table,
                 threshold=threshold, vec_col=vec_col, id_col=id_col,
-                checkpoint_batch=True,
                 # The guard's store scan is O(store) per call; after the
                 # first batch every store version was written by THIS
                 # sink under the same table, so re-verifying each
@@ -427,7 +426,7 @@ def stream_semantic_dedup_sink(
         return incremental_semantic_dedup(
             batch_df, store, centroids,
             threshold=threshold, vec_col=vec_col, id_col=id_col,
-            checkpoint_batch=True, return_delta=True,
+            return_delta=True,
         )
 
     return _incremental_store_sink(
@@ -1133,8 +1132,7 @@ def stream_image_dedup_sink(
         # the store rewrite), and without the checkpoint each would
         # re-run the Python dHash kernel over the raw images; the
         # cleanup drops the blocks after the swap so micro-batches don't
-        # accumulate pinned state (the semantic sink's checkpoint_batch
-        # contract, realized through the skeleton's cleanup hook).
+        # accumulate pinned state (the skeleton's cleanup hook).
         codes, rdd = _truncate_lineage(
             image_dhash(batch_df, id_col=id_col), reliable=False
         )

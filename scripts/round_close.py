@@ -109,10 +109,17 @@ def main() -> int:
         head = _git_head()
         state = None
         if os.path.exists(GATE_STATE):
-            with open(GATE_STATE) as f:
-                state = json.load(f)
+            try:
+                with open(GATE_STATE) as f:
+                    state = json.load(f)
+            except (OSError, ValueError) as e:
+                print(
+                    f"--bench-only refused: gate state {GATE_STATE} is "
+                    f"unreadable ({e}). Run the full close first."
+                )
+                return 2
         if (
-            not state
+            not isinstance(state, dict)
             or state.get("round") != rnd
             or state.get("head") != head
             or not state.get("pytest_green")

@@ -82,8 +82,7 @@ def main() -> int:
         def full_rewrite_sink(df, kept, store_path, ckpt):
             def step(batch_df, store):
                 return incremental_semantic_dedup(
-                    batch_df, store, cents,
-                    threshold=0.25, checkpoint_batch=True,
+                    batch_df, store, cents, threshold=0.25
                 )
 
             return _incremental_store_sink(

@@ -11,20 +11,30 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = os.environ.get("MPS_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+SLOW_MANIFEST = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "slow_tests.txt"
+)
+
+
+def _manifest_key(nodeid: str) -> str:
+    """``<file basename>::<test id>`` — stable under different
+    invocation directories/rootdirs.  Only the file path is reduced: a
+    parametrized test id may itself contain ``/``."""
+    path, sep, rest = nodeid.partition("::")
+    return os.path.basename(path) + sep + rest
+
+
 def _slow_manifest() -> set[str]:
-    """``<file>::<test>`` keys of the measured slow tier — data-driven
-    marking (VERDICT r17 task 1) so the tiers are regenerable from a
-    ``--durations=0`` run instead of hand-maintained decorators."""
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "slow_tests.txt")
+    """Keys of the measured slow tier — data-driven marking (VERDICT
+    r17 task 1) so the tiers are regenerable from a ``--durations=0``
+    run instead of hand-maintained decorators."""
     out: set[str] = set()
     try:
-        with open(path) as f:
+        with open(SLOW_MANIFEST) as f:
             for ln in f:
                 ln = ln.strip()
                 if ln and not ln.startswith("#"):
-                    # Key on basename::test so the match is stable under
-                    # different invocation directories/rootdirs.
-                    out.add(ln.split("/")[-1])
+                    out.add(_manifest_key(ln))
     except OSError:
         pass
     return out
@@ -35,7 +45,7 @@ def pytest_collection_modifyitems(config, items):
     if not slow:
         return
     for item in items:
-        if item.nodeid.split("/")[-1] in slow:
+        if _manifest_key(item.nodeid) in slow:
             item.add_marker(pytest.mark.slow)
 
 

@@ -2805,41 +2805,12 @@ def test_edit_distance_join_exact_vs_bruteforce(spark):
     got_c = {(r["id1"], r["id2"]) for r in capped.collect()}
     got_f = {(r["id1"], r["id2"]) for r in full.collect()}
     assert got_c <= got_f
+    # Both self-join sides read the checkpointed variant table, not
+    # two explode subtrees.
+    plan = full._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan
     with pytest.raises(ValueError, match="max_edits"):
         edit_distance_join(df, "name", max_edits=0)
-
-
-def test_edit_distance_join_cache_variants_parity(spark):
-    """cache_variants only changes the physical plan (one variant-
-    explode pass feeding both self-join sides instead of two): the
-    pair set, strings and distances are identical with it on and off,
-    with and without the bucket cap (r17 optimization §14)."""
-    from metalpipe_spark.operators.joins import edit_distance_join
-
-    rows = [
-        (1, "kitten"), (2, "sitten"), (3, "mitten"), (4, "abc"),
-        (5, "abd"), (6, ""), (7, "kitten"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, name string")
-    for cap in (None, 3):
-        on = sorted(
-            map(tuple, edit_distance_join(
-                df, "name", max_edits=1, max_bucket_size=cap,
-                cache_variants=True,
-            ).collect())
-        )
-        off = sorted(
-            map(tuple, edit_distance_join(
-                df, "name", max_edits=1, max_bucket_size=cap,
-                cache_variants=False,
-            ).collect())
-        )
-        assert on == off
-        assert on  # the fixture produces real pairs
-    # The default path reads the checkpoint, not two explode subtrees.
-    plan = edit_distance_join(df, "name", max_edits=1)._jdf.queryExecution(
-    ).executedPlan().toString()
-    assert "ExistingRDD" in plan or "Scan ExistingRDD" in plan
 
 
 def test_exact_quantile_null_group_and_bins_guard(spark):
@@ -3995,14 +3966,20 @@ def test_backoff_scorer_resolved_unk_parity(spark):
     assert score(resolved_unk_logprob=None) == score(unk_token=None)
 
 
-def test_backoff_scorer_hashed_probe_parity(spark):
-    """hashed_probe=True (r18) joins the 2n-1 model probes on xxhash64
-    of the gram's token slice with an exact token-array verify instead
-    of assembled key strings — a pure plan change: scores must be
-    row-identical to the string-keyed path for every resolution class
-    (top-order hit, backoff chains, <unk> chain, flat OOV floor, short
-    docs, empty/NULL text, repeated whitespace) under both broadcast
-    and shuffle probe strategies, exact and plain faces."""
+def test_backoff_scorer_golden_edge_cases(spark):
+    """The 2n-1 model probes join on int64 hashes of the gram's token
+    slices, verified against the token arrays.  Scores must equal
+    golden values — the string-keyed probe path's exact-face output
+    before the hashed probes replaced it, so the reference shares no
+    code with the scorer — for every resolution class (top-order hit,
+    backoff chains, <unk> chain, flat OOV floor, short docs,
+    empty/NULL text, repeated whitespace) under both broadcast and
+    shuffle probes; the plain-double face within an ulp-scale
+    tolerance (its sums are order-sensitive by design)."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
     from metalpipe_spark.operators.text import (
         ngram_logprob_backoff,
         train_backoff_lm,
@@ -4020,32 +3997,42 @@ def test_backoff_scorer_hashed_probe_parity(spark):
          (7, "on the mat a cat ran")],
         ["doc_id", "text"],
     )
-    lm_unk = lm.limit(0).sparkSession.createDataFrame(
+    lm_unk = spark.createDataFrame(
         [("<unk>", 1, 1, 1, 0.001, -3.0, None, None)], lm.schema
     ).unionByName(lm)
-    for model in (lm, lm_unk):
-        for bm in (True, False):
-            for exact in (True, False):
-                a = ngram_logprob_backoff(
-                    docs, model, n=3, exact=exact, broadcast_model=bm,
-                    hashed_probe=False,
-                ).orderBy("doc_id").collect()
-                b = ngram_logprob_backoff(
-                    docs, model, n=3, exact=exact, broadcast_model=bm,
-                    hashed_probe=True,
-                ).orderBy("doc_id").collect()
-                if exact:
-                    assert a == b, (bm, exact)
-                else:
-                    # plain-double face: sums are order-sensitive by
-                    # documented design; the per-gram scores are equal,
-                    # so any plan-order drift is bounded by an ulp.
-                    for ra, rb in zip(a, b):
-                        assert ra["doc_id"] == rb["doc_id"]
-                        va, vb = ra["mean_logprob"], rb["mean_logprob"]
-                        assert abs(va - vb) <= 1e-12 * max(
-                            1.0, abs(va)
-                        ), (bm, ra, rb)
+    golden = {
+        # no <unk> row: unseen final words score the flat -8.0 floor
+        False: [-1.079181246, -8.0, -8.0, -8.0, -8.0, -8.0,
+                -3.109686239666667, -0.75915722375],
+        # <unk> unigram at -3.0: unseen final words chain to it
+        True: [-1.079181246, -2.894489815, -3.0, -3.0, -3.0, -3.0,
+               -1.4665465976666667, -0.75915722375],
+    }
+    cfgs = [
+        (unk, bm, exact)
+        for unk in (False, True)
+        for bm in (True, False)
+        for exact in (True, False)
+    ]
+    scored = reduce(
+        lambda a, b: a.unionByName(b),
+        [
+            ngram_logprob_backoff(
+                docs, lm_unk if unk else lm, n=3, exact=exact,
+                broadcast_model=bm,
+            ).withColumn("cfg", F.lit(i))
+            for i, (unk, bm, exact) in enumerate(cfgs)
+        ],
+    )
+    got: dict = {}
+    for r in scored.collect():
+        got.setdefault(r["cfg"], {})[r["doc_id"]] = r["mean_logprob"]
+    for i, (unk, bm, exact) in enumerate(cfgs):
+        want = dict(enumerate(golden[unk]))
+        assert sorted(got[i]) == sorted(want), (unk, bm, exact)
+        for doc_id, v in want.items():
+            tol = 0.0 if exact else 1e-12 * max(1.0, abs(v))
+            assert abs(got[i][doc_id] - v) <= tol, (unk, bm, exact, doc_id)
 
 
 def test_lm_parquet_exchange_and_shuffle_scorer(spark, tmp_path):
