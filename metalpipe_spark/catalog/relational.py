@@ -730,8 +730,8 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "MERGE / upsert semantics (SURVEY §4.2.3 divergence closed): "
         "updates replace matched keys, new keys insert, unmatched target "
         "rows pass through — one left_anti join + union, no window.  The "
-        "write-path twin (dynamic partition overwrite onto parquet) is "
-        "unit-tested in test_http_sinks."
+        "write-path twin (upsert_parquet: staged partition renames onto "
+        "parquet) is unit-tested in test_http_sinks."
     ),
 )
 def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:

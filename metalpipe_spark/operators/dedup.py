@@ -1426,7 +1426,6 @@ def exact_substr_dedup(
     id_col: str = "doc_id",
     min_length: int = 32,
     hash: str = "md5",
-    verify: bool = True,
     _rk=None,
 ) -> DataFrame:
     """EXACT duplicated-substring removal (Lee et al. 2022,
@@ -1455,11 +1454,10 @@ def exact_substr_dedup(
        over the hash pair (r17: previously a groupBy + join-back that
        executed the window-hash kernel twice); candidates are bounded
        by DUPLICATED window volume, never corpus scale;
-    4. ``verify=True`` (default) regroups candidates on the md5 of the
-       actual window CONTENT (array-local slice+concat, only on docs
-       holding candidates) — rolling-hash collisions cost a wasted
-       verification, never a wrong result: the output is exact, not
-       probabilistic;
+    4. candidates regroup on the md5 of the actual window CONTENT
+       (array-local slice+concat, only on docs holding candidates) —
+       rolling-hash collisions cost a wasted verification, never a
+       wrong result: the output is exact, not probabilistic;
     5. non-first occurrences cover their positions; documents
        reassemble from surviving tokens (the duplicate_span_dedup
        output contract: ``(id, clean_text, n_kept)``; fully-covered
@@ -1501,48 +1499,42 @@ def exact_substr_dedup(
         .where(F.col("__c") > 1)
         .drop("__c")
     )
-    if verify:
-        # Regroup candidates on actual window content (md5 of the
-        # token slice) — array-local, only over docs holding
-        # candidates.  This removes the rolling hash from the trust
-        # base entirely.
-        per_doc = cand.groupBy(id_col).agg(F.collect_list("__s").alias("__ss"))
-        ver = (
-            docs.join(per_doc, id_col)
-            .select(
-                id_col,
-                F.explode(
-                    F.transform(
-                        "__ss",
-                        lambda s: F.struct(
-                            s.alias("__s"),
-                            F.md5(
-                                F.concat_ws(
-                                    " ", F.slice(F.col("__tk"), s + 1, L)
-                                )
-                            ).alias("__h"),
-                        ),
-                    )
-                ).alias("__v"),
-            )
-            .select(id_col, F.col("__v.__s").alias("__s"), F.col("__v.__h").alias("__h"))
+    # Regroup candidates on actual window content (md5 of the
+    # token slice) — array-local, only over docs holding
+    # candidates.  This removes the rolling hash from the trust
+    # base entirely.
+    per_doc = cand.groupBy(id_col).agg(F.collect_list("__s").alias("__ss"))
+    ver = (
+        docs.join(per_doc, id_col)
+        .select(
+            id_col,
+            F.explode(
+                F.transform(
+                    "__ss",
+                    lambda s: F.struct(
+                        s.alias("__s"),
+                        F.md5(
+                            F.concat_ws(
+                                " ", F.slice(F.col("__tk"), s + 1, L)
+                            )
+                        ).alias("__h"),
+                    ),
+                )
+            ).alias("__v"),
         )
-        keyed = ver
-        key = ["__h"]
-    else:
-        keyed = cand
-        key = ["__w1", "__w2"]
+        .select(id_col, F.col("__v.__s").alias("__s"), F.col("__v.__h").alias("__h"))
+    )
     # Keep-first as a window min over the key instead of
     # groupBy-then-join-back (r17): one pass over the candidate rows,
-    # one exchange — which also makes `keyed` single-reference, so the
+    # one exchange — which also makes `ver` single-reference, so the
     # r15 bounded persist (one cached block set per call, freed only at
     # session end) is gone entirely.
     dup = (
-        keyed.withColumn(
+        ver.withColumn(
             "__f",
             F.min(
                 F.struct(F.col(id_col).alias("d"), F.col("__s").alias("s"))
-            ).over(Window.partitionBy(*key)),
+            ).over(Window.partitionBy("__h")),
         )
         .where(
             ~(
@@ -1953,7 +1945,6 @@ def decontaminate(
     id_col: str = "doc_id",
     n: int = 3,
     min_shared: int = 3,
-    broadcast_benchmark: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Benchmark decontamination: flag corpus documents sharing at least
     ``min_shared`` distinct word n-grams with ANY benchmark document,
@@ -1964,9 +1955,7 @@ def decontaminate(
     Scale shape: the benchmark (eval sets are small by definition) is
     exploded to a distinct shingle index and BROADCAST — corpus-side
     work is a map-side hash-join probe per shingle, no corpus shuffle
-    for candidate generation; only the per-pair count aggregates.  Set
-    ``broadcast_benchmark=False`` for a giant benchmark (falls back to
-    the co-partitioned shingle join, jaccard_candidate_pairs' shape).
+    for candidate generation; only the per-pair count aggregates.
     """
     c_sh = corpus.select(
         F.col(id_col).alias("corpus_id"),
@@ -1976,10 +1965,8 @@ def decontaminate(
         F.col(id_col).alias("benchmark_id"),
         F.explode(word_shingles(text_col, n)).alias("shingle"),
     )
-    if broadcast_benchmark:
-        b_sh = F.broadcast(b_sh)
     report = (
-        c_sh.join(b_sh, "shingle")
+        c_sh.join(F.broadcast(b_sh), "shingle")
         .groupBy("corpus_id", "benchmark_id")
         .agg(F.count(F.lit(1)).alias("shared_shingles"))
         .where(F.col("shared_shingles") >= min_shared)

@@ -383,20 +383,19 @@ def build_pq_index(
     codebooks: list[list[list[float]]],
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    use_gemm: bool = True,
 ) -> None:
     """Materialize the IVFADC index on storage: ``(id, codes)`` written
     ``partitionBy(cell)`` — a probe touches only its cells' files and
     reads 8-byte codes, never raw vectors — plus the centroid and
-    codebook tables.  Build once (bulk encode via the BLAS twin by
-    default), serve many; the artifact is the entire serving state, so
-    a fresh session needs no k-means fit and no re-encode."""
+    codebook tables.  Build once (bulk encode via the BLAS twin
+    :func:`pq_encode_gemm`), serve many; the artifact is the entire
+    serving state, so a fresh session needs no k-means fit and no
+    re-encode."""
     from metalpipe_spark.operators.similarity import ivf_assign_literal
 
     spark = df.sparkSession
     assigned = ivf_assign_literal(df, centroids, vec_col=vec_col)
-    encode = pq_encode_gemm if use_gemm else pq_encode
-    enc = encode(
+    enc = pq_encode_gemm(
         assigned.select("cell", id_col, vec_col), codebooks, vec_col=vec_col
     )
     (

@@ -25,6 +25,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# Rows per matmul in the per-cell GEMM kernels: a kernel holds one
+# _GEMM_CHUNK x B similarity slab at a time, never the B x B matrix.
+_GEMM_CHUNK = 1024
+
 
 def dot_sql(a: str, b: str, dim: int | None = None, cast: bool = True) -> str:
     """SQL text for the left-associated double fold of a·b, as a
@@ -299,7 +303,6 @@ def pairwise_topk_per_label_gemm(
     id_col: str = "vec_id",
     label_col: str = "label",
     k: int = 3,
-    chunk: int = 1024,
     max_block_size: int = 65_536,
 ) -> DataFrame:
     """Blocked exact kNN via per-cell GEMM — the vectorized twin of
@@ -307,8 +310,8 @@ def pairwise_topk_per_label_gemm(
 
     Each label block arrives as ONE Arrow batch (``applyInPandas``); a
     numpy/BLAS matmul computes the block's cosine matrix in row chunks
-    (memory is O(chunk × B), never B²), then a stable argsort gives
-    per-row top-k with the same (desc similarity, asc neighbor id)
+    (memory is O(_GEMM_CHUNK × B), never B²), then a stable argsort
+    gives per-row top-k with the same (desc similarity, asc neighbor id)
     tie-break.  This trades the join-per-pair plan for dense linear
     algebra inside the cell — at B rows/64 dims that is one DGEMM call
     instead of B² interpreted array folds, the shape a 100 TB ANN cell
@@ -354,8 +357,8 @@ def pairwise_topk_per_label_gemm(
                 {c: [] for c in ("blk", "d1", "d2", "cosine_sim", "rnk")}
             )
         d1s, d2s, sims, rnks = [], [], [], []
-        for lo in range(0, b, chunk):
-            hi = min(lo + chunk, b)
+        for lo in range(0, b, _GEMM_CHUNK):
+            hi = min(lo + _GEMM_CHUNK, b)
             # Quantize BEFORE ranking: stable argsort over the rounded
             # matrix (rows sorted by id) == window over (round(sim,6)
             # DESC, d2 ASC) — the exact twin's order, ulp-insensitive.
@@ -1129,12 +1132,11 @@ def _cross_hits_gemm(
     store: DataFrame,
     threshold: float,
     id_col: str,
-    chunk: int = 1024,
 ) -> DataFrame:
     """Batch ids with a stored cosine near-dup in their cell, decided by
     one cogrouped BLAS matmul per cell (chunked rows — memory
-    O(chunk × store_cell); decisions over the quantized similarity,
-    same contract as :func:`semantic_dedup_gemm`).
+    O(_GEMM_CHUNK × store_cell); decisions over the quantized
+    similarity, same contract as :func:`semantic_dedup_gemm`).
 
     The store side is re-aliased column-by-column before the cogroup:
     when batch and store derive from the same source relation (the
@@ -1160,8 +1162,8 @@ def _cross_hits_gemm(
         na = left["nrm"].to_numpy()
         nb = rgt["__r_nrm"].to_numpy()
         hit_rows = []
-        for lo in range(0, len(A), chunk):
-            hi = min(lo + chunk, len(A))
+        for lo in range(0, len(A), _GEMM_CHUNK):
+            hi = min(lo + _GEMM_CHUNK, len(A))
             S = np.round((A[lo:hi] @ B.T) / np.outer(na[lo:hi], nb), 6)
             hit_rows.append(ids[lo:hi][(S >= threshold).any(axis=1)])
         hits = np.concatenate(hit_rows) if hit_rows else np.array([], dtype=ids.dtype)
@@ -1180,15 +1182,14 @@ def semantic_dedup_gemm(
     threshold: float = 0.9,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    chunk: int = 1024,
     max_cell_size: int = 65_536,
 ) -> DataFrame:
     """Vectorized twin of :func:`semantic_dedup` — the production path.
 
     Each centroid cell arrives as ONE Arrow batch (``applyInPandas``);
     a BLAS matmul computes the cell's cosine matrix in row chunks
-    (memory O(chunk × B), never B²) and a doc is marked a loser when
-    any LOWER-id row in the cell clears the threshold — identical
+    (memory O(_GEMM_CHUNK × B), never B²) and a doc is marked a loser
+    when any LOWER-id row in the cell clears the threshold — identical
     keep-min-id policy, dense linear algebra instead of B² interpreted
     array folds (measured ~10× on the sf0.1 bench corpus).
 
@@ -1202,7 +1203,7 @@ def semantic_dedup_gemm(
     id_type = df.schema[id_col].dataType.simpleString()
     sigs = cell_store(df, centroids, vec_col, id_col)
     losers = _gemm_cell_losers(
-        sigs, id_col, id_type, threshold, chunk, max_cell_size
+        sigs, id_col, id_type, threshold, max_cell_size
     )
     return df.join(losers, id_col, "left_anti")
 
@@ -1212,7 +1213,6 @@ def _gemm_cell_losers(
     id_col: str,
     id_type: str,
     threshold: float,
-    chunk: int,
     max_cell_size: int,
 ) -> DataFrame:
     """The per-cell BLAS loser kernel shared by :func:`semantic_dedup_gemm`
@@ -1235,8 +1235,8 @@ def _gemm_cell_losers(
         V = np.array(pdf["vec"].tolist(), dtype=np.float64)
         norms = pdf["nrm"].to_numpy()
         out = []
-        for lo in range(0, b, chunk):
-            hi = min(lo + chunk, b)
+        for lo in range(0, b, _GEMM_CHUNK):
+            hi = min(lo + _GEMM_CHUNK, b)
             S = np.round((V[lo:hi] @ V.T) / np.outer(norms[lo:hi], norms), 6)
             # loser: any strictly-lower-id column clears the threshold
             lower = np.arange(b)[None, :] < np.arange(lo, hi)[:, None]
@@ -1256,7 +1256,6 @@ def semantic_dedup_scaled(
     target_cell_size: int = 1024,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    chunk: int = 1024,
     max_cell_size: int = 65_536,
     fit_fraction: float | None = None,
     seed: int = 42,
@@ -1310,7 +1309,7 @@ def semantic_dedup_scaled(
     ).select(id_col, "cell", "vec", "nrm")
     id_type = df.schema[id_col].dataType.simpleString()
     losers = _gemm_cell_losers(
-        sigs, id_col, id_type, threshold, chunk, max_cell_size
+        sigs, id_col, id_type, threshold, max_cell_size
     )
     return df.join(losers, id_col, "left_anti")
 
@@ -1592,7 +1591,6 @@ def incremental_semantic_dedup_scaled(
     threshold: float = 0.9,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    chunk: int = 1024,
     max_cell_size: int = 65_536,
     check_geometry: bool = True,
     return_delta: bool = False,
@@ -1653,7 +1651,7 @@ def incremental_semantic_dedup_scaled(
     # duplicated-subtree rule).
     losers = _gemm_cell_losers(
         sigs.select(id_col, "cell", "vec", "nrm"),
-        id_col, id_type, threshold, chunk, max_cell_size,
+        id_col, id_type, threshold, max_cell_size,
     ).localCheckpoint(eager=True)
     batch_survivors = new_docs.join(losers, id_col, "left_anti")
     surv_sigs = sigs.join(losers, id_col, "left_anti")

@@ -824,7 +824,6 @@ def _exact_substr_dedup_node(spark, upstreams, opts):
         id_col=opts.get("id_col", "doc_id"),
         min_length=opts.get("min_length", 32),
         hash=opts.get("hash", "md5"),
-        verify=opts.get("verify", True),
     )
 
 
@@ -1555,17 +1554,16 @@ def _semantic_dedup_node(spark, upstreams, opts):
     :func:`semantic_dedup_scaled`, which sizes the cell count to the
     corpus (k = n / target_cell_size, sampled k-means fit, map-side
     assignment) so total work stays LINEAR in the input.  The
-    fixed-centroid paths below are the SQL-replayable oracle faces: the
-    per-cell comparison is quadratic in cell size, so a fixed centroid
-    set turns 10x data into ~100x work (measured 38x growth on a 10x
-    corpus, SCALING.md) — never point them at a real corpus.
+    fixed-centroid path below (:func:`semantic_dedup_gemm`) is the
+    SQL-replayable oracle face: the per-cell comparison is quadratic in
+    cell size, so a fixed centroid set turns 10x data into ~100x work
+    (measured 38x growth on a 10x corpus, SCALING.md) — never point it
+    at a real corpus.
 
     Fixed-centroid knobs: ``centroids`` inline, or
-    ``num_centroids``/``dim`` for the deterministic set; ``use_gemm``
-    (default true) picks the BLAS kernel."""
+    ``num_centroids``/``dim`` for the deterministic set."""
     from metalpipe_spark.operators.similarity import (
         deterministic_centroids,
-        semantic_dedup,
         semantic_dedup_gemm,
         semantic_dedup_scaled,
     )
@@ -1599,8 +1597,7 @@ def _semantic_dedup_node(spark, upstreams, opts):
     cents = opts.get("centroids") or deterministic_centroids(
         opts.get("num_centroids", 8), opts.get("dim", 64)
     )
-    fn = semantic_dedup_gemm if opts.get("use_gemm", True) else semantic_dedup
-    return fn(
+    return semantic_dedup_gemm(
         df,
         cents,
         threshold=opts.get("threshold", 0.9),

@@ -83,7 +83,6 @@ def write_jdbc_staged(
     table: str,
     properties: dict[str, str] | None = None,
     staging_suffix: str = "_staging",
-    publish: bool = True,
 ) -> str:
     """SendToCivis staging pattern (civis_nodes.py:99-163) over JDBC:
 
@@ -91,21 +90,19 @@ def write_jdbc_staged(
     2. publish with ``INSERT INTO {table} SELECT * FROM staging`` in one
        statement, then drop the staging table.
 
-    Returns the staging table name (callers running their own publish
-    step — e.g. MERGE — set ``publish=False``).  Requires a JDBC
-    endpoint; unit tests cover the plan-side pieces only.
+    Returns the staging table name.  Requires a JDBC endpoint; the
+    round trip is tested end to end on in-memory Derby.
     """
     staging = f"{table}{staging_suffix}"
     props = properties or {}
     df.write.jdbc(url, staging, mode="overwrite", properties=props)
-    if publish:
-        # Single-statement publish through the JDBC driver.
-        _execute_jdbc(url, props, f"INSERT INTO {table} SELECT * FROM {staging}")
-        _execute_jdbc(url, props, f"DROP TABLE {staging}")
+    # Single-statement publish through the JDBC driver.
+    _execute_jdbc(url, props, f"INSERT INTO {table} SELECT * FROM {staging}")
+    _execute_jdbc(url, props, f"DROP TABLE {staging}")
     return staging
 
 
-def _execute_jdbc(url: str, properties: dict[str, str], sql: str) -> None:  # pragma: no cover
+def _execute_jdbc(url: str, properties: dict[str, str], sql: str) -> None:
     """Driver-side DDL/DML through the JVM's DriverManager (no extra
     Python deps)."""
     from pyspark.sql import SparkSession
@@ -422,9 +419,7 @@ def upsert_parquet(
     path: str,
     key_cols: list[str] | str,
     partition_col: str,
-    checkpoint_dir: str | None = None,
     order_col: str | None = None,
-    staged: bool = True,
     manifest: bool = False,
 ) -> None:
     """MERGE into a partitioned parquet directory — the lakehouse-free
@@ -434,17 +429,15 @@ def upsert_parquet(
        in the batch — a few hundred at most, never row-scale) select the
        target slice with partition pruning at the scan;
     2. :func:`merge_upsert` replaces matched keys within that slice;
-    3. the merged slice replaces the touched partitions — by default
-       (``staged=True``) via a durable STAGE directory plus one
-       filesystem rename per touched partition, else
-       (``staged=False``) via ``partitionOverwriteMode=dynamic``.
+    3. the merged slice replaces the touched partitions via a durable
+       STAGE directory plus one filesystem rename per touched partition.
 
     A first write (no target yet) degenerates to a plain partitioned
     write.  Target existence is probed through the Hadoop FileSystem API
     (:func:`_target_exists`) so remote targets (``hdfs://``/``s3a://``)
     are merged, never mistaken for absent and clobbered.
 
-    **Atomicity contract (staged, the default)**: the merged slice is
+    **Atomicity contract (staged)**: the merged slice is
     fully written to ``{path}__stage`` BEFORE any target file is
     touched, then each touched partition directory is promoted by
     rename-aside: the old dir moves to a hidden ``.upsert_old__`` name,
@@ -459,23 +452,13 @@ def upsert_parquet(
     BEFORE reading the target, so a checkpoint replay merges against
     complete data — without that, a replay after a mid-promotion crash
     would compute the merge missing a partition's non-batch rows and
-    make the loss permanent.  The staged path also needs no lineage-cut
-    checkpoint: the slice is written to a different directory than the
-    one being read.  Readers racing the promotion can still observe a
-    mix of old and new partitions; a table format (Delta/Iceberg) is
-    the reader-atomic upgrade.
-
-    **Atomicity contract (staged=False)**: dynamic partition overwrite
-    deletes and rewrites touched partitions in place; a failure
-    mid-write can leave a touched partition partially rewritten, and
-    the merged slice must be checkpointed first (Spark refuses to
-    overwrite a path feeding the writing plan) — with
-    ``checkpoint_dir=None`` that is ``localCheckpoint`` (single-node;
-    pass a durable dir on a cluster).  The mode toggle is
-    session-global for the duration of the write (single-threaded
-    driver assumed).  Either way, replaying the same batch restores the
-    BATCH's full effect — MERGE on key is idempotent (pinned by
-    test_upsert_parquet_replay_repairs_partial_rewrite).
+    make the loss permanent.  No lineage-cut checkpoint is needed: the
+    slice is written to a different directory than the one being read.
+    Readers racing the promotion can still observe a mix of old and new
+    partitions; ``manifest=True`` (below) or a table format
+    (Delta/Iceberg) is the reader-atomic upgrade.  Replaying the same
+    batch restores the BATCH's full effect — MERGE on key is idempotent
+    (pinned by test_upsert_parquet_replay_repairs_partial_rewrite).
 
     **Reader-atomic publish (``manifest=True``)**: touched partitions
     promote by moving the staged data FILES into the live partition
@@ -544,7 +527,7 @@ def upsert_parquet(
         else:
             cur_version, cur_parts = cur
             _recover_manifest_promotion(spark, path, partition_col, cur_parts)
-    elif staged:
+    else:
         _recover_staged_promotion(spark, path, partition_col)
 
     touched = [r[0] for r in updates.select(partition_col).distinct().collect()]
@@ -571,11 +554,11 @@ def upsert_parquet(
         target_slice = spark.read.parquet(path).where(slice_pred)
     merged = merge_upsert(target_slice, updates, keys)
 
+    stage = path.rstrip("/") + "__stage"
+    merged.write.mode("overwrite").partitionBy(partition_col).parquet(stage)
+    jvm, fs, target_p = _fs_for(spark, path)
+    stage_p = jvm.org.apache.hadoop.fs.Path(stage)
     if manifest:
-        stage = path.rstrip("/") + "__stage"
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(stage)
-        jvm, fs, target_p = _fs_for(spark, path)
-        stage_p = jvm.org.apache.hadoop.fs.Path(stage)
         new_version = cur_version + 1
         new_parts = dict(cur_parts)
         replaced: list[str] = []
@@ -625,53 +608,32 @@ def upsert_parquet(
         fs.delete(stage_p, True)
         return
 
-    if staged:
-        stage = path.rstrip("/") + "__stage"
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(stage)
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        stage_p = jvm.org.apache.hadoop.fs.Path(stage)
-        target_p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = target_p.getFileSystem(hconf)
-        for status in fs.listStatus(stage_p):
-            name = status.getPath().getName()
-            if not status.isDirectory() or not name.startswith(
-                f"{partition_col}="
-            ):
-                continue  # _SUCCESS and other markers stay in the stage
-            dst = jvm.org.apache.hadoop.fs.Path(target_p, name)
-            # Rename-aside, never delete-then-rename: the old copy moves
-            # to a hidden dot-dir (invisible to Spark partition discovery
-            # and _target_exists) and is deleted only AFTER the new copy
-            # is in place, so no crash point leaves the partition with
-            # zero live complete copies; _recover_staged_promotion
-            # resolves whichever side a crash strands.
-            aside = jvm.org.apache.hadoop.fs.Path(target_p, f".upsert_old__{name}")
-            if fs.exists(dst):
-                if fs.exists(aside):
-                    fs.delete(aside, True)  # stale debris from an older crash
-                if not fs.rename(dst, aside):
-                    raise IOError(f"old-copy set-aside failed: {name} in {path}")
-            if not fs.rename(status.getPath(), dst):
-                raise IOError(
-                    f"partition promotion failed: {name} -> {path}"
-                )
+    for status in fs.listStatus(stage_p):
+        name = status.getPath().getName()
+        if not status.isDirectory() or not name.startswith(
+            f"{partition_col}="
+        ):
+            continue  # _SUCCESS and other markers stay in the stage
+        dst = jvm.org.apache.hadoop.fs.Path(target_p, name)
+        # Rename-aside, never delete-then-rename: the old copy moves
+        # to a hidden dot-dir (invisible to Spark partition discovery
+        # and _target_exists) and is deleted only AFTER the new copy
+        # is in place, so no crash point leaves the partition with
+        # zero live complete copies; _recover_staged_promotion
+        # resolves whichever side a crash strands.
+        aside = jvm.org.apache.hadoop.fs.Path(target_p, f".upsert_old__{name}")
+        if fs.exists(dst):
             if fs.exists(aside):
-                fs.delete(aside, True)
-        fs.delete(stage_p, True)
-        return
-
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-        merged = merged.checkpoint(eager=True)
-    else:
-        merged = merged.localCheckpoint(eager=True)
-    old_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
+                fs.delete(aside, True)  # stale debris from an older crash
+            if not fs.rename(dst, aside):
+                raise IOError(f"old-copy set-aside failed: {name} in {path}")
+        if not fs.rename(status.getPath(), dst):
+            raise IOError(
+                f"partition promotion failed: {name} -> {path}"
+            )
+        if fs.exists(aside):
+            fs.delete(aside, True)
+    fs.delete(stage_p, True)
 
 
 def write_training_shards(

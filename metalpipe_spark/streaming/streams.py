@@ -303,7 +303,6 @@ def stream_upsert_sink(
     key_cols: list[str] | str,
     partition_col: str,
     checkpoint: str,
-    upsert_checkpoint_dir: str | None = None,
     order_col: str | None = None,
     manifest: bool = False,
 ):
@@ -320,9 +319,9 @@ def stream_upsert_sink(
     only its own partitions.  ``order_col`` resolves multiple updates
     per key within one micro-batch last-wins (CDC apply).
 
-    **Atomicity**: with ``upsert_parquet``'s default staged promotion a
-    touched partition is always either old-complete or new-complete —
-    never partial.  A crash mid-promotion leaves every touched
+    **Atomicity**: ``upsert_parquet`` promotes through a durable stage,
+    so a touched partition is always either old-complete or
+    new-complete — never partial.  A crash mid-promotion leaves every touched
     partition with at least one complete copy on durable storage
     (stage, live, or rename-aside), and the NEXT ``upsert_parquet``
     call self-heals that state before merging — so the checkpoint
@@ -330,15 +329,14 @@ def stream_upsert_sink(
     effect, non-batch rows included.  (Replay alone only re-applies the
     BATCH's rows; it is the recovery pass that preserves everything
     else — see ``_recover_staged_promotion``.)  Readers racing the
-    promotion can observe a mix of old and new partitions; use a table
-    format (Delta/Iceberg) for reader-visible atomicity."""
+    promotion can observe a mix of old and new partitions unless they
+    read a ``manifest=True`` target through ``load_published``."""
     from metalpipe_spark.sinks.writers import upsert_parquet
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         upsert_parquet(
             batch_df, path, key_cols, partition_col,
-            checkpoint_dir=upsert_checkpoint_dir, order_col=order_col,
-            manifest=manifest,
+            order_col=order_col, manifest=manifest,
         )
 
     return foreach_batch_sink(df, apply, checkpoint)

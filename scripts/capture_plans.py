@@ -10,17 +10,30 @@ split/collect rows run cell-scale jobs) still produce a meaningful
 batch plan: the captured text is the plan of the DataFrame the bench
 drains.  Plans are captured on the engine session (metalpipe defaults),
 same as bench.py times them.
+
+The ids Spark hands out per process (``#N`` expression ids,
+``plan_id=N`` exchange ids, ``RDD[N]`` ids) are normalised to ``N`` in
+the written text, so two captures of one commit diff clean and a
+before/after diff shows only real plan changes.
 """
 
 from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 import contextlib
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+_PROCESS_IDS = re.compile(r"(#|plan_id=|RDD\[)\d+")
+
+
+def normalise_plan(text: str) -> str:
+    """``text`` with every per-process id replaced by ``N``."""
+    return _PROCESS_IDS.sub(r"\1N", text)
 
 
 def main() -> int:
@@ -56,7 +69,7 @@ def main() -> int:
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")
-            text = buf.getvalue()
+            text = normalise_plan(buf.getvalue())
         except Exception as e:  # a broken row must not kill the capture
             text = f"CAPTURE ERROR: {type(e).__name__}: {e}\n"
             failures += 1

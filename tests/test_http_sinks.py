@@ -380,10 +380,10 @@ def test_write_training_shards_balanced_and_reproducible(spark, tmp_path):
     assert again == set(rows)
 
 
-def test_upsert_parquet_staged_equals_dynamic_incl_null_partition(spark, tmp_path):
-    """The staged-rename promotion (default) must produce exactly the
-    state dynamic partition overwrite produces — including the NULL
-    partition (__HIVE_DEFAULT_PARTITION__) — and clean up its stage."""
+def test_upsert_parquet_staged_incl_null_partition(spark, tmp_path):
+    """The staged-rename promotion merges every touched partition —
+    including the NULL partition (__HIVE_DEFAULT_PARTITION__) — and
+    cleans up its stage."""
     import os
 
     from metalpipe_spark.sinks.writers import upsert_parquet
@@ -396,17 +396,13 @@ def test_upsert_parquet_staged_equals_dynamic_incl_null_partition(spark, tmp_pat
         [(2, None, 99.0), (4, "a", 40.0), (5, None, 50.0)],
         "id int, part string, v double",
     )
-    results = {}
-    for mode, staged in (("staged", True), ("dynamic", False)):
-        path = str(tmp_path / mode)
-        upsert_parquet(initial, path, "id", "part", staged=staged)
-        upsert_parquet(batch, path, "id", "part", staged=staged)
-        results[mode] = sorted(
-            (r["id"], r["part"], r["v"])
-            for r in spark.read.parquet(path).collect()
-        )
-        assert not os.path.exists(path + "__stage")
-    assert results["staged"] == results["dynamic"] == [
+    path = str(tmp_path / "staged")
+    upsert_parquet(initial, path, "id", "part")
+    upsert_parquet(batch, path, "id", "part")
+    assert not os.path.exists(path + "__stage")
+    assert sorted(
+        (r["id"], r["part"], r["v"]) for r in spark.read.parquet(path).collect()
+    ) == [
         (1, "a", 10.0), (2, None, 99.0), (3, "b", 30.0),
         (4, "a", 40.0), (5, None, 50.0),
     ]

@@ -2935,10 +2935,9 @@ def test_exact_substr_dedup_offset_robust_and_keep_first(spark):
     }
 
 
-def test_exact_substr_dedup_verify_and_hash_knobs_agree(spark):
-    """verify=False (pure rolling-hash grouping) and the xxhash64
-    production knob produce identical output to the verified md5
-    default on a mixed corpus."""
+def test_exact_substr_dedup_xxhash64_knob_agrees(spark):
+    """The xxhash64 production knob produces identical output to the
+    md5 default on a mixed corpus."""
     from metalpipe_spark.operators.dedup import exact_substr_dedup
 
     rows = [
@@ -2953,7 +2952,6 @@ def test_exact_substr_dedup_verify_and_hash_knobs_agree(spark):
         )
 
     base = run()
-    assert run(verify=False) == base
     assert run(hash="xxhash64") == base
     assert base  # the modular vocab guarantees duplicates exist
 
@@ -3290,10 +3288,15 @@ def test_exact_substr_verify_rejects_injected_hash_collisions(spark):
     """r14 verdict task 6: force real rolling-hash collisions (tiny
     override moduli make them abundant) and prove the content-verify
     stage rejects every one — output identical to the true-duplicate
-    answer — while verify=False under the same collisions DOES
-    false-delete, proving the injection actually produced colliding
-    candidates."""
-    from metalpipe_spark.operators.dedup import exact_substr_dedup
+    answer.  The window-hash frame under the same moduli is checked
+    directly for colliding keys over differing content, proving the
+    injection actually produced colliding candidates."""
+    from pyspark.sql import functions as F
+
+    from metalpipe_spark.operators.dedup import (
+        _window_hash_frame,
+        exact_substr_dedup,
+    )
 
     TINY = [(3, 11), (5, 13)]  # window identity space = 11*13 = 143
     # 40 docs of 8 distinct tokens each, no L=4 run repeated anywhere;
@@ -3309,15 +3312,17 @@ def test_exact_substr_verify_rejects_injected_hash_collisions(spark):
     }
     assert clean == dict(rows)  # nothing removed: every collision rejected
 
-    # Same moduli, no verify: collisions masquerade as duplicates and
-    # tokens disappear — the stage under test is load-bearing.
-    unverified = {
-        r["doc_id"]: r["clean_text"]
-        for r in exact_substr_dedup(
-            df, min_length=4, _rk=TINY, verify=False
+    # Same moduli, hash stage alone: every window's tokens are unique,
+    # so a repeated (__w1, __w2) key is a collision over differing
+    # content — the verify stage is load-bearing.
+    docs = df.select("doc_id", F.split("text", " ").alias("__tk"))
+    keys = [
+        (r["__w1"], r["__w2"])
+        for r in _window_hash_frame(
+            docs, "doc_id", "bigint", 4, "md5", mods=2, rk=TINY
         ).collect()
-    }
-    assert unverified != dict(rows)
+    ]
+    assert len(set(keys)) < len(keys)
 
     # And with true duplicates present, verify under collisions still
     # returns exactly the real-moduli answer.

@@ -285,12 +285,12 @@ def test_stream_upsert_sink_applies_merge_per_batch(spark, tmp_path):
 
 
 def test_upsert_parquet_replay_repairs_partial_rewrite(spark, tmp_path):
-    """The atomicity contract (writers.py docstring): a failure during
-    the dynamic partition overwrite can leave a touched partition
-    partially rewritten; replaying the SAME batch (what the streaming
-    checkpoint does after a crash) restores the batch's full effect —
-    every batch row present exactly once, merge idempotent.  Also pins
-    plain idempotence: re-running an already-applied batch is a no-op."""
+    """The replay contract (writers.py docstring): when a touched
+    partition has lost some of its files, replaying the SAME batch
+    (what the streaming checkpoint does after a crash) through the
+    staged promotion restores the batch's full effect — every batch row
+    present exactly once, merge idempotent.  Also pins plain
+    idempotence: re-running an already-applied batch is a no-op."""
     import os
 
     from metalpipe_spark.sinks.writers import upsert_parquet
@@ -318,8 +318,7 @@ def test_upsert_parquet_replay_repairs_partial_rewrite(spark, tmp_path):
         (r["id"], r["part"], r["v"]) for r in spark.read.parquet(target).collect()
     ) == full
 
-    # simulate a mid-write failure: partition a lost one of its rewritten
-    # files (partial state between delete and commit)
+    # simulate a partial partition: partition a lost one of its files
     part_a = os.path.join(target, "part=a")
     victims = [f for f in sorted(os.listdir(part_a)) if f.endswith(".parquet")]
     assert len(victims) >= 2, "need multiple files to simulate a partial write"
