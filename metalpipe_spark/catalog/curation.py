@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metalpipe_spark.catalog import register
+from metalpipe_spark.materialize import materialize
 from metalpipe_spark.operators.curation import stratified_sample, topk_per_group
 from metalpipe_spark.operators.text import quality_score
 from metalpipe_spark.sources.readers import load_table
@@ -791,17 +792,14 @@ def q_incremental_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
         dsir_target_counts,
     )
 
-    from metalpipe_spark.operators.dedup import _truncate_lineage
-
     docs = load_table(spark, sf_dir, "documents")
     # Materialize the fixed target distribution ONCE (its own contract):
     # both incremental calls consume it twice inside _dsir_ratio, so an
     # un-truncated tc would re-run the en-slice gram-hash scan 4x.
-    tc, _tc_rdd = _truncate_lineage(
+    tc = materialize(
         dsir_target_counts(
             docs.where(F.col("lang") == "en"), buckets=_DSIR_BUCKETS
-        ),
-        reliable=False,
+        )
     )
     tc.count()
     _, store = dsir_incremental_weights(

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metalpipe_spark.catalog import register
+from metalpipe_spark.materialize import materialize, release
 from metalpipe_spark.operators.dedup import (
     connected_components,
     exact_dedup,
@@ -256,11 +257,11 @@ _CLUSTER_THRESHOLD = 0.5
 # cluster-shaped rows; the image dHash codes feed the image-dedup rows
 # (catalog/multimodal_queries.py).  Keyed by (applicationId, kind,
 # sf_dir, params) so each driver session computes a stage exactly once;
-# the localCheckpoint pins only the small derived table (signatures /
+# the checkpoint pins only the small derived table (signatures /
 # assignments / codes — never payloads).  Rows stay independently
 # runnable — any order, any subset — the memo is purely a compute-once
 # optimization, never a correctness dependency.
-_SHARED_STAGES: dict[tuple, tuple[DataFrame, object]] = {}
+_SHARED_STAGES: dict[tuple, DataFrame] = {}
 
 
 def clear_shared_stages(kinds: set[str] | None = None) -> None:
@@ -277,27 +278,25 @@ def clear_shared_stages(kinds: set[str] | None = None) -> None:
         k for k in _SHARED_STAGES if kinds is None or k[1] in kinds
     ]
     for k in doomed:
-        _df, rdd = _SHARED_STAGES.pop(k)
+        df = _SHARED_STAGES.pop(k)
         try:
-            rdd.unpersist(False)
+            release(df)
         except Exception:
             pass  # context already stopped
 
 
 def shared_stage(spark: SparkSession, key_parts: tuple, builder) -> DataFrame:
-    """Memoize-and-materialize a family-shared DataFrame stage:
-    lazy-localCheckpoint, single-subtree ``count()`` materialization
+    """Memoize-and-materialize a family-shared DataFrame stage: lazy
+    checkpoint, single-subtree ``count()`` materialization
     (the house rule — multi-subtree first actions RACE to materialize),
     keyed under ``(applicationId, *key_parts)``."""
     key = (spark.sparkContext.applicationId, *key_parts)
     got = _SHARED_STAGES.get(key)
     if got is not None:
-        return got[0]
-    from metalpipe_spark.operators.dedup import _truncate_lineage
-
-    df, rdd = _truncate_lineage(builder(), reliable=False)
+        return got
+    df = materialize(builder())
     df.count()  # materialize so later readers never re-run the stage
-    _SHARED_STAGES[key] = (df, rdd)
+    _SHARED_STAGES[key] = df
     return df
 
 
@@ -1223,13 +1222,12 @@ def q_edit_distance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metalpipe_spark.operators.text import tokens
 
     docs = load_table(spark, sf_dir, "documents", rebalance=True)
-    base = (
+    # referenced by 3 union branches below — one tokenize+distinct
+    # pass instead of three (vocab-scale state, lazy)
+    base = materialize(
         docs.select(F.explode(tokens("text")).alias("tok"))
         .where(F.length("tok").between(3, 12))
         .distinct()
-        # referenced by 3 union branches below — one tokenize+distinct
-        # pass instead of three (vocab-scale state, lazy)
-        .localCheckpoint(eager=False)
     )
     # Seed real near-misses: deterministic 1-insertion and
     # 1-substitution variants (the audio-fixture pattern) so the row

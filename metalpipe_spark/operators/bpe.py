@@ -6,7 +6,7 @@ Scale split, Spark-first: the CORPUS-scale work is exactly one
 map-side-combined word count (the only pass that touches 100 TB); the
 merge loop then iterates over the WORD-FREQUENCY table (bounded by
 unique-word vocabulary, not corpus size), one shuffle per merge, with
-the same lazy-localCheckpoint lineage truncation the connected-
+the same lazy lineage truncation (``materialize``) the connected-
 components loop uses.  Only the 1-row argmax ever reaches the driver
 per iteration.  Encoding broadcasts the learned merge ranks and runs as
 an Arrow-batched pandas UDF with a per-batch word memo (corpus words
@@ -19,6 +19,8 @@ import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from metalpipe_spark.materialize import materialize, release
 
 # The pinned whitespace class, spelled out: identical to Python
 # re.ASCII '\s' and Java '\s' (both [ \t\n\x0b\f\r] — what the
@@ -129,7 +131,7 @@ def train_bpe(
     shuffle (pair explode → groupBy-sum → 1-row argmax to the driver)
     plus a containment-gated fold that rewrites symbol arrays (greedy
     left-to-right, the reference semantics); every
-    ``checkpoint_every`` rounds the vocab table localCheckpoints so the
+    ``checkpoint_every`` rounds the vocab table is checkpointed so the
     iterative plan does not grow unboundedly — each round's actions
     re-execute the chain back to the last checkpoint, so the sweep is a
     real trade (measured at sf0.1, 32 merges: every round 9.2 s, every
@@ -139,7 +141,7 @@ def train_bpe(
     spark = df.sparkSession
     vocab = _initial_vocab(df, text_col)
     merges = []
-    prev_rdd = None
+    prev = None
     for rank in range(num_merges):
         best = (
             _adjacent_pairs(vocab).groupBy("p")
@@ -153,20 +155,18 @@ def train_bpe(
         merges.append((rank, left, right, int(best["c"])))
         vocab = _greedy_merge_vocab(vocab, left, right, left + right)
         if (rank + 1) % checkpoint_every == 0:
-            from metalpipe_spark.operators.dedup import _truncate_lineage
-
-            vocab, rdd = _truncate_lineage(vocab, reliable=False)
+            vocab = materialize(vocab)
             vocab.count()  # materialize so the lineage truncation holds
-            if prev_rdd is not None:
-                prev_rdd.unpersist(False)
-            prev_rdd = rdd
+            if prev is not None:
+                release(prev)
+            prev = vocab
     # The merge table lives in the driver-side list; nothing reads the
     # vocab DataFrame after the loop, so the final round's checkpoint
     # blocks are dropped here — without this, every train_bpe call
     # would pin one vocabulary table in executor storage for the
     # session's lifetime (3x per bench run of the catalog row).
-    if prev_rdd is not None:
-        prev_rdd.unpersist(False)
+    if prev is not None:
+        release(prev)
     return spark.createDataFrame(
         merges, "rank int, left string, right string, pair_count long"
     )
@@ -555,11 +555,7 @@ def train_wordpiece(
     # re-run the corpus word count three times (the .explain audit's
     # 3x-of-100TB finding); later rounds already read the
     # checkpoint_every cache.
-    from metalpipe_spark.operators.dedup import _truncate_lineage
-
-    vocab, prev_rdd = _truncate_lineage(
-        _wp_initial_vocab(df, text_col), reliable=False
-    )
+    vocab = prev = materialize(_wp_initial_vocab(df, text_col))
     vocab.count()  # materialize so the lineage truncation holds
     if vocab_size is not None:
         if vocab_size < 1:
@@ -586,13 +582,11 @@ def train_wordpiece(
         )
         vocab = _greedy_merge_vocab(vocab, left, right, merged)
         if (rank + 1) % checkpoint_every == 0:
-            vocab, rdd = _truncate_lineage(vocab, reliable=False)
+            vocab = materialize(vocab)
             vocab.count()  # materialize so the lineage truncation holds
-            if prev_rdd is not None:
-                prev_rdd.unpersist(False)
-            prev_rdd = rdd
-    if prev_rdd is not None:
-        prev_rdd.unpersist(False)
+            release(prev)
+            prev = vocab
+    release(prev)
     return spark.createDataFrame(
         merges,
         "rank int, left string, right string, merged string,"

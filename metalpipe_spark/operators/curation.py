@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from metalpipe_spark.materialize import materialize, release
 from metalpipe_spark.operators.dedup import _hash64
 
 
@@ -194,9 +195,7 @@ def exclusive_prefix_sum(
     # and the totals pass share ONE materialization) — which also hides
     # the RangePartitioning exchange from the final explain; plan pins
     # for the skeleton go against prefix_sum_range_stage directly.
-    ranged = prefix_sum_range_stage(df, order_col, p).localCheckpoint(
-        eager=False
-    )
+    ranged = materialize(prefix_sum_range_stage(df, order_col, p))
     totals = {
         r["__pid"]: r["__w"]
         for r in ranged.select(
@@ -857,11 +856,11 @@ def _dsir_ratio(
     # for the target side the full target-slice gram-hash
     # explode+aggregate, for the raw side a repeat pass over the
     # doc-count table (r17, guide §2.4: duplicated subtrees).  Both are
-    # <= buckets rows after aggregation, so a lazy localCheckpoint pins
+    # <= buckets rows after aggregation, so a lazy checkpoint pins
     # a few KB and halves the upstream passes; an already-truncated
     # input (stream_dsir_sink's tc) just re-caches the tiny table.
-    t_counts = t_counts.localCheckpoint(eager=False)
-    r_counts = r_counts.localCheckpoint(eager=False)
+    t_counts = materialize(t_counts)
+    r_counts = materialize(r_counts)
     t_total = t_counts.agg(F.sum("__ct").alias("__tt"))
     r_total = r_counts.agg(F.sum("__cr").alias("__rt"))
     ratio = (
@@ -956,20 +955,16 @@ def dsir_incremental_weights(
     incremental dedup family uses.
 
     With ``with_cleanup=True`` a third element is returned: a callable
-    that frees the per-batch ``(id, bucket, count)`` localCheckpoint's
-    MEMORY_AND_DISK blocks.  A long-running caller (``stream_dsir_sink``)
-    MUST invoke it once both returned frames are consumed, or the
-    stream pins one doc-count-scale block set per micro-batch for its
-    lifetime — the exact leak ``_truncate_lineage``'s handle exists to
-    prevent.  Batch callers can ignore it (session teardown frees the
-    single block set)."""
-    from metalpipe_spark.operators.dedup import _truncate_lineage
-
-    dc, dc_rdd = _truncate_lineage(
+    that releases the per-batch ``(id, bucket, count)`` checkpoint
+    (:func:`~metalpipe_spark.materialize.release`).  A long-running
+    caller (``stream_dsir_sink``) MUST invoke it once both returned
+    frames are consumed, or the stream pins one doc-count-scale block
+    set per micro-batch for its lifetime.  Batch callers can ignore it
+    (session teardown frees the single block set)."""
+    dc = materialize(
         _hashed_grams(new_docs, text_col, buckets, [id_col], bucket_hash)
         .groupBy(id_col, "bucket")
-        .agg(F.count(F.lit(1)).alias("__c")),
-        reliable=False,
+        .agg(F.count(F.lit(1)).alias("__c"))
     )
     batch_counts = dc.groupBy("bucket").agg(F.sum("__c").alias("__cr"))
     if raw_bucket_counts is None:
@@ -987,7 +982,7 @@ def dsir_incremental_weights(
     ratio = _dsir_ratio(updated, target_bucket_counts, buckets, smoothing, exact)
     weights = _dsir_probe(dc, ratio, id_col, exact)
     if with_cleanup:
-        return weights, updated, lambda: dc_rdd.unpersist(False)
+        return weights, updated, lambda: release(dc)
     return weights, updated
 
 

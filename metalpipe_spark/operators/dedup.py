@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from metalpipe_spark.materialize import materialize, release
 from metalpipe_spark.operators.text import fingerprint
 
 
@@ -385,21 +386,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def _truncate_lineage(df: DataFrame, reliable: bool):
-    """Checkpoint ``df`` lazily and return ``(checkpointed_df, backing_rdd)``.
-
-    ``backing_rdd`` is the JVM RDD the resulting LogicalRDD wraps — the
-    handle needed to actually free a ``localCheckpoint``'s
-    MEMORY_AND_DISK blocks once a later round no longer depends on it.
-    ``DataFrame.unpersist()`` only clears the SQL cache-manager entry,
-    which a checkpoint never registered, so without this handle every
-    round's edge set would stay pinned for the life of the session.
-    """
-    jdf = df._jdf.checkpoint(False) if reliable else df._jdf.localCheckpoint(False)
-    out = DataFrame(jdf, df.sparkSession)
-    return out, jdf.queryExecution().analyzed().rdd()
-
-
 def _driver_components(spark, raw: DataFrame) -> DataFrame:
     """Union-find over a COLLECTED edge list — the small-graph fast path
     of :func:`connected_components`.  Pairs with a NULL endpoint
@@ -448,7 +434,6 @@ def connected_components(
     src: str = "d1",
     dst: str = "d2",
     max_iterations: int = 25,
-    checkpoint_dir: str | None = None,
     driver_max_edges: int = 500_000,
 ) -> DataFrame:
     """Connected components of a pair list → ``(node, cluster_id)`` rows,
@@ -464,14 +449,13 @@ def connected_components(
     pathological long-chain graphs — the property plain min-label
     propagation (O(diameter) rounds) lacks.
 
-    Per round the lineage is truncated with a checkpoint.  With the
-    default ``checkpoint_dir=None`` that is ``localCheckpoint`` —
-    executor-local MEMORY_AND_DISK blocks, fastest, but a lost executor
-    loses blocks with no recompute path back past the truncation.  On a
-    real cluster pass ``checkpoint_dir`` (an HDFS/object-store path):
-    rounds then write reliable checkpoint files there and survive
-    executor loss.  Files from superseded rounds are bounded (one edge
-    set per round) and are reclaimed by the context cleaner when
+    Per round the lineage is truncated with
+    :func:`~metalpipe_spark.materialize.materialize`: executor-local
+    blocks by default, reliable checkpoint files that survive executor
+    loss once the session has a checkpoint dir (``spark.checkpoint.dir``).
+    Superseded rounds' blocks are released as the loop goes; their
+    reliable files are bounded (one edge set per round) and are
+    reclaimed by the context cleaner when
     ``spark.cleaner.referenceTracking.cleanCheckpoints=true``.
 
     Convergence is detected STRUCTURALLY in the round that produces the
@@ -497,10 +481,7 @@ def connected_components(
     ``driver_max_edges=0`` disables the fast path (tests pin the loop
     with it).
     """
-    reliable = checkpoint_dir is not None
     spark = pairs.sparkSession
-    if reliable:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
     # Keys keep their input type: orderable comparisons (least/greatest,
     # </>) are all the algorithm needs, so string/long ids both work.
     # The raw pair list is lazily checkpointed ONCE: round 1's
@@ -511,7 +492,7 @@ def connected_components(
     # on the result.  Storage cost is one edge-sized block set, the
     # same magnitude as a round's checkpoint.
     raw = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    raw, _raw_rdd = _truncate_lineage(raw, reliable)
+    raw = materialize(raw)
     if driver_max_edges:
         # Single-subtree count materializes the checkpoint blocks (the
         # round-1 action would have paid this job regardless); the
@@ -519,8 +500,7 @@ def connected_components(
         # pipeline.
         if raw.count() <= driver_max_edges:
             out = _driver_components(spark, raw)
-            if not reliable:
-                _raw_rdd.unpersist(False)  # nothing downstream reads raw
+            release(raw)  # nothing downstream reads raw
             return out
     edges = raw.where(F.col("u") != F.col("v")).distinct()
     # Nodes appearing ONLY in reflexive pairs (u == v) would vanish with
@@ -535,7 +515,7 @@ def connected_components(
         .select(F.col("u").alias("node"))
         .distinct()
     )
-    prev_rdd = None
+    prev = None
     # Shuffle partitions sized to the EDGE SET, not the session default:
     # each round's cost at small edge counts is task scheduling, not
     # data, and at billions of edges the session default (sized for
@@ -565,17 +545,15 @@ def connected_components(
             # fused pair runs, and so already-converged inputs exit
             # after one round.
             fuse = 1 if it == 0 else min(2, max_iterations - it)
-            new_rdds = []
+            rounds = []
             for _ in range(fuse):
                 # Lazy checkpoint: the convergence aggregate below is the
                 # action that materializes the whole fused chain, so each
                 # check costs ONE job (an eager checkpoint + separate agg
                 # measured ~2x the wall on small graphs, where per-job
                 # overhead dominates).
-                edges, rdd = _truncate_lineage(
-                    _small_star(_large_star(edges)), reliable
-                )
-                new_rdds.append(rdd)
+                edges = materialize(_small_star(_large_star(edges)))
+                rounds.append(edges)
                 it += 1
             # Materialize the fused chain with a bare count() FIRST: a
             # single-subtree job, so the checkpoint blocks exist before
@@ -607,13 +585,10 @@ def connected_components(
                 else {"n": 0, "du": 0, "dv": 0, "dn": 0}
             )
             # Everything before the newest round is materialized past the
-            # truncation point, so earlier rounds' blocks can be dropped
-            # (local mode; reliable checkpoints hold no block storage —
-            # their files are the cleaner's job, see docstring).
-            if not reliable:
-                for r in ([prev_rdd] if prev_rdd is not None else []) + new_rdds[:-1]:
-                    r.unpersist(False)
-            prev_rdd = new_rdds[-1]
+            # truncation point, so earlier rounds' blocks can be dropped.
+            for r in ([prev] if prev is not None else []) + rounds[:-1]:
+                release(r)
+            prev = rounds[-1]
             if row["n"] == row["du"] and row["du"] + row["dv"] == row["dn"]:
                 converged = True
                 break
@@ -649,18 +624,14 @@ def dedup_corpus(
     id_col: str = "doc_id",
     src: str = "d1",
     dst: str = "d2",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """End-to-end near-dup removal: cluster the candidate ``pairs`` with
     :func:`connected_components` and keep, per cluster, only the canonical
     document (minimum id).  Documents in no cluster pass through.
 
-    ``checkpoint_dir`` is forwarded to :func:`connected_components` — set
-    it on a real cluster so the clustering rounds survive executor loss.
-
     The loser set can be arbitrarily large at corpus scale, so it is
     removed with a shuffled ``left_anti`` join (never a broadcast/IN)."""
-    comp = connected_components(pairs, src=src, dst=dst, checkpoint_dir=checkpoint_dir)
+    comp = connected_components(pairs, src=src, dst=dst)
     losers = comp.where(F.col("node") != F.col("cluster_id")).select(
         F.col("node").alias(id_col)
     )
@@ -985,7 +956,7 @@ def hamming_neardup_pairs(
     cardinality approaches 2^(combo * bits/blocks).
 
     ``cache_codes=True`` materializes the ``(id, code)`` projection
-    once (lazy localCheckpoint, ContextCleaner-dropped) before the
+    once (lazy checkpoint, ContextCleaner-dropped) before the
     self-join references it twice.  The join sides are NOT otherwise
     shared: when one side broadcasts (the usual local outcome) there is
     no common Exchange for ReuseExchange to collapse, so the whole
@@ -997,7 +968,7 @@ def hamming_neardup_pairs(
     minhash signature pipeline).  Cached state is 16
     bytes/doc — never payloads."""
     if cache_codes:
-        codes = codes.select(id_col, code_col).localCheckpoint(eager=False)
+        codes = materialize(codes.select(id_col, code_col))
     banded = _banded_codes(codes, code_col, id_col, bits, max_hamming, blocks, combo)
     a, b = banded.alias("a"), banded.alias("b")
     cand = (

@@ -50,6 +50,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
+from metalpipe_spark.materialize import materialize
+
 # The pinned whitespace class, spelled out: identical to Python
 # re.ASCII '\s' AND Java '\s' (both [ \t\n\x0b\f\r]); the SQL oracles
 # use the same explicit class because RE2's '\s' EXCLUDES \x0b (r14
@@ -602,10 +604,10 @@ def incremental_embed(
     # downstream ingest, updated_store via the union) — a caller
     # consuming both would run inference on the changed sliver once per
     # action (r17; guide §4: the Python-kernel boundary is the
-    # expensive stage, never price it twice).  Lazy localCheckpoint:
+    # expensive stage, never price it twice).  Lazy checkpoint:
     # sliver-scale (id, fp, embedding) rows, materialized by whichever
     # action runs first, blocks dropped by the ContextCleaner.
-    fresh = fresh.localCheckpoint(eager=False)
+    fresh = materialize(fresh)
     updated = fresh if carried is None else fresh.unionByName(carried)
     updated_store = updated.select(
         id_col, "__fp", output_col, F.lit(model).alias("__model")

@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from metalpipe_spark.materialize import materialize
+
 
 def enrich_join(
     fact: DataFrame,
@@ -271,14 +273,12 @@ def edit_distance_join(
     if max_edits < 1:
         raise ValueError(f"max_edits must be >= 1, got {max_edits}")
     s = F.col(col)
-    variants = (
-        df.where(s.isNotNull())
-        .select(
+    variants = materialize(
+        df.where(s.isNotNull()).select(
             F.col(id_col).alias("__id"),
             s.alias("__s"),
             F.explode(_deletion_variants(s, max_edits)).alias("__v"),
         )
-        .localCheckpoint(eager=False)
     )
     if max_bucket_size is not None:
         counts = variants.groupBy("__v").agg(

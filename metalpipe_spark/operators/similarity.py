@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from metalpipe_spark.materialize import materialize
+
 # Rows per matmul in the per-cell GEMM kernels: a kernel holds one
 # _GEMM_CHUNK x B similarity slab at a time, never the B x B matrix.
 _GEMM_CHUNK = 1024
@@ -950,7 +952,7 @@ def semantic_neardup_pairs(
     pre-split with that function's salting pattern.
 
     The assigned ``(id, _vd, cell, nrm)`` frame is materialized once
-    (lazy localCheckpoint, ContextCleaner-dropped) before the self-join
+    (lazy checkpoint, ContextCleaner-dropped) before the self-join
     references it twice.  Otherwise the nearest-centroid assignment —
     k dot products per row, each an interpreted HOF fold — executes
     once per join side, and the join's pushed ``isnotnull(cell)``
@@ -967,12 +969,14 @@ def semantic_neardup_pairs(
         F.col(id_col),
         F.expr(f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)").alias("_vd"),
     )
-    sigs = pre.select(
-        F.col(id_col),
-        F.col("_vd"),
-        F.element_at(_probe_cells(centroids, 1), 1).alias("cell"),
-        F.expr(norm_sql("_vd", dim, cast=False)).alias("nrm"),
-    ).localCheckpoint(eager=False)
+    sigs = materialize(
+        pre.select(
+            F.col(id_col),
+            F.col("_vd"),
+            F.element_at(_probe_cells(centroids, 1), 1).alias("cell"),
+            F.expr(norm_sql("_vd", dim, cast=False)).alias("nrm"),
+        )
+    )
     a = sigs.select(
         F.col("cell"),
         F.col(id_col).alias("d1"),
@@ -1106,14 +1110,17 @@ def incremental_semantic_dedup(
     # streaming sink's kept-append + store-rewrite — doesn't re-run
     # the dedup kernels per action.  Only batch-sized relations are
     # checkpointed; the accumulated store never enters block storage.
-    batch_survivors = semantic_dedup_gemm(
-        new_docs, centroids, threshold=threshold, vec_col=vec_col, id_col=id_col
-    ).localCheckpoint(eager=True)
+    batch_survivors = materialize(
+        semantic_dedup_gemm(
+            new_docs, centroids, threshold=threshold, vec_col=vec_col, id_col=id_col
+        ),
+        eager=True,
+    )
     surv_store = cell_store(batch_survivors, centroids, vec_col, id_col)
     if store is not None:
-        hits = _cross_hits_gemm(
-            surv_store, store, threshold, id_col
-        ).localCheckpoint(eager=True)  # ids only — tiny
+        hits = materialize(
+            _cross_hits_gemm(surv_store, store, threshold, id_col), eager=True
+        )  # ids only — tiny
         fresh = batch_survivors.join(hits, id_col, "left_anti")
         surv_store = surv_store.join(hits, id_col, "left_anti")
         # return_delta: the store is strictly append-only (survivors
@@ -1639,9 +1646,10 @@ def incremental_semantic_dedup_scaled(
                 f"{batch_gen!r} — cells would never align; refit the "
                 "store or use its original table"
             )
-    sigs = _assign_with_matrix(
-        new_docs, mat, batch_gen, vec_col, id_col
-    ).localCheckpoint(eager=True)
+    sigs = materialize(
+        _assign_with_matrix(new_docs, mat, batch_gen, vec_col, id_col),
+        eager=True,
+    )
     id_type = new_docs.schema[id_col].dataType.simpleString()
     # Materialize the loser ID SET itself (id-scale), not just its two
     # consumers: batch_survivors and surv_sigs each anti-join against
@@ -1649,10 +1657,13 @@ def incremental_semantic_dedup_scaled(
     # executed the in-batch GEMM kernel — and its corpus-scale vector
     # shuffle into applyInPandas — once per consumer (guide §2.4
     # duplicated-subtree rule).
-    losers = _gemm_cell_losers(
-        sigs.select(id_col, "cell", "vec", "nrm"),
-        id_col, id_type, threshold, max_cell_size,
-    ).localCheckpoint(eager=True)
+    losers = materialize(
+        _gemm_cell_losers(
+            sigs.select(id_col, "cell", "vec", "nrm"),
+            id_col, id_type, threshold, max_cell_size,
+        ),
+        eager=True,
+    )
     batch_survivors = new_docs.join(losers, id_col, "left_anti")
     surv_sigs = sigs.join(losers, id_col, "left_anti")
     # The two survivor frames are INDEPENDENT anti-joins of
@@ -1683,10 +1694,10 @@ def incremental_semantic_dedup_scaled(
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_bs = pool.submit(
-            _inherit(lambda: batch_survivors.localCheckpoint(eager=True))
+            _inherit(lambda: materialize(batch_survivors, eager=True))
         )
         f_ss = pool.submit(
-            _inherit(lambda: surv_sigs.localCheckpoint(eager=True))
+            _inherit(lambda: materialize(surv_sigs, eager=True))
         )
         batch_survivors = f_bs.result()
         surv_sigs = f_ss.result()
@@ -1703,12 +1714,15 @@ def incremental_semantic_dedup_scaled(
         store_touched = store.select(id_col, "cell", "vec", "nrm").join(
             F.broadcast(touched), "cell", "left_semi"
         )
-        hits = _cross_hits_gemm(
-            surv_sigs.select(id_col, "cell", "vec", "nrm"),
-            store_touched,
-            threshold,
-            id_col,
-        ).localCheckpoint(eager=True)
+        hits = materialize(
+            _cross_hits_gemm(
+                surv_sigs.select(id_col, "cell", "vec", "nrm"),
+                store_touched,
+                threshold,
+                id_col,
+            ),
+            eager=True,
+        )
         batch_survivors = batch_survivors.join(hits, id_col, "left_anti")
         surv_sigs = surv_sigs.join(hits, id_col, "left_anti")
         # return_delta: append-only store — delta-segment sink contract
@@ -1892,7 +1906,7 @@ def split_oversized_cells(
     # join), and Catalyst does NOT reuse unexchanged scan subtrees — the
     # pre-change plan re-ran the full scan + centroid-assignment compute
     # 8x per action (plans/r17/q_ivf_cell_split_before.txt: 8 parquet
-    # scans, 0 ReusedExchange).  A lazy localCheckpoint (the prune_lm
+    # scans, 0 ReusedExchange).  A lazy checkpoint (the prune_lm
     # precedent) turns those into cache-block reads: the sizes collect
     # right below materializes it, and the blocks are dropped by the
     # ContextCleaner when the returned frames go out of scope — unlike
@@ -1906,7 +1920,7 @@ def split_oversized_cells(
     from pyspark import StorageLevel
 
     if assigned.storageLevel == StorageLevel.NONE:
-        assigned = assigned.localCheckpoint(eager=False)
+        assigned = materialize(assigned)
     sizes = (
         assigned.groupBy(cell_col)
         .agg(F.count(F.lit(1)).alias("__n"))

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from metalpipe_spark.materialize import materialize
+
 # Tiny per-language marker-word sets for the n-gram/stopword heuristic.
 # Real deployments swap in larger tables; the mechanism (vectorized set
 # membership over tokens) is what scales.
@@ -1177,7 +1179,7 @@ def perplexity_buckets(
     # re-runs the whole LM scoring pipeline (explode + broadcast join +
     # doc rollup).  The table is (id, score): doc-count-shaped, never
     # corpus-byte-shaped.  Measured 3.7 -> ~2 s at sf0.1.
-    scored = scored.localCheckpoint(eager=False)
+    scored = materialize(scored)
     p1, p2 = (repr(float(p)) for p in fractions)
     if approx:
         th = scored.agg(
@@ -1740,17 +1742,13 @@ def train_backoff_lm(
                     f"{col!r}; got {counts.columns} — the "
                     "ngram_count_table / load_ngram_counts shape"
                 )
-        gc = counts.select("order", "ngram", "n_count").localCheckpoint(
-            eager=False
-        )
+        gc = materialize(counts.select("order", "ngram", "n_count"))
     else:
         # ONE corpus-scale aggregate for every order; the lazy
         # checkpoint makes the n per-order consumers replay the gram
         # TABLE, not the corpus scan (the perplexity_buckets
         # precedent).
-        gc = ngram_count_table(df, n, text_col=text_col).localCheckpoint(
-            eager=False
-        )
+        gc = materialize(ngram_count_table(df, n, text_col=text_col))
     if smoothing in ("kn", "mkn"):
         lvl = _kn_levels(
             gc, n, D, auto_discount,
@@ -2437,7 +2435,7 @@ def prune_lm(
     # cascades, backoff sums, output); the lazy checkpoint makes them
     # replay the model TABLE instead of re-running an upstream trainer
     # DAG per reference (the perplexity_buckets precedent).
-    lm = lm.localCheckpoint(eager=False)
+    lm = materialize(lm)
     orders = {
         k: lm.where(F.col("order") == k).drop(
             "backoff", "log_backoff"

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from metalpipe_spark.materialize import materialize
+
 # One regex family, shared with the SQL oracles (catalog/web_queries.py).
 SCHEME_RE = r"^([a-zA-Z][a-zA-Z0-9+.\-]*)://"
 HOST_RE = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://(?:[^/@?#]*@)?([^/:?#]+)"
@@ -314,17 +316,16 @@ def host_rank(
     # growing lineage.  Values are unchanged: the fixed-point path is
     # exact integer arithmetic, and the double path's join/agg structure
     # is identical per iteration.
-    hosts = (
+    hosts = materialize(
         e.select(F.col("src").alias("host"))
         .unionByName(e.select(F.col("dst").alias("host")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     n = hosts.count()
     if n == 0:
         raise ValueError("host_rank: empty edge list")
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    ed = e.join(deg, "src").localCheckpoint(eager=False)
+    ed = materialize(e.join(deg, "src"))
 
     if fixed_point_scale is not None:
         s = int(fixed_point_scale)
@@ -346,13 +347,15 @@ def host_rank(
                 .groupBy("host")
                 .agg(F.sum("c").alias("c"))
             )
-            ranks = hosts.join(contrib, "host", "left").select(
-                "host",
-                (
-                    F.lit(base_i)
-                    + F.expr(f"({dnum} * coalesce(c, 0L)) div 100")
-                ).alias("r"),
-            ).localCheckpoint(eager=False)
+            ranks = materialize(
+                hosts.join(contrib, "host", "left").select(
+                    "host",
+                    (
+                        F.lit(base_i)
+                        + F.expr(f"({dnum} * coalesce(c, 0L)) div 100")
+                    ).alias("r"),
+                )
+            )
         return ranks.select("host", (F.col("r") / F.lit(float(s))).alias("rank"))
 
     ranks = hosts.withColumn("rank", F.lit(1.0 / n))
@@ -367,12 +370,15 @@ def host_rank(
             .groupBy("host")
             .agg(F.sum("c").alias("c"))
         )
-        ranks = hosts.join(contrib, "host", "left").select(
-            "host",
-            (
-                F.lit(base) + F.lit(damping) * F.coalesce(F.col("c"), F.lit(0.0))
-            ).alias("rank"),
-        ).localCheckpoint(eager=False)
+        ranks = materialize(
+            hosts.join(contrib, "host", "left").select(
+                "host",
+                (
+                    F.lit(base)
+                    + F.lit(damping) * F.coalesce(F.col("c"), F.lit(0.0))
+                ).alias("rank"),
+            )
+        )
     return ranks
 
 

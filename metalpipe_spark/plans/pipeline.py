@@ -803,12 +803,7 @@ def _near_dup_dedup_node(spark, upstreams, opts):
         # the minhash family); md5 stays the portable default.
         hash=opts.get("hash", "md5"),
     ).where(F.col("est_jaccard") >= threshold)
-    return dedup_corpus(
-        df,
-        pairs,
-        id_col=opts.get("id_col", "doc_id"),
-        checkpoint_dir=opts.get("checkpoint_dir"),
-    )
+    return dedup_corpus(df, pairs, id_col=opts.get("id_col", "doc_id"))
 
 
 @node_class("ExactSubstrDedup")

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from metalpipe_spark.materialize import materialize, release
 
 from contextlib import contextmanager
 
@@ -597,7 +598,7 @@ def stream_score_sink(
 
     from metalpipe_spark.operators.text import ngram_logprob_backoff
 
-    lm = lm.localCheckpoint(eager=True)
+    lm = materialize(lm, eager=True)
     if n is None:
         row = lm.agg(F.max("order")).first()
         if row[0] is None:
@@ -706,9 +707,9 @@ def stream_ngram_count_sink(
         # One count table, TWO writes (kept provenance + store delta):
         # the lazy checkpoint makes the second write replay counted
         # rows instead of re-tokenizing the batch.
-        batch_counts = ngram_count_table(
-            batch_df, n, text_col=text_col
-        ).localCheckpoint(eager=False)
+        batch_counts = materialize(
+            ngram_count_table(batch_df, n, text_col=text_col)
+        )
         return batch_counts, batch_counts
 
     def fold_merge(union: DataFrame) -> DataFrame:
@@ -1118,10 +1119,7 @@ def stream_image_dedup_sink(
     bands and semantic cells have the same shape).  Store state is 8
     bytes per surviving image; the swap durability and crash self-heal
     are the shared ``_incremental_store_sink`` contract."""
-    from metalpipe_spark.operators.dedup import (
-        _truncate_lineage,
-        incremental_hamming_dedup,
-    )
+    from metalpipe_spark.operators.dedup import incremental_hamming_dedup
     from metalpipe_spark.operators.multimodal import image_dhash
 
     def step(batch_df: DataFrame, store: DataFrame | None):
@@ -1131,9 +1129,7 @@ def stream_image_dedup_sink(
         # re-run the Python dHash kernel over the raw images; the
         # cleanup drops the blocks after the swap so micro-batches don't
         # accumulate pinned state (the skeleton's cleanup hook).
-        codes, rdd = _truncate_lineage(
-            image_dhash(batch_df, id_col=id_col), reliable=False
-        )
+        codes = materialize(image_dhash(batch_df, id_col=id_col))
         codes.count()
         # return_delta: the (id, dhash) store is strictly append-only —
         # the sink publishes only the batch's surviving codes as a
@@ -1144,7 +1140,7 @@ def stream_image_dedup_sink(
             bits=64, max_hamming=max_hamming, blocks=blocks, combo=combo,
             return_delta=True,
         )
-        return fresh, updated, lambda: rdd.unpersist(False)
+        return fresh, updated, lambda: release(codes)
 
     return _incremental_store_sink(
         df, kept_path, store_path, checkpoint, step,
@@ -1353,27 +1349,24 @@ def stream_dsir_sink(
         dsir_incremental_weights,
         dsir_target_counts,
     )
-    from metalpipe_spark.operators.dedup import _truncate_lineage
 
     if rebalance_partitions:
         # Micro-batch parallelism is inherited from the source's file
         # layout (the stream_corpus_pipeline rationale): one large file
         # per batch would run the whole explode+hash chain on one task.
         df = df.repartition(rebalance_partitions)
-    tc, tc_rdd = _truncate_lineage(
+    tc = materialize(
         dsir_target_counts(
             target, text_col=text_col, buckets=buckets, bucket_hash=bucket_hash
-        ),
-        reliable=False,
+        )
     )
     tc.count()  # materialize once; every micro-batch broadcasts from here
 
     def step(batch_df: DataFrame, store: DataFrame | None):
-        # with_cleanup routes the per-batch (id, bucket, count)
-        # localCheckpoint through _truncate_lineage and hands back the
-        # block-release callable; the skeleton runs it after the
-        # manifest swap so micro-batches don't accumulate pinned blocks
-        # (the image-dedup sink's contract).
+        # with_cleanup hands back the callable that releases the
+        # per-batch (id, bucket, count) checkpoint; the skeleton runs it
+        # after the manifest swap so micro-batches don't accumulate
+        # pinned blocks (the image-dedup sink's contract).
         weights, updated, cleanup = dsir_incremental_weights(
             batch_df,
             store,

@@ -60,3 +60,23 @@ def spark():
     )
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
+
+
+@pytest.fixture
+def reliable_checkpoints(spark, tmp_path):
+    """Give the session a checkpoint dir for one test, so every engine
+    checkpoint is written reliably (``metalpipe_spark.materialize``);
+    yields the dir.  PySpark has no public way to unset the dir, so
+    teardown puts the previous value back on the JVM SparkContext: a
+    dir left behind would silently switch every later test in the
+    session to reliable checkpoint files."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    prev = jsc.checkpointDir()
+    ckdir = str(tmp_path / "checkpoints")
+    sc.setCheckpointDir(ckdir)
+    try:
+        yield ckdir
+    finally:
+        getattr(jsc, "checkpointDir_$eq")(prev)
+    assert sc.getCheckpointDir() is None

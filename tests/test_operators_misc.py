@@ -315,27 +315,25 @@ def test_connected_components_empty_pairs(spark):
     assert connected_components(df).count() == 0
 
 
-def test_connected_components_reliable_checkpoint_dir(spark, tmp_path):
-    """With checkpoint_dir set, rounds write reliable checkpoint files
-    (executor-loss-safe at cluster scale) and the result is unchanged."""
+def test_connected_components_reliable_checkpoint_dir(spark, reliable_checkpoints):
+    """With a session checkpoint dir set, rounds write reliable
+    checkpoint files (executor-loss-safe at cluster scale) and the
+    result is unchanged."""
     import os
 
     from metalpipe_spark.operators.dedup import connected_components
 
-    ckdir = str(tmp_path / "cc_ckpt")
     chain = [(i, i + 1) for i in range(63)]
     df = spark.createDataFrame(chain, ["d1", "d2"])
     got = {
         r["node"]: r["cluster_id"]
-        for r in connected_components(
-            df, checkpoint_dir=ckdir, driver_max_edges=0
-        ).collect()
+        for r in connected_components(df, driver_max_edges=0).collect()
     }
     assert got == {i: 0 for i in range(64)}
     # at least one round actually hit the reliable dir
     found = [
         name
-        for _, dirs, _ in os.walk(ckdir)
+        for _, dirs, _ in os.walk(reliable_checkpoints)
         for name in dirs
         if name.startswith("rdd-")
     ]
