@@ -2136,6 +2136,30 @@ def _bo_lm_values_sql() -> str:
     return f"(VALUES {rows})"
 
 
+def _lm_top75(lm: DataFrame) -> DataFrame:
+    """The backoff-LM rows' shared tail: the top 75 grams per order by
+    (count desc, ngram), with 9-dp probabilities and backoff weights."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("order").orderBy(
+        F.desc("n_count"), F.asc("ngram")
+    )
+    return (
+        lm.withColumn("rank", F.row_number().over(w).cast("int"))
+        .where(F.col("rank") <= 75)
+        .select(
+            "rank",
+            F.col("order").alias("lm_order"),
+            "ngram",
+            "n_count",
+            "ctx_count",
+            F.round("prob", 9).alias("prob"),
+            F.round("backoff", 9).alias("backoff"),
+        )
+        .orderBy("lm_order", "rank")
+    )
+
+
 @register(
     "q_train_backoff_lm",
     """
@@ -2228,29 +2252,11 @@ def _bo_lm_values_sql() -> str:
     ),
 )
 def q_train_backoff_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from metalpipe_spark.operators.text import train_backoff_lm
 
     docs = load_table(spark, sf_dir, "documents", rebalance=True)
     lm = train_backoff_lm(docs, n=2, discount=0.75)
-    w = Window.partitionBy("order").orderBy(
-        F.desc("n_count"), F.asc("ngram")
-    )
-    return (
-        lm.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= 75)
-        .select(
-            "rank",
-            F.col("order").alias("lm_order"),
-            "ngram",
-            "n_count",
-            "ctx_count",
-            F.round("prob", 9).alias("prob"),
-            F.round("backoff", 9).alias("backoff"),
-        )
-        .orderBy("lm_order", "rank")
-    )
+    return _lm_top75(lm)
 
 
 @register(
@@ -2467,30 +2473,12 @@ def q_trained_scorer_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def q_prune_backoff_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from metalpipe_spark.operators.text import prune_lm, train_backoff_lm
 
     docs = load_table(spark, sf_dir, "documents", rebalance=True)
     lm = train_backoff_lm(docs, n=2, discount=0.75)
     pruned = prune_lm(lm, min_counts=2)
-    w = Window.partitionBy("order").orderBy(
-        F.desc("n_count"), F.asc("ngram")
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= 75)
-        .select(
-            "rank",
-            F.col("order").alias("lm_order"),
-            "ngram",
-            "n_count",
-            "ctx_count",
-            F.round("prob", 9).alias("prob"),
-            F.round("backoff", 9).alias("backoff"),
-        )
-        .orderBy("lm_order", "rank")
-    )
+    return _lm_top75(pruned)
 
 
 @register(
@@ -2603,29 +2591,11 @@ def q_prune_backoff_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def q_train_kn_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from metalpipe_spark.operators.text import train_backoff_lm
 
     docs = load_table(spark, sf_dir, "documents", rebalance=True)
     lm = train_backoff_lm(docs, n=2, discount=0.75, smoothing="kn")
-    w = Window.partitionBy("order").orderBy(
-        F.desc("n_count"), F.asc("ngram")
-    )
-    return (
-        lm.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= 75)
-        .select(
-            "rank",
-            F.col("order").alias("lm_order"),
-            "ngram",
-            "n_count",
-            "ctx_count",
-            F.round("prob", 9).alias("prob"),
-            F.round("backoff", 9).alias("backoff"),
-        )
-        .orderBy("lm_order", "rank")
-    )
+    return _lm_top75(lm)
 
 
 # Chen-Goodman modified-KN discount estimation as a SQL fragment —
@@ -2799,29 +2769,11 @@ _MKN_DISC_SQL = """
     ),
 )
 def q_train_mkn_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from metalpipe_spark.operators.text import train_backoff_lm
 
     docs = load_table(spark, sf_dir, "documents", rebalance=True)
     lm = train_backoff_lm(docs, n=2, discount="ney", smoothing="mkn")
-    w = Window.partitionBy("order").orderBy(
-        F.desc("n_count"), F.asc("ngram")
-    )
-    return (
-        lm.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= 75)
-        .select(
-            "rank",
-            F.col("order").alias("lm_order"),
-            "ngram",
-            "n_count",
-            "ctx_count",
-            F.round("prob", 9).alias("prob"),
-            F.round("backoff", 9).alias("backoff"),
-        )
-        .orderBy("lm_order", "rank")
-    )
+    return _lm_top75(lm)
 
 
 # Shared scoring CTEs for the backoff-scorer rows (q_backoff_logprob

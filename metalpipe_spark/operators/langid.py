@@ -32,7 +32,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from metalpipe_spark.operators.dedup import _hash64
-from metalpipe_spark.operators.text import tokens
 
 LANGID_CLASSES = [
     "ar", "de", "en", "es", "fr", "hi", "ja", "ko", "pt", "ru", "zh",
@@ -107,25 +106,11 @@ SCRIPT_BLOCKS: list[tuple[str, str]] = [
 _WS_CLASS = r"[ \t\n\x0B\f\r]"
 
 
-def script_fractions(text: Column) -> list[Column]:
-    """Per-script character fractions of the non-whitespace text — one
-    codegen ``regexp_replace`` + ``length`` per block, no UDF.  The
-    model's robustness feature: an out-of-vocabulary Cyrillic token
-    contributes nothing to the hashed-token sum, but its CHARACTERS
-    still vote for the right script family."""
-    denom = F.greatest(
-        F.length(F.regexp_replace(text, _WS_CLASS, "")), F.lit(1)
-    ).cast("double")
-    return [
-        F.length(F.regexp_replace(text, f"[^{chars}]", "")).cast("double")
-        / denom
-        for _, chars in SCRIPT_BLOCKS
-    ]
-
-
 def script_fractions_sql(text_expr: str) -> list[str]:
-    """DuckDB mirror of :func:`script_fractions` (RE2 needs the 'g'
-    flag — its regexp_replace defaults to first-match-only)."""
+    """Per-script character fractions of the non-whitespace text, as
+    DuckDB list elements — the oracle mirror of the serving regexps
+    (:func:`_spark_fraction_sql`).  RE2 needs the 'g' flag: its
+    regexp_replace defaults to first-match-only."""
     denom = (
         f"greatest(length(regexp_replace({text_expr}, '{_WS_CLASS}', '', 'g')), 1)"
         "::DOUBLE"
@@ -140,31 +125,11 @@ _HASH_SQL = "('0x' || substr(md5({arg}), 1, 15))::BIGINT"
 
 
 def _sarray_lit(items: list[str]) -> Column:
-    """``array<string>`` literal as ONE SQL-text expression (same py4j
-    economics as :func:`_dmatrix_lit`; the fixture generators build one
-    per language per plan)."""
+    """``array<string>`` literal as ONE SQL-text expression: one JVM
+    parse instead of one py4j round-trip per element (the fixture
+    generators build one per language per plan)."""
     quoted = ", ".join("'" + it.replace("\\", "\\\\").replace("'", "''") + "'" for it in items)
     return F.expr(f"array({quoted})")
-
-
-def _dmatrix_lit(rows: list[list[float]]) -> Column:
-    """``array<array<double>>`` literal built as ONE SQL-text
-    expression.  The py4j-per-literal form (``F.array(*[F.array(*[
-    F.lit(v) ...])])``) costs one JVM round-trip per element — for the
-    11x256 weight matrix that was ~1.3 s of DRIVER time per plan build
-    (the catalog row's bench median was 3x its executor time before
-    this).  ``repr(float)`` round-trips exactly and Spark's ``D``
-    suffix parses it back to the identical double, so the plan is
-    bit-identical to the nested-literal form."""
-    sql = "array(" + ", ".join(
-        "array(" + ", ".join(f"{float(v)!r}D" for v in row) + ")"
-        for row in rows
-    ) + ")"
-    return F.expr(sql)
-
-
-def _pick_hash(seed: Column) -> Column:
-    return _hash64(seed)
 
 
 def synthetic_multilingual_text(
@@ -176,7 +141,7 @@ def synthetic_multilingual_text(
     byte-identical to :func:`synthetic_multilingual_sql`."""
     d = F.col(id_col).cast("string")
     length = (
-        F.pmod(_pick_hash(F.concat(d, F.lit(f"{salt}:len"))), F.lit(9)) + 8
+        F.pmod(_hash64(F.concat(d, F.lit(f"{salt}:len"))), F.lit(9)) + 8
     ).cast("int")
 
     def sentence(words: list[str]) -> Column:
@@ -184,7 +149,7 @@ def synthetic_multilingual_text(
         warr = _sarray_lit(words)
 
         def pick(i: Column) -> Column:
-            h = _pick_hash(F.concat(d, F.lit(f"{salt}:"), i.cast("string")))
+            h = _hash64(F.concat(d, F.lit(f"{salt}:"), i.cast("string")))
             return F.element_at(warr, F.pmod(h, F.lit(v)).cast("int") + 1)
 
         return F.array_join(
@@ -230,125 +195,25 @@ def synthetic_multilingual_sql(
     )
 
 
-def hashed_multiclass_logits(
-    text: Column | str,
-    classes: list[str],
-    weights: dict[str, list[float]],
-    biases: dict[str, float],
-    round_to: int = 6,
-    script_weights: dict[str, list[float]] | None = None,
-) -> Column:
-    """Per-class logits as ``array<double>`` (class order = ``classes``):
-    ``logit_c = bias_c + (sum over tokens of W_c[h(tok) mod D]) / n`` —
-    the multiclass form of ``hashed_linear_logit`` in ONE pass: tokens
-    hash once (``transform``), then a single ``aggregate`` fold threads
-    an array accumulator through ``zip_with``.  Per-class addition order
-    is token order, so the C-fold SQL oracle reproduces every bit.
-    Logits are rounded so the downstream argmax can never flip on
-    engine-varying last-bit noise."""
-    dim = len(weights[classes[0]])
-    col = F.coalesce(F.col(text) if isinstance(text, str) else text, F.lit(""))
-    toks = tokens(col)
-    w2 = _dmatrix_lit([weights[c] for c in classes])
-    init = F.array(*[F.lit(0.0) for _ in classes])
-    idxs = F.transform(
-        toks, lambda t: F.pmod(_hash64(t), F.lit(dim)).cast("int") + F.lit(1)
-    )
-    total = F.aggregate(
-        idxs,
-        init,
-        lambda acc, ix: F.zip_with(
-            acc, w2, lambda a, wc: a + F.element_at(wc, ix)
-        ),
-    )
-    n = F.greatest(F.size(toks), F.lit(1))
-    biases_arr = F.array(*[F.lit(float(biases[c])) for c in classes])
-    if script_weights is None:
-        return F.zip_with(
-            biases_arr, total, lambda b, s: F.round(b + s / n, round_to)
-        )
-    # Let-bind (total, fracs, n) through a SINGLE-ELEMENT transform so
-    # each evaluates exactly once per row: the logits expression is one
-    # interpreted tree (HOF parent), where repeated subtrees are NOT
-    # common-subexpression-eliminated — an earlier formulation that
-    # referenced each frac once per class ran the 7 script regexps 7×C
-    # times per row and measured 3.2× slower on the catalog row.  Bound
-    # lambda variables are plain value reads, so the C×S arithmetic
-    # below costs what it looks like.  Addition order per class is
-    # unchanged (bias, then script terms in block order, then the token
-    # term) — the SQL oracle and the trainer mirror it exactly, so
-    # rounding can never diverge.
-    packed = F.array(
-        F.struct(
-            total.alias("t"),
-            F.array(*script_fractions(col)).alias("f"),
-            n.alias("n"),
-        )
-    )
-
-    def build(p: Column) -> Column:
-        outs = []
-        for ci, c in enumerate(classes):
-            acc: Column = F.lit(float(biases[c]))
-            for j in range(len(SCRIPT_BLOCKS)):
-                acc = acc + F.lit(float(script_weights[c][j])) * F.element_at(
-                    p["f"], j + 1
-                )
-            outs.append(
-                F.round(acc + F.element_at(p["t"], ci + 1) / p["n"], round_to)
-            )
-        return F.array(*outs)
-
-    return F.element_at(F.transform(packed, build), 1)
-
-
 def detect_language_model(
-    text: Column | str,
+    text: str,
     classes: list[str] | None = None,
     weights: dict[str, list[float]] | None = None,
     biases: dict[str, float] | None = None,
     script_weights: dict[str, list[float]] | None = None,
 ) -> Column:
-    """Predicted language code: argmax over the rounded logits, first
-    class wins ties (``array_position`` returns the first index — the
-    same deterministic tie-break in DuckDB's ``list_position``).
-    Defaults to the pinned trained weights (langid_weights.py).
-
-    A string column name with script-weighted weights takes the
-    one-``F.expr`` fast path (see :func:`detect_language_routed`)."""
+    """Predicted language code of the ``text`` column: argmax over the
+    rounded per-class logits ``bias_c + sum_j sw_c[j]*frac_j + (sum over
+    whitespace tokens of W_c[h(tok) mod D]) / n``, first class wins ties
+    (``array_position`` returns the first index — the same deterministic
+    tie-break in DuckDB's ``list_position``).  Defaults to the pinned
+    trained weights (langid_weights.py); a model without
+    ``script_weights`` drops the script terms."""
     if classes is None:
         classes, weights, biases, script_weights = _langid_defaults()
-    if isinstance(text, str) and script_weights is not None:
-        return F.expr(
-            _argmax_spark_sql(
-                hashed_multiclass_logits_spark_sql(
-                    f"`{text}`", classes, weights, biases, script_weights
-                ),
-                classes,
-            )
-        )
-    logits = hashed_multiclass_logits(
-        text, classes, weights, biases, script_weights=script_weights
+    return F.expr(
+        _token_pred_sql(f"`{text}`", classes, weights, biases, script_weights)
     )
-    return _argmax_class(logits, classes)
-
-
-def _argmax_class(logits: Column, classes: list[str]) -> Column:
-    """Class label at the logits argmax — with the logits LET-BOUND
-    through a single-element transform first: ``array_position(logits,
-    array_max(logits))`` references the tree twice, and Spark's
-    subexpression elimination EXCLUDES lambda-bearing trees
-    (EquivalentExpressions rejects LambdaVariable), so the unbound form
-    re-runs the entire serving fold per reference — measured 1.7x on
-    the catalog rows."""
-    carr = F.array(*[F.lit(c) for c in classes])
-    packed = F.array(F.struct(logits.alias("lg")))
-
-    def pick(p: Column) -> Column:
-        pos = F.array_position(p["lg"], F.array_max(p["lg"])).cast("int")
-        return F.element_at(carr, pos)
-
-    return F.element_at(F.transform(packed, pick), 1)
 
 
 def langid_logits_sql(
@@ -372,7 +237,7 @@ def langid_logits_sql(
         h = _HASH_SQL.format(arg="tok")
         base = f"'{float(biases[c])!r}'::DOUBLE"
         if script_weights:
-            # Same left-to-right order as the Column form: SQL + is
+            # Same left-to-right order as the Spark fold: SQL + is
             # left-associative and * binds tighter, so the plain
             # rendering parses to ((b + w1*f1) + ...) + reduce/n.
             for j, f in enumerate(fracs):
@@ -498,7 +363,7 @@ def train_hashed_langid(
             j = int(hashlib.md5(t.encode()).hexdigest()[:15], 16) % d
             x[j] += 1.0
         n = max(len(toks), 1)
-        # Script fractions mirror script_fractions() exactly:
+        # Script fractions mirror _spark_script_fracs_sql() exactly:
         # BMP-only fixture, so len() == Spark's UTF-16 length.
         nonws = ws_re.sub("", text)
         denom = float(max(len(nonws), 1))
@@ -554,7 +419,7 @@ def synthetic_cjk_text(
     to :func:`synthetic_cjk_sql`."""
     d = F.col(id_col).cast("string")
     length = (
-        F.pmod(_pick_hash(F.concat(d, F.lit(f"{salt}:clen"))), F.lit(13)) + 12
+        F.pmod(_hash64(F.concat(d, F.lit(f"{salt}:clen"))), F.lit(13)) + 12
     ).cast("int")
 
     def sentence(chars: str) -> Column:
@@ -562,7 +427,7 @@ def synthetic_cjk_text(
         carr = _sarray_lit(list(chars))
 
         def pick(i: Column) -> Column:
-            h = _pick_hash(F.concat(d, F.lit(f"{salt}:c"), i.cast("string")))
+            h = _hash64(F.concat(d, F.lit(f"{salt}:c"), i.cast("string")))
             return F.element_at(carr, F.pmod(h, F.lit(v)).cast("int") + 1)
 
         return F.array_join(
@@ -608,111 +473,23 @@ def synthetic_cjk_sql(
     )
 
 
-def hashed_cjk_logits(
-    text: Column | str,
-    classes: list[str],
-    weights: dict[str, list[float]],
-    biases: dict[str, float],
-    script_weights: dict[str, list[float]],
-    round_to: int = 6,
-) -> Column:
-    """Per-class logits over hashed CHARACTER-BIGRAM features of the
-    whitespace-stripped text (plus the same script-block fractions the
-    token model uses): ``logit_c = bias_c + sum_j sw_c[j]*frac_j +
-    (sum over bigrams of W_c[h(gram) mod D]) / n_grams``.
-
-    Serving is pure JVM HOF arithmetic, same posture as
-    :func:`hashed_multiclass_logits`.  TWO let-binding levels (the
-    interpreted-HOF CSE rule): the stripped string + script fractions
-    bind through the outer single-element transform (the regexp_replace
-    would otherwise re-run per reference), and the gram-fold total +
-    gram count bind through an inner one (the fold would otherwise
-    re-run once per class)."""
-    dim = len(weights[classes[0]])
-    col = F.coalesce(F.col(text) if isinstance(text, str) else text, F.lit(""))
-    stripped = F.regexp_replace(col, _WS_CLASS, "")
-    w2 = _dmatrix_lit([weights[c] for c in classes])
-    init = F.array(*[F.lit(0.0) for _ in classes])
-    outer = F.array(
-        F.struct(
-            stripped.alias("s"),
-            F.array(*script_fractions(col)).alias("f"),
-        )
-    )
-
-    def build_outer(p: Column) -> Column:
-        s = p["s"]
-        # sequence(1, 0) would count DOWN in Spark — guard short strings
-        # to an empty gram set (aggregate over [] returns the zero).
-        grams = F.when(
-            F.length(s) >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.length(s) - 1),
-                lambda i: s.substr(i, F.lit(2)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        idxs = F.transform(
-            grams,
-            lambda g: F.pmod(_hash64(g), F.lit(dim)).cast("int") + F.lit(1),
-        )
-        total = F.aggregate(
-            idxs,
-            init,
-            lambda acc, ix: F.zip_with(
-                acc, w2, lambda a, wc: a + F.element_at(wc, ix)
-            ),
-        )
-        n = F.greatest(F.length(s) - 1, F.lit(1))
-        inner = F.array(
-            F.struct(total.alias("t"), p["f"].alias("f"), n.alias("n"))
-        )
-
-        def build_inner(q: Column) -> Column:
-            outs = []
-            for ci, c in enumerate(classes):
-                acc: Column = F.lit(float(biases[c]))
-                for j in range(len(SCRIPT_BLOCKS)):
-                    acc = acc + F.lit(
-                        float(script_weights[c][j])
-                    ) * F.element_at(q["f"], j + 1)
-                outs.append(
-                    F.round(
-                        acc + F.element_at(q["t"], ci + 1) / q["n"], round_to
-                    )
-                )
-            return F.array(*outs)
-
-        return F.element_at(F.transform(inner, build_inner), 1)
-
-    return F.element_at(F.transform(outer, build_outer), 1)
-
-
 def detect_language_cjk(
-    text: Column | str,
+    text: str,
     classes: list[str] | None = None,
     weights: dict[str, list[float]] | None = None,
     biases: dict[str, float] | None = None,
     script_weights: dict[str, list[float]] | None = None,
 ) -> Column:
-    """Predicted CJK language code over unsegmented text: argmax of
-    :func:`hashed_cjk_logits`, first class wins ties.  Defaults to the
-    pinned trained weights (langid_weights.py).
-
-    A string column name takes the one-``F.expr`` fast path (see
-    :func:`detect_language_routed`)."""
+    """Predicted CJK language code of the unsegmented ``text`` column:
+    argmax over the rounded logits ``bias_c + sum_j sw_c[j]*frac_j +
+    (sum over char bigrams of the whitespace-stripped text of
+    W_c[h(gram) mod D]) / n_grams``, first class wins ties.  Defaults to
+    the pinned trained weights (langid_weights.py)."""
     if classes is None:
         classes, weights, biases, script_weights = _cjk_defaults()
-    if isinstance(text, str):
-        return F.expr(
-            _argmax_spark_sql(
-                hashed_cjk_logits_spark_sql(
-                    f"`{text}`", classes, weights, biases, script_weights
-                ),
-                classes,
-            )
-        )
-    logits = hashed_cjk_logits(text, classes, weights, biases, script_weights)
-    return _argmax_class(logits, classes)
+    return F.expr(
+        _cjk_pred_sql(f"`{text}`", classes, weights, biases, script_weights)
+    )
 
 
 # han + kana + hangul as ONE character class (route predicate).
@@ -723,20 +500,6 @@ _CJK_BLOCK_CHARS = "".join(
 )
 
 ROUTE_THRESHOLD = 0.3
-
-
-def cjk_fraction(text: Column) -> Column:
-    """Fraction of non-whitespace characters in the kana/hangul/han
-    blocks — one regexp_replace + length, the routing predicate."""
-    denom = F.greatest(
-        F.length(F.regexp_replace(text, _WS_CLASS, "")), F.lit(1)
-    ).cast("double")
-    return (
-        F.length(F.regexp_replace(text, f"[^{_CJK_BLOCK_CHARS}]", "")).cast(
-            "double"
-        )
-        / denom
-    )
 
 
 def cjk_fraction_sql(text_expr: str) -> str:
@@ -750,7 +513,7 @@ def cjk_fraction_sql(text_expr: str) -> str:
     )
 
 
-def detect_language_routed(text: Column | str) -> Column:
+def detect_language_routed(text: str) -> Column:
     """Language ID that covers SEGMENTED and UNSEGMENTED text: documents
     whose kana/hangul/han character fraction reaches
     ``ROUTE_THRESHOLD`` go to the char-bigram CJK model
@@ -759,29 +522,18 @@ def detect_language_routed(text: Column | str) -> Column:
     evaluates only the taken branch per row, so Latin-script corpora
     pay one extra regexp, not the bigram fold.
 
-    A STRING column name takes the one-``F.expr`` fast path (both
-    serving trees rendered as a single SQL text — r17: the
-    Column-by-Column build was ~1.3 s of driver py4j per plan,
-    the whole local cost of the langid rows); Column input keeps the
-    Column builder.  Parity of the two paths is pinned exactly in
-    tests/test_langid.py."""
-    if isinstance(text, str):
-        txt = f"`{text}`"
-        ctxt = f"coalesce({txt}, '')"
-        cjk = _argmax_spark_sql(
-            hashed_cjk_logits_spark_sql(txt), _cjk_defaults()[0]
-        )
-        tok = _argmax_spark_sql(
-            hashed_multiclass_logits_spark_sql(txt), _langid_defaults()[0]
-        )
-        return F.expr(
-            f"CASE WHEN {_cjk_fraction_spark_sql(ctxt)} >= "
-            f"{float(ROUTE_THRESHOLD)!r}D THEN {cjk} ELSE {tok} END"
-        )
-    col = F.coalesce(text, F.lit(""))
-    return F.when(
-        cjk_fraction(col) >= ROUTE_THRESHOLD, detect_language_cjk(col)
-    ).otherwise(detect_language_model(col))
+    Both serving trees and the route predicate are rendered as ONE SQL
+    text that the JVM parses in one call (r17: building the same tree
+    Column by Column was ~1.3 s of driver py4j per plan, the whole
+    local cost of the langid rows)."""
+    txt = f"`{text}`"
+    frac = _spark_fraction_sql(f"coalesce({txt}, '')", _CJK_BLOCK_CHARS)
+    cjk = _cjk_pred_sql(txt, *_cjk_defaults())
+    tok = _token_pred_sql(txt, *_langid_defaults())
+    return F.expr(
+        f"CASE WHEN {frac} >= "
+        f"{float(ROUTE_THRESHOLD)!r}D THEN {cjk} ELSE {tok} END"
+    )
 
 
 def _langid_defaults():
@@ -823,35 +575,35 @@ def _spark_hash64_sql(arg: str) -> str:
     return f"CAST(conv(substring(md5({arg}), 1, 15), 16, 10) AS BIGINT)"
 
 
-def _spark_script_fracs_sql(txt: str) -> list[str]:
-    """Spark-SQL mirror of :func:`script_fractions` (cast placement
-    identical: numerator length cast to double; denominator greatest
-    of ints, then cast)."""
-    denom = (
-        f"CAST(greatest(length(regexp_replace({txt}, "
-        f"{_spark_sql_str(_WS_CLASS)}, '')), 1) AS DOUBLE)"
-    )
-    return [
-        f"CAST(length(regexp_replace({txt}, "
-        f"{_spark_sql_str('[^' + chars + ']')}, '')) AS DOUBLE) / {denom}"
-        for _, chars in SCRIPT_BLOCKS
-    ]
-
-
-def _cjk_fraction_spark_sql(txt: str) -> str:
-    """Spark-SQL mirror of :func:`cjk_fraction`."""
+def _spark_fraction_sql(txt: str, chars: str) -> str:
+    """Fraction of the non-whitespace characters of ``txt`` that fall in
+    the character class ``[chars]`` — one ``regexp_replace`` + ``length``,
+    no UDF.  Cast placement mirrors the trainer and the DuckDB oracle:
+    numerator length cast to double; denominator greatest of ints, then
+    cast."""
     denom = (
         f"CAST(greatest(length(regexp_replace({txt}, "
         f"{_spark_sql_str(_WS_CLASS)}, '')), 1) AS DOUBLE)"
     )
     return (
         f"CAST(length(regexp_replace({txt}, "
-        f"{_spark_sql_str('[^' + _CJK_BLOCK_CHARS + ']')}, '')) AS DOUBLE)"
+        f"{_spark_sql_str('[^' + chars + ']')}, '')) AS DOUBLE)"
         f" / {denom}"
     )
 
 
+def _spark_script_fracs_sql(txt: str) -> list[str]:
+    """Per-script character fractions (one per ``SCRIPT_BLOCKS`` entry)
+    — the model's robustness feature: an out-of-vocabulary Cyrillic
+    token contributes nothing to the hashed sum, but its CHARACTERS
+    still vote for the right script family."""
+    return [_spark_fraction_sql(txt, chars) for _, chars in SCRIPT_BLOCKS]
+
+
 def _dmatrix_sql(rows: list[list[float]]) -> str:
+    """``array<array<double>>`` literal text.  ``repr(float)``
+    round-trips exactly and Spark's ``D`` suffix parses it back to the
+    identical double."""
     return (
         "array("
         + ", ".join(
@@ -863,8 +615,13 @@ def _dmatrix_sql(rows: list[list[float]]) -> str:
 
 
 def _argmax_spark_sql(logits_sql: str, classes: list[str]) -> str:
-    """Spark-SQL mirror of :func:`_argmax_class` (same single-element
-    transform let-binding, same first-wins ``array_position``)."""
+    """Class label at the logits argmax, first class wins ties — with
+    the logits LET-BOUND through a single-element transform first:
+    ``array_position(logits, array_max(logits))`` references the tree
+    twice, and Spark's subexpression elimination EXCLUDES
+    lambda-bearing trees (EquivalentExpressions rejects
+    LambdaVariable), so the unbound form re-runs the entire serving
+    fold per reference — measured 1.7x on the catalog rows."""
     carr = "array(" + ", ".join(_spark_sql_str(c) for c in classes) + ")"
     return (
         f"element_at(transform(array(named_struct('lg', {logits_sql})), "
@@ -873,29 +630,42 @@ def _argmax_spark_sql(logits_sql: str, classes: list[str]) -> str:
     )
 
 
-def hashed_multiclass_logits_spark_sql(
-    txt: str,
-    classes: list[str] | None = None,
-    weights: dict[str, list[float]] | None = None,
-    biases: dict[str, float] | None = None,
-    script_weights: dict[str, list[float]] | None = None,
-    round_to: int = 6,
+def _logits_fold_sql(
+    grams: str,
+    n: str,
+    fracs: str,
+    gram_var: str,
+    var: str,
+    classes: list[str],
+    weights: dict[str, list[float]],
+    biases: dict[str, float],
+    script_weights: dict[str, list[float]] | None,
 ) -> str:
-    """ONE Spark-SQL text of :func:`hashed_multiclass_logits`'s
-    script-weighted serving tree — operation-for-operation the tree the
-    Column builder constructs (same HOF fold, same let-binding struct,
-    same literal spellings via ``repr(float)`` + ``D``), parsed by the
-    JVM in one call instead of thousands of py4j round-trips.  Parity
-    pinned in tests/test_langid.py."""
-    if classes is None:
-        classes, weights, biases, script_weights = _langid_defaults()
-    assert script_weights is not None
+    """The hashed-softmax logits fold both models serve, as Spark-SQL
+    text: ``logit_c = bias_c + sum_j sw_c[j]*frac_j + (sum over grams
+    of W_c[h(gram) mod D]) / n``, rounded to 6 places (the oracle's
+    ``round_to``).  ``grams`` is the gram-array SQL, ``n`` the
+    gram-count SQL and ``fracs`` the script-fraction array SQL;
+    ``gram_var`` names the hash lambda's variable and ``var`` the
+    let-bound struct.
+
+    Grams hash once (``transform``), then a single ``aggregate`` threads
+    an array accumulator through ``zip_with``, so each class sums in
+    gram order and the C-fold DuckDB oracle reproduces every bit.
+    (total, fracs, n) are let-bound through a SINGLE-ELEMENT transform
+    so each evaluates exactly once per row: the logits are one
+    interpreted tree (HOF parent), where repeated subtrees are NOT
+    common-subexpression-eliminated — an earlier formulation that
+    referenced each frac once per class ran the 7 script regexps 7×C
+    times per row and measured 3.2× slower on the catalog row.  Per
+    class the addition order is bias, script terms in block order, then
+    the gram term — the trainer and the oracle mirror it, and the
+    rounding keeps the argmax off engine-varying last-bit noise.
+    Without ``script_weights`` the script terms (and fracs) drop out."""
     dim = len(weights[classes[0]])
-    col = f"coalesce({txt}, '')"
-    toks = f"split({col}, {_spark_sql_str(chr(92) + 's+')})"
     idxs = (
-        f"transform({toks}, t -> "
-        f"CAST(pmod({_spark_hash64_sql('t')}, {dim}) AS INT) + 1)"
+        f"transform({grams}, {gram_var} -> "
+        f"CAST(pmod({_spark_hash64_sql(gram_var)}, {dim}) AS INT) + 1)"
     )
     init = "array(" + ", ".join("0.0D" for _ in classes) + ")"
     w2 = _dmatrix_sql([weights[c] for c in classes])
@@ -903,86 +673,69 @@ def hashed_multiclass_logits_spark_sql(
         f"aggregate({idxs}, {init}, (acc, ix) -> "
         f"zip_with(acc, {w2}, (a, wc) -> a + element_at(wc, ix)))"
     )
-    n = f"greatest(size({toks}), 1)"
-    fr = _spark_script_fracs_sql(col)
-    packed = (
-        f"array(named_struct('t', {total}, "
-        f"'f', array({', '.join(fr)}), 'n', {n}))"
-    )
     outs = []
     for ci, c in enumerate(classes):
         base = f"{float(biases[c])!r}D"
-        for j in range(len(SCRIPT_BLOCKS)):
-            base += (
-                f" + {float(script_weights[c][j])!r}D"
-                f" * element_at(p.f, {j + 1})"
-            )
+        for j, sw in enumerate(script_weights[c] if script_weights else []):
+            base += f" + {float(sw)!r}D * element_at({var}.f, {j + 1})"
         outs.append(
-            f"round({base} + element_at(p.t, {ci + 1}) / p.n, {round_to})"
+            f"round({base} + element_at({var}.t, {ci + 1}) / {var}.n, 6)"
         )
+    f_field = f", 'f', {fracs}" if script_weights else ""
     return (
-        f"element_at(transform({packed}, p -> "
-        f"array({', '.join(outs)})), 1)"
+        f"element_at(transform(array(named_struct('t', {total}{f_field}, "
+        f"'n', {n})), {var} -> array({', '.join(outs)})), 1)"
     )
 
 
-def hashed_cjk_logits_spark_sql(
+def _token_pred_sql(
     txt: str,
-    classes: list[str] | None = None,
-    weights: dict[str, list[float]] | None = None,
-    biases: dict[str, float] | None = None,
-    script_weights: dict[str, list[float]] | None = None,
-    round_to: int = 6,
+    classes: list[str],
+    weights: dict[str, list[float]],
+    biases: dict[str, float],
+    script_weights: dict[str, list[float]] | None,
 ) -> str:
-    """ONE Spark-SQL text of :func:`hashed_cjk_logits` — same two
-    let-binding levels (stripped text + fractions outer, gram total +
-    count inner), same guard for <2-char strings.  Parity pinned in
-    tests/test_langid.py."""
-    if classes is None:
-        classes, weights, biases, script_weights = _cjk_defaults()
-    assert script_weights is not None
-    dim = len(weights[classes[0]])
+    """Whitespace-token model: grams are ``split(text, '\\s+')``."""
+    col = f"coalesce({txt}, '')"
+    toks = f"split({col}, {_spark_sql_str(chr(92) + 's+')})"
+    fracs = f"array({', '.join(_spark_script_fracs_sql(col))})"
+    logits = _logits_fold_sql(
+        toks, f"greatest(size({toks}), 1)", fracs, "t", "p",
+        classes, weights, biases, script_weights,
+    )
+    return _argmax_spark_sql(logits, classes)
+
+
+def _cjk_pred_sql(
+    txt: str,
+    classes: list[str],
+    weights: dict[str, list[float]],
+    biases: dict[str, float],
+    script_weights: dict[str, list[float]] | None,
+) -> str:
+    """Char-bigram model.  An outer let-binding ``p`` holds the
+    whitespace-stripped text ``s`` and the script fractions ``f`` (the
+    regexp_replace would otherwise re-run per reference); the shared
+    fold nests inside it as ``q``.  ``sequence(1, 0)`` would count DOWN
+    in Spark, so strings shorter than 2 chars get an empty gram set
+    (aggregate over [] returns the zero)."""
     col = f"coalesce({txt}, '')"
     stripped = f"regexp_replace({col}, {_spark_sql_str(_WS_CLASS)}, '')"
-    fr = _spark_script_fracs_sql(col)
-    outer = (
-        f"array(named_struct('s', {stripped}, 'f', array({', '.join(fr)})))"
-    )
+    fracs = ", ".join(_spark_script_fracs_sql(col))
     grams = (
         "CASE WHEN length(p.s) >= 2 THEN "
         "transform(sequence(1, length(p.s) - 1), i -> substring(p.s, i, 2)) "
         "ELSE CAST(array() AS ARRAY<STRING>) END"
     )
-    idxs = (
-        f"transform({grams}, g -> "
-        f"CAST(pmod({_spark_hash64_sql('g')}, {dim}) AS INT) + 1)"
+    inner = _logits_fold_sql(
+        grams, "greatest(length(p.s) - 1, 1)", "p.f", "g", "q",
+        classes, weights, biases, script_weights,
     )
-    init = "array(" + ", ".join("0.0D" for _ in classes) + ")"
-    w2 = _dmatrix_sql([weights[c] for c in classes])
-    total = (
-        f"aggregate({idxs}, {init}, (acc, ix) -> "
-        f"zip_with(acc, {w2}, (a, wc) -> a + element_at(wc, ix)))"
+    logits = (
+        f"element_at(transform(array(named_struct('s', {stripped}, "
+        f"'f', array({fracs}))), p -> {inner}), 1)"
     )
-    inner = (
-        f"array(named_struct('t', {total}, 'f', p.f, "
-        "'n', greatest(length(p.s) - 1, 1)))"
-    )
-    outs = []
-    for ci, c in enumerate(classes):
-        base = f"{float(biases[c])!r}D"
-        for j in range(len(SCRIPT_BLOCKS)):
-            base += (
-                f" + {float(script_weights[c][j])!r}D"
-                f" * element_at(q.f, {j + 1})"
-            )
-        outs.append(
-            f"round({base} + element_at(q.t, {ci + 1}) / q.n, {round_to})"
-        )
-    inner_expr = (
-        f"element_at(transform({inner}, q -> "
-        f"array({', '.join(outs)})), 1)"
-    )
-    return f"element_at(transform({outer}, p -> {inner_expr}), 1)"
+    return _argmax_spark_sql(logits, classes)
 
 
 def cjk_logits_sql(
@@ -1041,7 +794,7 @@ def train_hashed_cjk_langid(
     dict[str, list[float]],
 ]:
     """Fit the CJK char-bigram softmax the serving fold evaluates —
-    features mirror :func:`hashed_cjk_logits` exactly (md5-hashed
+    features mirror :func:`detect_language_cjk` exactly (md5-hashed
     bigram counts over the whitespace-stripped text, normalized by the
     gram count, plus the ``SCRIPT_BLOCKS`` character fractions)."""
     import hashlib

@@ -503,32 +503,15 @@ def ivf_search(
     index — the serving twin of :func:`ivf_topk` (same cells, same
     multi-probe ranking, same cogrouped BLAS scoring; no self-exclusion).
     Output: (query_id, vec_id, cosine_sim, rnk)."""
-    assigned, centroids = ivf_assign(df, k_cells=k_cells, vec_col=vec_col, seed=seed)
-    build = assigned.select(
-        F.col("cell"),
-        F.col(id_col).alias("d2"),
-        F.col(vec_col).cast("array<double>").alias("v2"),
-    )
-    qpre = queries.select(
-        F.col(query_id_col).alias("d1"),
-        F.col(query_vec_col).cast("array<double>").alias("_vd"),
-    )
-    probe = qpre.select(
-        F.col("d1"),
-        F.col("_vd").alias("v1"),
-        F.explode(_probe_cells(centroids, n_probe)).alias("cell"),
-    )
-    out = _ivf_cogroup_topk(
-        probe, build, k=k,
-        id_type=queries.schema[query_id_col].dataType.simpleString(),
-        exclude_self=False,
-        build_id_type=df.schema[id_col].dataType.simpleString(),
-    )
-    return out.select(
-        F.col("d1").alias(query_id_col),
-        F.col("d2").alias(id_col),
-        "cosine_sim",
-        "rnk",
+    return ivf_search_prebuilt(
+        ivf_assign(df, k_cells=k_cells, vec_col=vec_col, seed=seed),
+        queries,
+        k=k,
+        n_probe=n_probe,
+        vec_col=vec_col,
+        id_col=id_col,
+        query_vec_col=query_vec_col,
+        query_id_col=query_id_col,
     )
 
 
@@ -815,7 +798,8 @@ def ivf_search_prebuilt(
     """Serve a query batch against a prebuilt/loaded IVF index — no
     k-means fit on the serving path (the whole point of an index).
     Same multi-probe ranking and cogrouped BLAS scoring as
-    :func:`ivf_search`."""
+    :func:`ivf_topk`; :func:`ivf_search` is this over a fresh
+    :func:`ivf_assign`."""
     assigned, centroids = index
     build = assigned.select(
         F.col("cell"),
