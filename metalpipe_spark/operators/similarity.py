@@ -1575,6 +1575,22 @@ def _assign_with_matrix(
     )
 
 
+def _inherit_target(spark: SparkSession, fn):
+    """``fn`` wrapped to carry the caller's Spark local properties into a
+    worker thread, or ``fn`` itself when PySpark cannot wrap it."""
+    from pyspark import inheritable_thread_target
+
+    try:
+        return inheritable_thread_target(spark)(fn)
+    except (TypeError, AssertionError):
+        # Pinned-thread mode off: the session form degrades to
+        # returning the session itself (TypeError when called);
+        # properties are shared JVM-side there anyway, so run the
+        # target as-is.  PySpark's own asserts (no active
+        # SparkContext) fail the same way.
+        return fn
+
+
 def incremental_semantic_dedup_scaled(
     new_docs: DataFrame,
     store: DataFrame | None,
@@ -1663,25 +1679,15 @@ def incremental_semantic_dedup_scaled(
     # not reach an in-flight checkpoint job (ADVICE r17).
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import inheritable_thread_target
-
     spark = new_docs.sparkSession
-
-    def _inherit(fn):
-        try:
-            return inheritable_thread_target(spark)(fn)
-        except TypeError:
-            # Pinned-thread mode off: the session form degrades to
-            # returning the session itself; properties are shared
-            # JVM-side there anyway, so run the target as-is.
-            return fn
-
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_bs = pool.submit(
-            _inherit(lambda: materialize(batch_survivors, eager=True))
+            _inherit_target(
+                spark, lambda: materialize(batch_survivors, eager=True)
+            )
         )
         f_ss = pool.submit(
-            _inherit(lambda: materialize(surv_sigs, eager=True))
+            _inherit_target(spark, lambda: materialize(surv_sigs, eager=True))
         )
         batch_survivors = f_bs.result()
         surv_sigs = f_ss.result()

@@ -16,6 +16,11 @@ default posture): same oracles, strict overflow/cast semantics — a
 query that relies on silent wrapping or lenient casts fails loudly
 here instead of diverging from the oracle at scale.
 
+The session comes from ``metalpipe_spark.session.get_spark``, so both
+modes run the engine's own defaults (RocksDB state store, the local
+streaming checkpoint manager); the sweep's shuffle-partition, UI,
+timezone and ANSI settings are passed as overrides.
+
 Prints one PASS/FAIL line per row using the same comparator as
 tests/oracle_utils (sorted columns, order-insensitive row compare,
 driver strictness checks), and exits non-zero on any failure.
@@ -49,18 +54,18 @@ def main() -> int:
     ansi = "--ansi" in argv
     argv = [a for a in argv if a != "--ansi"]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
-    from pyspark.sql import SparkSession
+    from metalpipe_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '16')}]"
-        )
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "true" if ansi else "false")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="oracle-sweep",
+        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '16')}]",
+        conf={
+            "spark.sql.shuffle.partitions": "16",
+            "spark.ui.enabled": "false",
+            "spark.ui.showConsoleProgress": "false",
+            "spark.sql.session.timeZone": "UTC",
+            "spark.sql.ansi.enabled": "true" if ansi else "false",
+        },
     )
     if ansi:
         print("(ANSI mode: spark.sql.ansi.enabled=true)")

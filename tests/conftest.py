@@ -80,3 +80,15 @@ def reliable_checkpoints(spark, tmp_path):
     finally:
         getattr(jsc, "checkpointDir_$eq")(prev)
     assert sc.getCheckpointDir() is None
+
+
+def checkpoint_manager_class(spark, directory) -> str:
+    """The class Spark picks to write streaming checkpoints under the
+    local ``directory`` with the session's current conf."""
+    jvm = spark.sparkContext._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    created = manager.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(f"file://{directory}"),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    return created.getClass().getName()

@@ -4104,3 +4104,38 @@ def test_lm_parquet_exchange_and_shuffle_scorer(spark, tmp_path):
         write_lm_parquet(
             lm.where("order <> 1"), str(tmp_path / "gap")
         )
+
+
+@pytest.mark.parametrize("error", [TypeError, AssertionError])
+def test_inherit_target_falls_back_to_plain_target(monkeypatch, error):
+    """When PySpark cannot wrap a thread target (TypeError with pinned
+    threads off, AssertionError from its own checks), the semantic-dedup
+    worker threads run the target as-is instead of failing the batch."""
+    import pyspark
+
+    from metalpipe_spark.operators.similarity import _inherit_target
+
+    def refuse(session):
+        raise error("cannot wrap")
+
+    monkeypatch.setattr(pyspark, "inheritable_thread_target", refuse)
+
+    def target():
+        return 7
+
+    assert _inherit_target(object(), target) is target
+
+
+def test_inherit_target_wraps_when_pyspark_can(monkeypatch):
+    import pyspark
+
+    from metalpipe_spark.operators.similarity import _inherit_target
+
+    wrapped = []
+    monkeypatch.setattr(
+        pyspark,
+        "inheritable_thread_target",
+        lambda session: lambda fn: wrapped.append(fn) or (lambda: fn() + 1),
+    )
+    got = _inherit_target(object(), lambda: 1)
+    assert len(wrapped) == 1 and got() == 2

@@ -1117,3 +1117,66 @@ def test_lm_train_prune_export_score_yaml(spark, tmp_path):
     p2 = compile_pipeline(spark, config2)
     got2 = {r["doc_id"]: r["mean_logprob"] for r in p2.dataframes["ppl"].collect()}
     assert got2 == got
+
+
+def test_detect_language_model_yaml_nodes(spark, tmp_path):
+    """Two DetectLanguageModel nodes from YAML: the pinned model on the
+    default ``text`` column, then a custom bias-only model (no
+    ``script_weights``) read from ``body`` into ``output_key``.  Both
+    label columns equal ``detect_language_model`` called directly."""
+    import json
+
+    from metalpipe_spark.operators.langid import detect_language_model
+
+    rows = [
+        (0, "the quick brown fox jumps over the lazy dog", "a b c"),
+        (1, "el perro come la comida en la casa", "d e f g"),
+        (2, "der Hund isst das Essen im Haus", "x"),
+        (3, "これは日本語の文章です", "aa bb aa"),
+        (4, None, None),
+        (5, "", "q r s t u v"),
+    ]
+    src = tmp_path / "docs"
+    spark.createDataFrame(rows, "doc_id int, text string, body string").write.parquet(
+        str(src)
+    )
+    custom = {
+        "classes": ["aa", "bb", "cc"],
+        "weights": {
+            "aa": [0.9, -0.2, 0.1, 0.0],
+            "bb": [-0.3, 0.8, 0.0, 0.2],
+            "cc": [0.0, 0.1, 0.7, -0.4],
+        },
+        "biases": {"aa": 0.1, "bb": 0.0, "cc": -0.1},
+    }
+    text = textwrap.dedent(
+        f"""
+        nodes:
+          read:
+            class: ParquetReader
+            options: {{path: "{src}"}}
+          pinned:
+            class: DetectLanguageModel
+          custom:
+            class: DetectLanguageModel
+            options:
+              text_key: body
+              output_key: lang_custom
+              classes: {json.dumps(custom["classes"])}
+              weights: {json.dumps(custom["weights"])}
+              biases: {json.dumps(custom["biases"])}
+        paths:
+          - [read, pinned, custom]
+        """
+    )
+    df = load_yaml_pipeline(spark, text).dataframes["custom"]
+    got = df.select(
+        "lang_pred",
+        "lang_custom",
+        detect_language_model("text").alias("want_pred"),
+        detect_language_model("body", **custom).alias("want_custom"),
+    ).collect()
+    assert len(got) == len(rows)
+    assert [(r[0], r[1]) for r in got] == [(r[2], r[3]) for r in got]
+    assert len({r["lang_pred"] for r in got}) > 1
+    assert len({r["lang_custom"] for r in got}) > 1

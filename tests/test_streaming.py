@@ -1537,3 +1537,72 @@ def test_stream_ngram_count_sink_and_train_from_counts(spark, tmp_path):
         train_backoff_lm(docs, counts=counts)
     with pytest.raises(ValueError, match="exactly one"):
         train_backoff_lm()
+
+
+def test_restart_on_spark_default_checkpoint_resumes_state(spark, tmp_path):
+    """A stateful query checkpointed under Spark's own defaults
+    (FileContext checkpoint manager, HDFS-backed state store) resumes
+    under the engine session (FileSystem manager, RocksDB default): the
+    provider class is persisted in the offset log and the checkpoint's
+    value wins, so the dedup state is read back, batch ids continue and
+    no key is emitted twice."""
+    import datetime as dt
+    import json
+
+    from tests.conftest import checkpoint_manager_class
+
+    t0 = dt.datetime(2024, 1, 1)
+    src, ckpt = tmp_path / "src", tmp_path / "ckpt"
+    hdfs = (
+        "org.apache.spark.sql.execution.streaming.state."
+        "HDFSBackedStateStoreProvider"
+    )
+    spark_defaults = {
+        "spark.sql.streaming.stateStore.providerClass": hdfs,
+        "spark.sql.streaming.checkpointFileManagerClass": (
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileContextBasedCheckpointFileManager"
+        ),
+    }
+
+    def add_file(rows):
+        spark.createDataFrame(
+            [(k, t0 + dt.timedelta(seconds=s)) for k, s in rows],
+            "k string, ts timestamp",
+        ).coalesce(1).write.mode("append").parquet(str(src))
+
+    def run() -> list[tuple[int, list[str]]]:
+        seen = []
+
+        def capture(batch_df, batch_id):
+            seen.append((batch_id, sorted(r["k"] for r in batch_df.collect())))
+
+        stream = file_watchdog(spark, str(src), "k string, ts timestamp")
+        deduped = deduplicate_stream(stream, ["k"], "ts", watermark="1 hour")
+        foreach_batch_sink(deduped, capture, str(ckpt)).awaitTermination()
+        return seen
+
+    add_file([("a", 0), ("b", 1), ("c", 2), ("a", 3)])
+    before = {k: spark.conf.get(k) for k in spark_defaults}
+    try:
+        for k, v in spark_defaults.items():
+            spark.conf.set(k, v)
+        assert "FileContext" in checkpoint_manager_class(spark, ckpt)
+        first = run()
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+    assert "RocksDB" in spark.conf.get("spark.sql.streaming.stateStore.providerClass")
+    assert "FileSystemBased" in checkpoint_manager_class(spark, ckpt)
+
+    add_file([("b", 4), ("c", 5), ("d", 6), ("e", 7)])
+    second = run()
+
+    emitted = [k for _, keys in first + second for k in keys]
+    assert sorted(emitted) == ["a", "b", "c", "d", "e"]
+    first_ids, second_ids = [b for b, _ in first], [b for b, _ in second]
+    assert second_ids[0] == first_ids[-1] + 1
+    assert second_ids == list(range(second_ids[0], second_ids[0] + len(second)))
+    last_offsets = (ckpt / "offsets" / str(second_ids[-1])).read_text()
+    metadata = json.loads(last_offsets.splitlines()[1])
+    assert metadata["conf"]["spark.sql.streaming.stateStore.providerClass"] == hdfs
