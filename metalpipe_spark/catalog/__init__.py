@@ -13,14 +13,24 @@ Determinism rules (so value-hashes match across engines):
     identical in both engines);
   * every computed column is aliased identically on both sides;
   * any top-k has a total tie-break order.
+
+Rows that stage data in a scratch dir (a streaming sink, a WARC/WET file
+round trip) build their result inside :func:`_scratch_result`: it is
+returned eagerly materialized (``materialize(df, eager=True)``), so the
+driver's later drain never reads the dir, which is gone by then.  No
+row collects its result to the driver to outlive the dir.
 """
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from metalpipe_spark.materialize import materialize
 
 
 @dataclass
@@ -40,6 +50,16 @@ def register(name: str, oracle: str | None, doc: str = ""):
         return fn
 
     return deco
+
+
+def _scratch_result(prefix: str, run: Callable[[str], DataFrame]) -> DataFrame:
+    """``run(tmp)`` in a fresh scratch dir, its result materialized
+    eagerly so it stays readable once the dir is removed."""
+    tmp = tempfile.mkdtemp(prefix=prefix)
+    try:
+        return materialize(run(tmp), eager=True)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def load_all() -> dict[str, CatalogQuery]:

@@ -799,9 +799,9 @@ def q_incremental_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     tc = materialize(
         dsir_target_counts(
             docs.where(F.col("lang") == "en"), buckets=_DSIR_BUCKETS
-        )
+        ),
+        eager=True,
     )
-    tc.count()
     _, store = dsir_incremental_weights(
         docs.where(F.col("doc_id") % 2 == 0), None, tc,
         buckets=_DSIR_BUCKETS, exact=True,

@@ -286,16 +286,14 @@ def clear_shared_stages(kinds: set[str] | None = None) -> None:
 
 
 def shared_stage(spark: SparkSession, key_parts: tuple, builder) -> DataFrame:
-    """Memoize-and-materialize a family-shared DataFrame stage: lazy
-    checkpoint, single-subtree ``count()`` materialization
-    (the house rule — multi-subtree first actions RACE to materialize),
-    keyed under ``(applicationId, *key_parts)``."""
+    """Memoize-and-materialize a family-shared DataFrame stage: an eager
+    checkpoint (multi-subtree first actions on a lazy one RACE to
+    materialize it), keyed under ``(applicationId, *key_parts)``."""
     key = (spark.sparkContext.applicationId, *key_parts)
     got = _SHARED_STAGES.get(key)
     if got is not None:
         return got
-    df = materialize(builder())
-    df.count()  # materialize so later readers never re-run the stage
+    df = materialize(builder(), eager=True)
     _SHARED_STAGES[key] = df
     return df
 

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from metalpipe_spark.catalog import register
+from metalpipe_spark.catalog import _scratch_result, register
 from metalpipe_spark.operators.inference import embed_documents
 from metalpipe_spark.operators.similarity import brute_force_topk
 from metalpipe_spark.sources.readers import load_table
@@ -206,20 +206,16 @@ def q_incremental_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def q_stream_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
+    from metalpipe_spark.catalog.streaming_queries import _documents_stream
 
-    from metalpipe_spark.streaming.streams import file_watchdog
-
-    stream = file_watchdog(
-        spark,
-        sf_dir,
-        "doc_id long, text string, lang string, source string, n_chars long",
-        glob="documents.parquet",
-    ).where(F.col("doc_id") % 2 == 0).select("doc_id", "text")
+    stream = (
+        _documents_stream(spark, sf_dir)
+        .where(F.col("doc_id") % 2 == 0)
+        .select("doc_id", "text")
+    )
     emb = embed_documents(stream, model="hashed-projection:8", batch_size=64)
-    tmp = tempfile.mkdtemp(prefix="mps_stream_embed_")
-    try:
+
+    def run(tmp: str) -> DataFrame:
         (
             emb.writeStream.trigger(availableNow=True)
             .format("parquet")
@@ -228,7 +224,7 @@ def q_stream_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
             .awaitTermination()
         )
-        out = (
+        return (
             spark.read.parquet(f"{tmp}/out")
             .select("doc_id", F.posexplode("embedding").alias("bucket", "__v"))
             .select(
@@ -237,15 +233,8 @@ def q_stream_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round("__v", 9).alias("v"),
             )
         )
-        # SIZE GUARD: catalog-fixture drain (docs/2 x 8 narrow rows) —
-        # the result must outlive the temp dir for the lazy comparator;
-        # the production path sinks to parquet and never collects.
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema).orderBy(
-            "doc_id", "bucket"
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    return _scratch_result("mps_stream_embed_", run).orderBy("doc_id", "bucket")
 
 
 def _embed_semdedup_oracle() -> str:

@@ -12,7 +12,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from metalpipe_spark.catalog import register
+from metalpipe_spark.catalog import _scratch_result, register
 from metalpipe_spark.streaming.streams import (
     deduplicate_stream,
     file_watchdog,
@@ -63,6 +63,16 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return file_watchdog(spark, sf_dir, probe.schema, glob="events.parquet")
+
+
+def _documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents table as a file-source stream."""
+    return file_watchdog(
+        spark,
+        sf_dir,
+        "doc_id long, text string, lang string, source string, n_chars long",
+        glob="documents.parquet",
+    )
 
 
 @register(
@@ -352,23 +362,15 @@ def _stream_corpus_oracle() -> str:
     ),
 )
 def q_stream_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from metalpipe_spark.sources.readers import load_table
     from metalpipe_spark.streaming.streams import stream_corpus_pipeline
 
-    stream = file_watchdog(
-        spark,
-        sf_dir,
-        "doc_id long, text string, lang string, source string, n_chars long",
-        glob="documents.parquet",
-    ).where(F.col("doc_id") % 2 == 0)
+    stream = _documents_stream(spark, sf_dir).where(F.col("doc_id") % 2 == 0)
     bench = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % 50 == 1
     )
-    tmp = tempfile.mkdtemp(prefix="mps_stream_corpus_")
-    try:
+
+    def run(tmp: str) -> DataFrame:
         stream_corpus_pipeline(
             stream,
             bench,
@@ -380,18 +382,9 @@ def q_stream_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             # whole regex/shingle chain runs on one task
             rebalance_partitions=spark.sparkContext.defaultParallelism,
         ).awaitTermination()
-        out = spark.read.parquet(f"{tmp}/kept").select("doc_id", "fingerprint")
-        # The drained result must outlive the temp dir (lazy plans read
-        # at collect time, which for the driver's comparator is later).
-        # SIZE GUARD: this collect is the CATALOG ROW's drain — bounded
-        # by the sf0.01/sf0.1 fixture (<= corpus doc count, two narrow
-        # columns).  The production entry point is run_corpus_stream
-        # itself, which sinks to parquet and never collects; never copy
-        # this localize-for-the-comparator pattern into operator code.
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema).orderBy("doc_id")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return spark.read.parquet(f"{tmp}/kept").select("doc_id", "fingerprint")
+
+    return _scratch_result("mps_stream_corpus_", run).orderBy("doc_id")
 
 
 def _stream_dsir_oracle() -> str:
@@ -418,23 +411,15 @@ def _stream_dsir_oracle() -> str:
     ),
 )
 def q_stream_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from metalpipe_spark.sources.readers import load_table
     from metalpipe_spark.streaming.streams import stream_dsir_sink
 
-    stream = file_watchdog(
-        spark,
-        sf_dir,
-        "doc_id long, text string, lang string, source string, n_chars long",
-        glob="documents.parquet",
-    )
+    stream = _documents_stream(spark, sf_dir)
     target = load_table(spark, sf_dir, "documents").where(
         F.col("lang") == "en"
     )
-    tmp = tempfile.mkdtemp(prefix="mps_stream_dsir_")
-    try:
+
+    def run(tmp: str) -> DataFrame:
         stream_dsir_sink(
             stream,
             target,
@@ -446,15 +431,11 @@ def q_stream_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
             # one parquet file per batch otherwise = one task
             rebalance_partitions=spark.sparkContext.defaultParallelism,
         ).awaitTermination()
-        out = spark.read.parquet(f"{tmp}/kept").select(
+        return spark.read.parquet(f"{tmp}/kept").select(
             "doc_id", "n_grams", "log_weight"
         )
-        # SIZE GUARD: bounded catalog-fixture drain (same rationale as
-        # q_stream_corpus above) — the production path sinks to parquet.
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema).orderBy("doc_id")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    return _scratch_result("mps_stream_dsir_", run).orderBy("doc_id")
 
 
 def _stream_exact_substr_oracle() -> str:
@@ -492,20 +473,12 @@ def _stream_exact_substr_oracle() -> str:
     ),
 )
 def q_stream_exact_substr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from metalpipe_spark.catalog.dedup import _XS_L
     from metalpipe_spark.streaming.streams import stream_exact_substr_sink
 
-    stream = file_watchdog(
-        spark,
-        sf_dir,
-        "doc_id long, text string, lang string, source string, n_chars long",
-        glob="documents.parquet",
-    ).select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="mps_stream_xs_")
-    try:
+    stream = _documents_stream(spark, sf_dir).select("doc_id", "text")
+
+    def run(tmp: str) -> DataFrame:
         stream_exact_substr_sink(
             stream,
             f"{tmp}/kept",
@@ -513,17 +486,11 @@ def q_stream_exact_substr(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{tmp}/ckpt",
             min_length=_XS_L,
         ).awaitTermination()
-        out = spark.read.parquet(f"{tmp}/kept").select(
+        return spark.read.parquet(f"{tmp}/kept").select(
             "doc_id", "clean_text", "n_kept"
         )
-        # SIZE GUARD: catalog-fixture drain (<= corpus doc count, three
-        # narrow columns) so the result outlives the temp dir for the
-        # driver's lazy comparator; production sinks to parquet and
-        # never collects.
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema).orderBy("doc_id")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    return _scratch_result("mps_stream_xs_", run).orderBy("doc_id")
 
 
 def _stream_bpe_encode_oracle() -> str:
@@ -550,20 +517,12 @@ def _stream_bpe_encode_oracle() -> str:
     ),
 )
 def q_stream_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from metalpipe_spark.catalog.text import _BPE_ENC_MERGES
     from metalpipe_spark.streaming.streams import stream_encode_sink
 
-    stream = file_watchdog(
-        spark,
-        sf_dir,
-        "doc_id long, text string, lang string, source string, n_chars long",
-        glob="documents.parquet",
-    ).select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="mps_stream_enc_")
-    try:
+    stream = _documents_stream(spark, sf_dir).select("doc_id", "text")
+
+    def run(tmp: str) -> DataFrame:
         stream_encode_sink(
             stream,
             _BPE_ENC_MERGES,
@@ -571,7 +530,7 @@ def q_stream_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{tmp}/ckpt",
             tokenizer="bpe",
         ).awaitTermination()
-        out = spark.read.parquet(f"{tmp}/out").select(
+        return spark.read.parquet(f"{tmp}/out").select(
             "doc_id",
             "n_subwords",
             F.md5(
@@ -580,13 +539,8 @@ def q_stream_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("enc_md5"),
         )
-        # SIZE GUARD: catalog-fixture drain (one narrow row per doc) so
-        # the result outlives the temp dir for the driver's lazy
-        # comparator; production sinks to parquet and never collects.
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema).orderBy("doc_id")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    return _scratch_result("mps_stream_enc_", run).orderBy("doc_id")
 
 
 def _stream_semdedup_oracle() -> str:
@@ -615,9 +569,6 @@ def _stream_semdedup_oracle() -> str:
     ),
 )
 def q_stream_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from metalpipe_spark.catalog.similarity import _ivf_cents
     from metalpipe_spark.operators.similarity import ivf_assign_literal
     from metalpipe_spark.streaming.streams import stream_semantic_dedup_sink
@@ -633,8 +584,8 @@ def q_stream_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding")
     )
     cents = _ivf_cents()
-    tmp = tempfile.mkdtemp(prefix="mps_stream_sd_")
-    try:
+
+    def run(tmp: str) -> DataFrame:
         stream_semantic_dedup_sink(
             stream, cents, f"{tmp}/kept", f"{tmp}/store",
             f"{tmp}/ckpt", threshold=0.25,
@@ -642,14 +593,9 @@ def q_stream_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         kept = spark.read.parquet(f"{tmp}/kept").select(
             "vec_id", "embedding"
         )
-        out = ivf_assign_literal(kept, cents).select("vec_id", "cell")
-        # SIZE GUARD: catalog-fixture drain (two narrow columns, <=
-        # subset row count) so the result outlives the temp dir for
-        # the driver's lazy comparator.
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema).orderBy("vec_id")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return ivf_assign_literal(kept, cents).select("vec_id", "cell")
+
+    return _scratch_result("mps_stream_sd_", run).orderBy("vec_id")
 
 
 def _stream_ccnet_oracle() -> str:
@@ -707,9 +653,6 @@ def _stream_ccnet_oracle() -> str:
     ),
 )
 def q_stream_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from metalpipe_spark.catalog.text import _BO_LM_ROWS, _CCNET_P
     from metalpipe_spark.operators.text import ngram_logprob_backoff
     from metalpipe_spark.streaming.streams import stream_score_sink
@@ -738,14 +681,9 @@ def q_stream_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"percentile_disc({p2}) WITHIN GROUP (ORDER BY mean_logprob)"
         " AS t2",
     ).first()
-    stream = file_watchdog(
-        spark,
-        sf_dir,
-        "doc_id long, text string, lang string, source string, n_chars long",
-        glob="documents.parquet",
-    ).select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="mps_stream_ppl_")
-    try:
+    stream = _documents_stream(spark, sf_dir).select("doc_id", "text")
+
+    def run(tmp: str) -> DataFrame:
         stream_score_sink(
             stream,
             lm,
@@ -755,17 +693,11 @@ def q_stream_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             exact=True,
             thresholds=(th["t1"], th["t2"]),
         ).awaitTermination()
-        out = spark.read.parquet(f"{tmp}/out").select(
+        return spark.read.parquet(f"{tmp}/out").select(
             "doc_id", "mean_logprob", "bucket"
         )
-        # SIZE GUARD: catalog-fixture drain (three narrow columns, one
-        # row per doc) so the result outlives the temp dir for the
-        # driver's lazy comparator; production sinks to parquet and
-        # never collects.
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema).orderBy("doc_id")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    return _scratch_result("mps_stream_ppl_", run).orderBy("doc_id")
 
 
 @register(
@@ -814,9 +746,6 @@ def q_stream_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def q_stream_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
     from metalpipe_spark.streaming.streams import (
@@ -824,14 +753,9 @@ def q_stream_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_ngram_count_sink,
     )
 
-    stream = file_watchdog(
-        spark,
-        sf_dir,
-        "doc_id long, text string, lang string, source string, n_chars long",
-        glob="documents.parquet",
-    ).select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="mps_stream_ngc_")
-    try:
+    stream = _documents_stream(spark, sf_dir).select("doc_id", "text")
+
+    def run(tmp: str) -> DataFrame:
         stream_ngram_count_sink(
             stream, f"{tmp}/store", f"{tmp}/ckpt", n=2
         ).awaitTermination()
@@ -839,7 +763,7 @@ def q_stream_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         w = Window.partitionBy("order").orderBy(
             F.desc("n_count"), F.asc("ngram")
         )
-        out = (
+        return (
             counts.withColumn("rank", F.row_number().over(w).cast("int"))
             .where(F.col("rank") <= 75)
             .select(
@@ -849,12 +773,5 @@ def q_stream_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_count",
             )
         )
-        # SIZE GUARD: catalog-fixture drain (150 narrow rows) so the
-        # result outlives the temp dir for the driver's lazy
-        # comparator; production trains from the store in place.
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema).orderBy(
-            "lm_order", "rank"
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    return _scratch_result("mps_stream_ngc_", run).orderBy("lm_order", "rank")

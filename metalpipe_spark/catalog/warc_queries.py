@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from metalpipe_spark.catalog import register
+from metalpipe_spark.catalog import _scratch_result, register
 from metalpipe_spark.operators.web import (
     HTML_BLOCK_RE,
     HTML_COMMENT_RE,
@@ -60,9 +60,6 @@ ORDER BY m.mode, d.doc_id
     ),
 )
 def q_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.concat(
@@ -73,8 +70,8 @@ def q_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("url"),
         "text",
     )
-    tmp = tempfile.mkdtemp(prefix="mps_wet_")
-    try:
+
+    def run(tmp: str) -> DataFrame:
         write_wet(docs, f"{tmp}/wet")
         parts = []
         for mode in ("delimiter", "exact"):
@@ -93,16 +90,9 @@ def q_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "length_ok",
                 )
             )
-        out = parts[0].unionByName(parts[1])
-        # SIZE GUARD: catalog-fixture drain (2 x documents rows, narrow
-        # projection, payload reduced to md5) — the result must outlive
-        # the temp dir because the comparator collects lazily.  The
-        # production path is read_wet feeding the corpus pipeline
-        # directly; never copy this localize pattern into operator code.
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema).orderBy("mode", "doc_id")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return parts[0].unionByName(parts[1])
+
+    return _scratch_result("mps_wet_", run).orderBy("mode", "doc_id")
 
 
 def _entity_sql(expr: str) -> str:
@@ -227,9 +217,6 @@ FROM x GROUP BY source ORDER BY source
     ),
 )
 def q_crawl_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
@@ -249,8 +236,8 @@ def q_crawl_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         http,
         F.lit("\r\n"),
     )
-    tmp = tempfile.mkdtemp(prefix="mps_crawl_")
-    try:
+
+    def run(tmp: str) -> DataFrame:
         (
             docs.select(record.alias("value"))
             .write.option("lineSep", "\r\n")
@@ -259,7 +246,7 @@ def q_crawl_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             .text(f"{tmp}/warc")
         )
         captures = read_warc(spark, f"{tmp}/warc")
-        out = (
+        return (
             captures.select(
                 F.regexp_extract("url", r"example/([^/]+)/", 1).alias("source"),
                 html_extract_text(F.col("payload").cast("string")).alias("t"),
@@ -271,12 +258,8 @@ def q_crawl_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.length("t")).alias("total_chars"),
             )
         )
-        # SIZE GUARD: one row per source label (~20 at any SF) — the
-        # drain must outlive the temp dir for the lazy comparator.
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema).orderBy("source")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    return _scratch_result("mps_crawl_", run).orderBy("source")
 
 
 @register(
@@ -305,9 +288,6 @@ def q_crawl_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def q_warc_revisit_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from metalpipe_spark.sources.warc import resolve_revisits, write_warc
 
     docs = (
@@ -373,11 +353,11 @@ def q_warc_revisit_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         rev_digest,
     ))
     segment = resp.unionByName(req).unionByName(meta).unionByName(rev)
-    tmp = tempfile.mkdtemp(prefix="mps_warc_rev_")
-    try:
+
+    def run(tmp: str) -> DataFrame:
         write_warc(segment, f"{tmp}/warc")
         warc = read_warc(spark, f"{tmp}/warc", record_types=None)
-        out = resolve_revisits(warc).select(
+        return resolve_revisits(warc).select(
             F.regexp_replace("record_id", r"^<|>$", "").alias("record_id"),
             "url",
             "refers_to",
@@ -386,9 +366,5 @@ def q_warc_revisit_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.md5("payload").alias("payload_md5"),
             "digest_ok",
         )
-        # SIZE GUARD: revisit rows only (fixture scale) — the drain
-        # must outlive the temp dir for the lazy comparator.
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema).orderBy("record_id")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    return _scratch_result("mps_warc_rev_", run).orderBy("record_id")

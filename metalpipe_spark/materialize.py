@@ -4,7 +4,9 @@ DataFrame past its lineage.
 Iterative and multi-consumer operators (connected components, PageRank,
 BPE/WordPiece rounds, semantic-dedup waves, the family-shared catalog
 stages) truncate lineage so each action replays a table instead of its
-whole upstream plan.  Where the truncated blocks live is a deployment
+whole upstream plan.  Catalog rows that stage data in a scratch dir (a
+streaming sink, a WARC/WET round trip) keep their result past the dir's
+removal the same way (``catalog._scratch_result``).  Where the truncated blocks live is a deployment
 decision, not an operator's, so it is made here, from the SparkContext's
 checkpoint dir:
 
@@ -28,9 +30,10 @@ from pyspark.sql import DataFrame
 
 def materialize(df: DataFrame, *, eager: bool = False) -> DataFrame:
     """Checkpoint ``df`` and return the truncated DataFrame.  Lazy by
-    default: the first action on the result writes the checkpoint, so a
-    caller that needs it written before a multi-subtree plan runs
-    follows with a single-subtree ``count()``."""
+    default: the first action on the result writes the checkpoint.  A
+    caller that needs it written before a multi-subtree plan runs (whose
+    subtrees would otherwise race to write it), or before its inputs go
+    away, passes ``eager=True``."""
     if df.sparkSession.sparkContext.getCheckpointDir() is None:
         return df.localCheckpoint(eager=eager)
     return df.checkpoint(eager=eager)

@@ -155,8 +155,7 @@ def train_bpe(
         merges.append((rank, left, right, int(best["c"])))
         vocab = _greedy_merge_vocab(vocab, left, right, left + right)
         if (rank + 1) % checkpoint_every == 0:
-            vocab = materialize(vocab)
-            vocab.count()  # materialize so the lineage truncation holds
+            vocab = materialize(vocab, eager=True)
             if prev is not None:
                 release(prev)
             prev = vocab
@@ -555,8 +554,7 @@ def train_wordpiece(
     # re-run the corpus word count three times (the .explain audit's
     # 3x-of-100TB finding); later rounds already read the
     # checkpoint_every cache.
-    vocab = prev = materialize(_wp_initial_vocab(df, text_col))
-    vocab.count()  # materialize so the lineage truncation holds
+    vocab = prev = materialize(_wp_initial_vocab(df, text_col), eager=True)
     if vocab_size is not None:
         if vocab_size < 1:
             raise ValueError(f"vocab_size must be >= 1, got {vocab_size}")
@@ -582,8 +580,7 @@ def train_wordpiece(
         )
         vocab = _greedy_merge_vocab(vocab, left, right, merged)
         if (rank + 1) % checkpoint_every == 0:
-            vocab = materialize(vocab)
-            vocab.count()  # materialize so the lineage truncation holds
+            vocab = materialize(vocab, eager=True)
             release(prev)
             prev = vocab
     release(prev)

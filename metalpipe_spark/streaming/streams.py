@@ -22,6 +22,7 @@ batch backfill over 100 TB of history.
 
 from __future__ import annotations
 
+import hashlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -296,6 +297,17 @@ def foreach_batch_sink(
         .trigger(availableNow=True)
         .start()
     )
+
+
+def _batch_dir(path: str, checkpoint: str) -> Callable[[int], str]:
+    """The kept-output directory of one micro-batch under ``path``:
+    ``batch={md5(checkpoint)[:8]}-{batch_id}``, written with overwrite so
+    a replayed batch replaces its own rows.  The checkpoint tag keeps
+    query lineages apart: batch ids restart at 0 for every new query
+    over the same output, and two lineages overwriting each other's
+    batch=0 would silently drop committed rows."""
+    tag = hashlib.md5(checkpoint.encode()).hexdigest()[:8]
+    return lambda batch_id: f"{path}/batch={tag}-{batch_id}"
 
 
 def stream_upsert_sink(
@@ -578,9 +590,9 @@ def stream_score_sink(
     batch-local aggregate, which Structured Streaming would treat as
     unbounded stateful aggregation — so the sink runs the batch
     scorer under ``foreachBatch`` with the idempotent one-directory-
-    per-micro-batch overwrite write (the ``_incremental_store_sink``
-    kept-output rule: replays rewrite ``batch={ckpt}-{id}`` with
-    identical rows; batch dirs are namespaced by checkpoint lineage).
+    per-micro-batch overwrite write (``_batch_dir``, the kept-output
+    layout ``_incremental_store_sink`` also writes: replays rewrite
+    their own batch dir with identical rows).
 
     ``lm`` is eagerly local-checkpointed ONCE at sink build — a
     trainer PLAN passed directly would otherwise silently retrain per
@@ -594,8 +606,6 @@ def stream_score_sink(
     ``availableNow`` over a static directory equals
     ``perplexity_buckets(backoff=True)`` over the same files row for
     row (the q_stream_ccnet_buckets oracle contract)."""
-    import hashlib
-
     from metalpipe_spark.operators.text import ngram_logprob_backoff
 
     lm = materialize(lm, eager=True)
@@ -617,7 +627,7 @@ def stream_score_sink(
         else None
     )
     unk_lp = float(unk_row["logprob"]) if unk_row is not None else None
-    ckpt_tag = hashlib.md5(checkpoint.encode()).hexdigest()[:8]
+    batch_dir = _batch_dir(out_path, checkpoint)
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         scored = ngram_logprob_backoff(
@@ -642,16 +652,9 @@ def stream_score_sink(
                 .when(F.col("mean_logprob") > t1, F.lit("middle"))
                 .otherwise(F.lit("tail")),
             )
-        scored.write.mode("overwrite").parquet(
-            f"{out_path}/batch={ckpt_tag}-{batch_id}"
-        )
+        scored.write.mode("overwrite").parquet(batch_dir(batch_id))
 
-    return (
-        df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_sink(df, apply, checkpoint)
 
 
 _STORE_VDIR_RE = r"v-(\d{10})"
@@ -886,15 +889,9 @@ def _incremental_store_sink(
         read_manifest_body,
     )
 
-    import hashlib
-
     spark = df.sparkSession
     next_path = store_path + "_next"
-    # Kept-output batch directories are namespaced by checkpoint
-    # lineage: batch ids restart at 0 for every new query over the same
-    # store, and two lineages overwriting each other's batch=0 would
-    # silently drop committed rows.
-    ckpt_tag = hashlib.md5(checkpoint.encode()).hexdigest()[:8]
+    batch_dir = _batch_dir(kept_path, checkpoint)
 
     def _data_files(fs, dir_path):
         return sorted(
@@ -1022,9 +1019,7 @@ def _incremental_store_sink(
         # which closes the duplicate-on-replay window the append form
         # had.  Readers see an extra `batch` partition column — the
         # micro-batch provenance of each kept row.
-        fresh.write.mode("overwrite").parquet(
-            f"{kept_path}/batch={ckpt_tag}-{batch_id}"
-        )
+        fresh.write.mode("overwrite").parquet(batch_dir(batch_id))
         new_version = version + 1
         new_dir = f"v-{new_version:010d}"
         created = {new_dir}
@@ -1129,8 +1124,7 @@ def stream_image_dedup_sink(
         # re-run the Python dHash kernel over the raw images; the
         # cleanup drops the blocks after the swap so micro-batches don't
         # accumulate pinned state (the skeleton's cleanup hook).
-        codes = materialize(image_dhash(batch_df, id_col=id_col))
-        codes.count()
+        codes = materialize(image_dhash(batch_df, id_col=id_col), eager=True)
         # return_delta: the (id, dhash) store is strictly append-only —
         # the sink publishes only the batch's surviving codes as a
         # delta segment (O(batch) per trigger; the store is one row per
@@ -1355,12 +1349,13 @@ def stream_dsir_sink(
         # layout (the stream_corpus_pipeline rationale): one large file
         # per batch would run the whole explode+hash chain on one task.
         df = df.repartition(rebalance_partitions)
+    # materialized once; every micro-batch broadcasts from here
     tc = materialize(
         dsir_target_counts(
             target, text_col=text_col, buckets=buckets, bucket_hash=bucket_hash
-        )
+        ),
+        eager=True,
     )
-    tc.count()  # materialize once; every micro-batch broadcasts from here
 
     def step(batch_df: DataFrame, store: DataFrame | None):
         # with_cleanup hands back the callable that releases the

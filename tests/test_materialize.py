@@ -11,37 +11,87 @@ and the drain must fail loudly rather than answer wrongly.
 
 from __future__ import annotations
 
+import inspect
 import os
 import re
 
 import pytest
 from pyspark.sql import functions as F
 
-from metalpipe_spark.catalog import load_all
+from metalpipe_spark.catalog import _scratch_result, load_all
 from metalpipe_spark.catalog.dedup import clear_shared_stages
+from metalpipe_spark.materialize import release
 from tests.conftest import SF_SMOKE
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-ROWS = ["q_dedup_clusters", "q_host_rank", "q_incremental_semdedup_scaled"]
+ROWS = [
+    "q_dedup_clusters",
+    "q_host_rank",
+    "q_incremental_semdedup_scaled",
+    "q_wet_roundtrip",
+]
+
+
+def _engine_lines(*parts: str):
+    """``(path, line_no, line)`` for every line of the ``.py`` files
+    under ``metalpipe_spark/<parts>``."""
+    for root, _, files in os.walk(os.path.join(REPO, "metalpipe_spark", *parts)):
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(root, name)
+                with open(path) as f:
+                    for no, line in enumerate(f, 1):
+                        yield path, no, line
 
 
 def test_no_checkpoint_outside_materialize():
     """Every engine checkpoint goes through ``materialize``, so one
     module decides local vs reliable."""
-    pkg = os.path.join(REPO, "metalpipe_spark")
     call = re.compile(r"localCheckpoint\(|\.checkpoint\(")
-    found = []
-    for root, _, files in os.walk(pkg):
-        for name in files:
-            path = os.path.join(root, name)
-            if not name.endswith(".py") or name == "materialize.py":
-                continue
-            with open(path) as f:
-                for no, line in enumerate(f, 1):
-                    if call.search(line):
-                        found.append(f"{os.path.relpath(path, REPO)}:{no}")
+    found = [
+        f"{os.path.relpath(path, REPO)}:{no}"
+        for path, no, line in _engine_lines()
+        if call.search(line) and os.path.basename(path) != "materialize.py"
+    ]
     assert not found, f"checkpoint calls outside materialize.py: {found}"
+
+
+def test_no_scratch_copy_outside_scratch_result():
+    """Catalog rows that stage data in a scratch dir go through
+    ``_scratch_result``: none makes its own dir or copies its result
+    through the driver to outlive one."""
+    call = re.compile(r"tempfile\.mkdtemp\(|createDataFrame\(rows")
+    lines, first = inspect.getsourcelines(_scratch_result)
+    helper = inspect.getsourcefile(_scratch_result)
+    found = [
+        f"{os.path.relpath(path, REPO)}:{no}"
+        for path, no, line in _engine_lines("catalog")
+        if call.search(line)
+        and not (path == helper and first <= no < first + len(lines))
+    ]
+    assert not found, f"scratch dirs outside _scratch_result: {found}"
+
+
+def test_scratch_result_outlives_its_dir(spark):
+    dirs = []
+
+    def run(tmp):
+        dirs.append(tmp)
+        spark.range(5).write.parquet(f"{tmp}/t")
+        return spark.read.parquet(f"{tmp}/t")
+
+    def fail(tmp):
+        dirs.append(tmp)
+        raise RuntimeError("run failed")
+
+    df = _scratch_result("mps_test_", run)
+    assert not os.path.exists(dirs[0])
+    assert sorted(r.id for r in df.collect()) == list(range(5))
+    release(df)
+    with pytest.raises(RuntimeError, match="run failed"):
+        _scratch_result("mps_test_", fail)
+    assert not os.path.exists(dirs[1])
 
 
 def _drain(df) -> tuple[int, int]:
@@ -106,7 +156,7 @@ def test_reliable_checkpoints_survive_lost_blocks(
 # q_host_rank is not here: its drain still answers after removeRdd in
 # local mode, so there is no failure to pin.
 @pytest.mark.parametrize(
-    "name", ["q_dedup_clusters", "q_incremental_semdedup_scaled"]
+    "name", ["q_dedup_clusters", "q_incremental_semdedup_scaled", "q_wet_roundtrip"]
 )
 def test_local_checkpoints_fail_loudly_on_lost_blocks(spark, clean, name):
     baseline, _ = clean
