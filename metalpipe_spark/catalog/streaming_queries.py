@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metalpipe_spark.catalog import _scratch_result, register
+from metalpipe_spark.sources.readers import _set_conf_once, read_parquet
 from metalpipe_spark.streaming.streams import (
     deduplicate_stream,
     file_watchdog,
@@ -52,8 +53,8 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe the batch reader for the actual type and build the streaming
     schema to match.  ``file_watchdog`` normalizes any NTZ column to
     tz-aware ``timestamp``."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    probe = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    _set_conf_once(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
+    probe = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
     if dict(probe.dtypes).get("ts") == "bigint":
         raw = file_watchdog(
             spark,
@@ -668,8 +669,8 @@ def q_stream_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # threshold calibration on the static slice — the batch face's
     # exact percentile_disc over 6-dp scores (perplexity_buckets rule)
-    static = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")
+    static = read_parquet(
+        spark, os.path.join(sf_dir, "documents.parquet")
     ).select("doc_id", "text")
     scored = ngram_logprob_backoff(static, lm, n=2, exact=True).withColumn(
         "mean_logprob", F.round("mean_logprob", 6)

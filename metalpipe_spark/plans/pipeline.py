@@ -70,7 +70,11 @@ from metalpipe_spark.sources.emitters import (
     counter_of_things,
     sequence_emitter,
 )
-from metalpipe_spark.sources.readers import csv_reader, local_file_reader
+from metalpipe_spark.sources.readers import (
+    csv_reader,
+    local_file_reader,
+    read_parquet,
+)
 from metalpipe_spark.udf_registry import load_function, wrap_udf
 
 # ---------------------------------------------------------------------------
@@ -115,7 +119,7 @@ def _one(upstreams: list[DataFrame], cls: str) -> DataFrame:
 
 @node_class("ParquetReader")
 def _parquet_reader(spark, upstreams, opts):
-    return spark.read.parquet(opts["path"])
+    return read_parquet(spark, opts["path"])
 
 
 @node_class("CSVReader")

@@ -10,6 +10,9 @@ through the same code path.
 from __future__ import annotations
 
 import os
+import stat
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -25,6 +28,74 @@ TPCH_TABLES = (
     "documents",
     "embeddings",
 )
+
+
+# The session confs that change the schema Spark infers from a parquet
+# footer (``ParquetToSparkSchemaConverter(SQLConf)``), plus the two that
+# decide which footers it reads.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+)
+_SCHEMA_CACHE_SIZE = 256
+_schema_cache: OrderedDict[tuple, object] = OrderedDict()
+_schema_lock = threading.Lock()
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a table file's schema once.
+
+    Without a schema, every parquet read starts one Spark job that reads
+    the footer again (``mergeSchemasInParallel``, ~40 ms at fixture
+    scale).  The schema Spark inferred for a regular file is kept in a
+    process-wide cache (at most ``_SCHEMA_CACHE_SIZE`` entries, oldest
+    evicted) and later reads pass it to ``spark.read.schema``, which
+    starts no job.  The key is the file's stat fingerprint (realpath,
+    ``st_dev``, ``st_ino``, ``st_size``, ``st_mtime_ns``,
+    ``st_ctime_ns``) and the values of ``_SCHEMA_CONFS``, so a file
+    rewritten in place, or a session conf that changes what Spark infers,
+    misses and infers again.
+
+    A directory or a path ``os.stat`` cannot see (a URI, a glob, a
+    missing path) is read exactly as ``spark.read.parquet`` reads it, on
+    every call, and never cached: a file added to a partition
+    subdirectory leaves the table directory's stat unchanged, so no cheap
+    key covers a directory.
+    """
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    # One ``get`` per conf: ``spark.conf.getAll`` costs ~20 ms, since
+    # py4j fetches each entry of the map in its own round trip.
+    key = (
+        os.path.realpath(path),
+        st.st_dev,
+        st.st_ino,
+        st.st_size,
+        st.st_mtime_ns,
+        st.st_ctime_ns,
+        tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS),
+    )
+    schema = _schema_cache.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _schema_lock:
+        _schema_cache[key] = df.schema
+        while len(_schema_cache) > _SCHEMA_CACHE_SIZE:
+            _schema_cache.popitem(last=False)
+    return df
 
 
 def load_table(
@@ -55,11 +126,11 @@ def load_table(
     _set_conf_once(spark, "spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     if name == "events":
         _set_conf_once(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     else:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     ntz_cols = [c for c, t in df.dtypes if t == "timestamp_ntz"]
     for c in ntz_cols:
         df = df.withColumn(c, F.col(c).cast("timestamp"))

@@ -12,9 +12,12 @@ drains.  Plans are captured on the engine session (metalpipe defaults),
 same as bench.py times them.
 
 The ids Spark hands out per process (``#N`` expression ids,
-``plan_id=N`` exchange ids, ``RDD[N]`` ids) are normalised to ``N`` in
-the written text, so two captures of one commit diff clean and a
-before/after diff shows only real plan changes.
+``plan_id=N`` exchange ids, ``RDD[N]`` ids, the counter in PySpark's
+lambda variable names ``x_N``) are normalised to ``N`` in the written
+text, and the file:line of an RDD's call site (``NativeMethodAccessorImpl
+.java:0`` in one process, ``<unknown>:0`` in the next) to ``<site>``, so
+two captures of one commit diff clean and a before/after diff shows only
+real plan changes.
 """
 
 from __future__ import annotations
@@ -28,12 +31,14 @@ import contextlib
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-_PROCESS_IDS = re.compile(r"(#|plan_id=|RDD\[)\d+")
+_PROCESS_IDS = re.compile(r"(#|plan_id=|RDD\[|\blambda \w+_)\d+")
+_RDD_CALL_SITE = re.compile(r"(RDD\[N\] at \S+ at )\S+:\d+")
 
 
 def normalise_plan(text: str) -> str:
-    """``text`` with every per-process id replaced by ``N``."""
-    return _PROCESS_IDS.sub(r"\1N", text)
+    """``text`` with every per-process id replaced by ``N`` and every RDD
+    call site's file:line by ``<site>``."""
+    return _RDD_CALL_SITE.sub(r"\1<site>", _PROCESS_IDS.sub(r"\1N", text))
 
 
 def main() -> int:
