@@ -28,6 +28,18 @@ Fan-in = several nodes feeding one (the reference interleaves messages,
 node.py:431 → ``unionByName``), except join nodes which consume named
 upstreams.
 
+Option defaults live in the operator signatures, never here: a node
+passes an operator only the options its config sets (:func:`_kwargs`),
+and the operator's own default covers the rest, so a YAML user and a
+Python caller always get the same default.  A node that is one operator
+call is a :class:`OperatorNode` registration, not a function.  Four
+YAML defaults differ from the operator's on purpose, each noted where it
+is set: ``CSVToDictionaryList`` ``infer_schema: false``, ``Join``
+``broadcast: false``, ``NearDupDedup`` ``bands: 8`` and
+``TrainBackoffLM``'s prune ``n`` (the trainer's 3).  Options a node uses
+itself (output column names, a join's ``id_col``, ``keep_only``, view
+names) keep their defaults in the node.
+
 Template phase: jinja2 with the reference's evaluator-function contract
 (bin/metalpipe:46-74) — any undeclared template variable is resolved by
 importing it as a dotted path and calling it with no args; plain names
@@ -47,34 +59,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from metalpipe_spark.operators.aggregate import (
-    aggregate_values_node,
-    batch_messages,
-    row_stat_collector,
-)
-from metalpipe_spark.operators.filtering import (
-    filter_node,
-    random_sample,
-    systematic_sample,
-)
+from metalpipe_spark.operators.filtering import random_sample, systematic_sample
 from metalpipe_spark.operators.joins import enrich_join
-from metalpipe_spark.operators.transform import (
-    insert_data,
-    remapper,
-    serializer,
-    simple_transforms,
-    substitute_regex,
-)
-from metalpipe_spark.sources.emitters import (
-    constant_emitter,
-    counter_of_things,
-    sequence_emitter,
-)
-from metalpipe_spark.sources.readers import (
-    csv_reader,
-    local_file_reader,
-    read_parquet,
-)
+from metalpipe_spark.operators.transform import insert_data, simple_transforms
+from metalpipe_spark.sources.emitters import constant_emitter
+from metalpipe_spark.sources.readers import csv_reader, read_parquet
 from metalpipe_spark.udf_registry import load_function, wrap_udf
 
 # ---------------------------------------------------------------------------
@@ -114,6 +103,55 @@ def _one(upstreams: list[DataFrame], cls: str) -> DataFrame:
     return df
 
 
+def _kwargs(opts: Mapping[str, Any], *keys: str, **renamed: str) -> dict[str, Any]:
+    """The operator keywords a config sets: ``{k: opts[k]}`` for each of
+    ``keys`` present in ``opts``, and ``{param: opts[key]}`` for each
+    ``param="key"`` rename.  A key the config leaves out is not passed,
+    so the operator's signature default applies; an explicit ``null``
+    is passed as ``None``."""
+    pairs = [(k, k) for k in keys] + list(renamed.items())
+    return {param: opts[key] for param, key in pairs if key in opts}
+
+
+def _cast(kwargs: dict[str, Any], **fns: Callable) -> dict[str, Any]:
+    """``kwargs`` with ``fns[p]`` applied to each ``p`` it holds — for a
+    YAML value the operator takes as another type (``warc_version: 1.0``
+    parses as a float)."""
+    return {p: fns[p](v) if p in fns else v for p, v in kwargs.items()}
+
+
+def _tuple(v):
+    return None if v is None else tuple(v)
+
+
+@dataclass
+class OperatorNode:
+    """A node that is one operator call: the upstream (the session for a
+    ``source``) followed by the node's options as keywords.  ``path`` is
+    resolved at each compile, so a tracer that rebinds module attributes
+    sees the call, and the operator's module loads only when a config
+    uses the node."""
+
+    cls: str
+    path: str
+    required: tuple[str, ...] = ()  # read as opts[k]: a missing one raises
+    optional: tuple[str, ...] = ()
+    renamed: dict[str, str] = field(default_factory=dict)  # param -> YAML key
+    source: bool = False
+
+    def __call__(self, spark, upstreams, opts):
+        first = spark if self.source else _one(upstreams, self.cls)
+        return load_function(self.path)(
+            first,
+            **{k: opts[k] for k in self.required},
+            **_kwargs(opts, *self.optional, **self.renamed),
+        )
+
+
+def operator_node(cls: str, path: str, **fields) -> None:
+    NODE_CLASSES[cls] = OperatorNode(cls, path, **fields)
+
+
 # -- sources ----------------------------------------------------------------
 
 
@@ -122,50 +160,38 @@ def _parquet_reader(spark, upstreams, opts):
     return read_parquet(spark, opts["path"])
 
 
-@node_class("CSVReader")
-def _csv_reader(spark, upstreams, opts):
-    return csv_reader(
-        spark,
-        opts["path"],
-        header=opts.get("header", True),
-        infer_schema=opts.get("infer_schema", True),
-    )
+operator_node(
+    "CSVReader", "metalpipe_spark.sources.readers.csv_reader",
+    required=("path",), optional=("header", "infer_schema"), source=True,
+)
 
 
 @node_class("CSVToDictionaryList")
 def _csv_to_dictionary_list(spark, upstreams, opts):
     """node.py:1080-1088 — parse a CSV and emit the ENTIRE row list as ONE
-    message: a single row holding array<struct>.  ``infer_schema`` defaults
-    off to match ``csv.DictReader``'s all-strings dicts.  The one-message
+    message: a single row holding array<struct>.  The one-message
     shape is inherently small-data (the reference buffers the whole list in
     one dict), so the collect_list to a single row is by-construction
     bounded — large CSVs belong on the per-row ``CSVReader`` path."""
     df = csv_reader(
         spark,
         opts["path"],
-        header=opts.get("header", True),
+        **_kwargs(opts, "header"),
+        # off, unlike csv_reader: csv.DictReader yields all-strings dicts
         infer_schema=opts.get("infer_schema", False),
     )
     out_key = opts.get("output_key", "rows")
     return df.agg(F.collect_list(F.struct(*df.columns)).alias(out_key))
 
 
-@node_class("LocalFileReader")
-def _local_file_reader(spark, upstreams, opts):
-    return local_file_reader(spark, opts["path"], serialize=opts.get("serialize", False))
-
-
-@node_class("JSONLReader")
-def _jsonl_reader(spark, upstreams, opts):
-    from metalpipe_spark.sources.readers import jsonl_reader
-
-    return jsonl_reader(
-        spark,
-        opts["path"],
-        schema=opts.get("schema"),
-        multiline=opts.get("multiline", False),
-        corrupt_col=opts.get("corrupt_col"),
-    )
+operator_node(
+    "LocalFileReader", "metalpipe_spark.sources.readers.local_file_reader",
+    required=("path",), optional=("serialize",), source=True,
+)
+operator_node(
+    "JSONLReader", "metalpipe_spark.sources.readers.jsonl_reader",
+    required=("path",), optional=("schema", "multiline", "corrupt_col"), source=True,
+)
 
 
 @node_class("WETReader")
@@ -176,15 +202,8 @@ def _wet_reader(spark, upstreams, opts):
     framing; the default delimiter split is pure JVM scan."""
     from metalpipe_spark.sources.warc import read_wet
 
-    types = opts.get("record_types", ["conversion"])
-    return read_wet(
-        spark,
-        opts["path"],
-        mode=opts.get("mode", "delimiter"),
-        warc_version=str(opts.get("warc_version", "1.0")),
-        record_types=tuple(types) if types is not None else None,
-        on_error=opts.get("on_error", "fail"),
-    )
+    kw = _kwargs(opts, "mode", "warc_version", "record_types", "on_error")
+    return read_wet(spark, opts["path"], **_cast(kw, warc_version=str, record_types=_tuple))
 
 
 @node_class("WARCReader")
@@ -194,13 +213,8 @@ def _warc_reader(spark, upstreams, opts):
     chain HtmlExtract to turn text/html payloads into training text."""
     from metalpipe_spark.sources.warc import read_warc
 
-    types = opts.get("record_types", ["response"])
-    return read_warc(
-        spark,
-        opts["path"],
-        record_types=tuple(types) if types is not None else None,
-        on_error=opts.get("on_error", "fail"),
-    )
+    kw = _kwargs(opts, "record_types", "on_error")
+    return read_warc(spark, opts["path"], **_cast(kw, record_types=_tuple))
 
 
 @node_class("HtmlExtract")
@@ -218,14 +232,12 @@ def _html_extract(spark, upstreams, opts):
     return df.withColumn(opts.get("output_key", "text"), html_extract_text(src))
 
 
-@node_class("ArpaReader")
-def _arpa_reader(spark, upstreams, opts):
-    """KenLM .arpa LM -> (ngram, order, logprob, backoff) table; feed
-    the order-filtered slice to NgramLogprob for CCNet-style
-    perplexity filtering."""
-    from metalpipe_spark.sources.readers import load_arpa
-
-    return load_arpa(spark, opts["path"], order=opts.get("order"))
+# KenLM .arpa LM -> (ngram, order, logprob, backoff) table; feed the
+# order-filtered slice to NgramLogprob for CCNet-style perplexity filtering.
+operator_node(
+    "ArpaReader", "metalpipe_spark.sources.readers.load_arpa",
+    required=("path",), optional=("order",), source=True,
+)
 
 
 @node_class("NgramLogprob")
@@ -254,17 +266,11 @@ def _ngram_logprob_node(spark, upstreams, opts):
             "multi-order table for ngram_logprob); backoff: true "
             "scores ALL orders — drop one of the two options"
         )
+    kw = _kwargs(opts, "n", "oov_logprob", "text_col", "id_col")
     if len(upstreams) == 2:
         corpus, lm = upstreams
         if backoff:
-            return ngram_logprob_backoff(
-                corpus,
-                lm,
-                n=opts.get("n"),
-                oov_logprob=opts.get("oov_logprob", -8.0),
-                text_col=opts.get("text_col", "text"),
-                id_col=opts.get("id_col", "doc_id"),
-            )
+            return ngram_logprob_backoff(corpus, lm, **kw)
         if opts.get("order") is not None:  # slice a multi-order ARPA table
             lm = lm.where(F.col("order") == int(opts["order"]))
         lm = lm.select("ngram", "logprob")
@@ -280,30 +286,16 @@ def _ngram_logprob_node(spark, upstreams, opts):
         raise ValueError(
             "NgramLogprob requires [corpus, lm] upstreams or an lm option"
         )
-    return ngram_logprob(
-        corpus,
-        lm,
-        n=opts.get("n", 2),
-        oov_logprob=opts.get("oov_logprob", -8.0),
-        text_col=opts.get("text_col", "text"),
-        id_col=opts.get("id_col", "doc_id"),
-    )
+    return ngram_logprob(corpus, lm, **kw)
 
 
-@node_class("TrainNgramLM")
-def _train_ngram_lm_node(spark, upstreams, opts):
-    """Single-order add-k LM trainer (``operators.text.train_ngram_lm``)
-    as a config node — corpus upstream in, ``(ngram, n_count,
-    ctx_count, prob, logprob)`` model table out, wirable straight into
-    NgramLogprob's second upstream or WriteArpa."""
-    from metalpipe_spark.operators.text import train_ngram_lm
-
-    return train_ngram_lm(
-        _one(upstreams, "TrainNgramLM"),
-        n=opts.get("n", 2),
-        k=opts.get("k", 0.1),
-        text_col=opts.get("text_col", "text"),
-    )
+# Single-order add-k LM trainer: a (ngram, n_count, ctx_count, prob,
+# logprob) model table, wirable into NgramLogprob's second upstream or
+# WriteArpa.
+operator_node(
+    "TrainNgramLM", "metalpipe_spark.operators.text.train_ngram_lm",
+    optional=("n", "k", "text_col"),
+)
 
 
 @node_class("TrainBackoffLM")
@@ -321,36 +313,26 @@ def _train_backoff_lm_node(spark, upstreams, opts):
 
     lm = train_backoff_lm(
         _one(upstreams, "TrainBackoffLM"),
-        n=opts.get("n", 3),
-        text_col=opts.get("text_col", "text"),
-        discount=opts.get("discount", 0.75),
-        smoothing=opts.get("smoothing", "absolute"),
+        **_kwargs(opts, "n", "text_col", "discount", "smoothing"),
     )
     if opts.get("min_counts") is not None or opts.get(
         "entropy_threshold"
     ) is not None:
         lm = prune_lm(
             lm,
-            min_counts=opts.get("min_counts"),
-            entropy_threshold=opts.get("entropy_threshold"),
+            **_kwargs(opts, "min_counts", "entropy_threshold"),
+            # the trained table's order: train_backoff_lm's n default
             n=opts.get("n", 3),
         )
     return lm
 
 
-@node_class("PruneLM")
-def _prune_lm_node(spark, upstreams, opts):
-    """Standalone LM pruning (``operators.text.prune_lm``) — for
-    pruning a trainer table produced elsewhere in the graph at a
-    different threshold than the trainer node applied."""
-    from metalpipe_spark.operators.text import prune_lm
-
-    return prune_lm(
-        _one(upstreams, "PruneLM"),
-        min_counts=opts.get("min_counts"),
-        entropy_threshold=opts.get("entropy_threshold"),
-        n=opts.get("n"),
-    )
+# Standalone pruning, for a trainer table produced elsewhere in the graph
+# at a different threshold than the trainer node applied.
+operator_node(
+    "PruneLM", "metalpipe_spark.operators.text.prune_lm",
+    optional=("min_counts", "entropy_threshold", "n"),
+)
 
 
 @node_class("WriteArpa")
@@ -364,25 +346,23 @@ def _write_arpa_node(spark, upstreams, opts):
     from metalpipe_spark.operators.text import write_arpa
 
     lm = _one(upstreams, "WriteArpa")
-    write_arpa(lm, opts["path"], n=opts.get("n"))
+    write_arpa(lm, opts["path"], **_kwargs(opts, "n"))
     return lm
 
 
 @node_class("ConstantEmitter")
 def _constant_emitter(spark, upstreams, opts):
-    return constant_emitter(spark, opts.get("thing"), max_loops=opts.get("max_loops", 5))
+    return constant_emitter(spark, opts.get("thing"), **_kwargs(opts, "max_loops"))
 
 
-@node_class("SequenceEmitter")
-def _sequence_emitter(spark, upstreams, opts):
-    return sequence_emitter(
-        spark, opts["sequence"], max_sequences=opts.get("max_sequences", 1)
-    )
-
-
-@node_class("CounterOfThings")
-def _counter(spark, upstreams, opts):
-    return counter_of_things(spark, opts.get("start", 0), opts.get("end"))
+operator_node(
+    "SequenceEmitter", "metalpipe_spark.sources.emitters.sequence_emitter",
+    required=("sequence",), optional=("max_sequences",), source=True,
+)
+operator_node(
+    "CounterOfThings", "metalpipe_spark.sources.emitters.counter_of_things",
+    optional=("start", "end"), source=True,
+)
 
 
 @node_class("GetEnvironmentVariables")
@@ -401,19 +381,13 @@ def _env_vars(spark, upstreams, opts):
 # -- transforms -------------------------------------------------------------
 
 
-@node_class("Filter")
-def _filter(spark, upstreams, opts):
-    return filter_node(
-        _one(upstreams, "Filter"),
-        opts["test"],
-        opts["test_keypath"],
-        value=opts.get("value", True),
-    )
-
-
-@node_class("Remapper")
-def _remapper(spark, upstreams, opts):
-    return remapper(_one(upstreams, "Remapper"), opts["mapping"])
+operator_node(
+    "Filter", "metalpipe_spark.operators.filtering.filter_node",
+    required=("test", "test_keypath"), optional=("value",),
+)
+operator_node(
+    "Remapper", "metalpipe_spark.operators.transform.remapper", required=("mapping",),
+)
 
 
 @node_class("InsertData")
@@ -421,19 +395,14 @@ def _insert(spark, upstreams, opts):
     return insert_data(
         _one(upstreams, "InsertData"),
         opts.get("values", {k: v for k, v in opts.items() if k not in ("overwrite", "overwrite_if_null")}),
-        overwrite=opts.get("overwrite", True),
-        overwrite_if_null=opts.get("overwrite_if_null", True),
+        **_kwargs(opts, "overwrite", "overwrite_if_null"),
     )
 
 
-@node_class("SubstituteRegex")
-def _regex(spark, upstreams, opts):
-    return substitute_regex(
-        _one(upstreams, "SubstituteRegex"),
-        opts["key"],
-        opts["match_regex"],
-        opts["substitute_string"],
-    )
+operator_node(
+    "SubstituteRegex", "metalpipe_spark.operators.transform.substitute_regex",
+    required=("key", "match_regex", "substitute_string"),
+)
 
 
 @node_class("SimpleTransforms")
@@ -467,37 +436,34 @@ def _simple_transforms(spark, upstreams, opts):
     return simple_transforms(_one(upstreams, "SimpleTransforms"), specs)
 
 
-@node_class("Serializer")
-def _serializer(spark, upstreams, opts):
-    return serializer(_one(upstreams, "Serializer"), opts["key"], opts.get("output_key"))
+operator_node(
+    "Serializer", "metalpipe_spark.operators.transform.serializer",
+    required=("key",), optional=("output_key",),
+)
 
 
 @node_class("RandomSample")
 def _sample(spark, upstreams, opts):
     if "modulus" in opts:
         return systematic_sample(
-            _one(upstreams, "RandomSample"), opts["key"], opts["modulus"], opts.get("remainder", 0)
+            _one(upstreams, "RandomSample"), opts["key"], opts["modulus"],
+            **_kwargs(opts, "remainder"),
         )
-    return random_sample(_one(upstreams, "RandomSample"), opts.get("sample", 0.1), opts.get("seed"))
+    return random_sample(_one(upstreams, "RandomSample"), **_kwargs(opts, "sample", "seed"))
 
 
-@node_class("BatchMessages")
-def _batch(spark, upstreams, opts):
-    return batch_messages(
-        _one(upstreams, "BatchMessages"), opts["batch_size"], opts["key"], opts.get("payload")
-    )
-
-
-@node_class("AggregateValues")
-def _agg_values(spark, upstreams, opts):
-    return aggregate_values_node(
-        _one(upstreams, "AggregateValues"), opts["tail_path"], opts.get("output_key", "values")
-    )
-
-
-@node_class("RowStatCollector")
-def _profile(spark, upstreams, opts):
-    return row_stat_collector(_one(upstreams, "RowStatCollector"), opts.get("columns"))
+operator_node(
+    "BatchMessages", "metalpipe_spark.operators.aggregate.batch_messages",
+    required=("batch_size", "key"), optional=("payload",),
+)
+operator_node(
+    "AggregateValues", "metalpipe_spark.operators.aggregate.aggregate_values_node",
+    required=("tail_path",), optional=("output_key",),
+)
+operator_node(
+    "RowStatCollector", "metalpipe_spark.operators.aggregate.row_stat_collector",
+    optional=("columns",),
+)
 
 
 @node_class("Join")
@@ -507,24 +473,18 @@ def _join(spark, upstreams, opts):
     if len(upstreams) != 2:
         raise ValueError("Join requires exactly two upstream nodes")
     left, right = upstreams
-    return enrich_join(left, right, on=opts["on"], how=opts.get("how", "inner"),
+    # no broadcast unless asked, unlike enrich_join: neither upstream is
+    # known to be the small dimension side
+    return enrich_join(left, right, on=opts["on"], **_kwargs(opts, "how"),
                        broadcast_dim=opts.get("broadcast", False))
 
 
-@node_class("CorpusReport")
-def _corpus_report_node(spark, upstreams, opts):
-    """One-row dataset-card summary of the upstream corpus
-    (operators/text.py:corpus_report)."""
-    from metalpipe_spark.operators.text import corpus_report
-
-    return corpus_report(
-        _one(upstreams, "CorpusReport"),
-        text_col=opts.get("text_column", "text"),
-        id_col=opts.get("id_column", "doc_id"),
-        lang_col=opts.get("lang_column", "lang"),
-        source_col=opts.get("source_column", "source"),
-        exact_distinct=opts.get("exact_distinct", True),
-    )
+operator_node(
+    "CorpusReport", "metalpipe_spark.operators.text.corpus_report",
+    optional=("exact_distinct",),
+    renamed={"text_col": "text_column", "id_col": "id_column",
+             "lang_col": "lang_column", "source_col": "source_column"},
+)
 
 
 @node_class("BM25TopK")
@@ -533,13 +493,8 @@ def _bm25_topk_node(spark, upstreams, opts):
     text.py:bm25_topk); ``terms`` is the query bag."""
     from metalpipe_spark.operators.text import bm25_topk
 
-    return bm25_topk(
-        _one(upstreams, "BM25TopK"),
-        list(opts["terms"]),
-        k=int(opts.get("k", 10)),
-        text_col=opts.get("text_column", "text"),
-        id_col=opts.get("id_column", "doc_id"),
-    )
+    kw = _kwargs(opts, "k", text_col="text_column", id_col="id_column")
+    return bm25_topk(_one(upstreams, "BM25TopK"), list(opts["terms"]), **_cast(kw, k=int))
 
 
 @node_class("BM25Batch")
@@ -551,13 +506,8 @@ def _bm25_batch_node(spark, upstreams, opts):
     if len(upstreams) != 2:
         raise ValueError("BM25Batch requires exactly (corpus, queries) upstreams")
     corpus, queries = upstreams
-    return bm25_topk_batch(
-        corpus,
-        queries,
-        k=int(opts.get("k", 10)),
-        text_col=opts.get("text_column", "text"),
-        id_col=opts.get("id_column", "doc_id"),
-    )
+    kw = _kwargs(opts, "k", text_col="text_column", id_col="id_column")
+    return bm25_topk_batch(corpus, queries, **_cast(kw, k=int))
 
 
 @node_class("RRFFuse")
@@ -575,12 +525,8 @@ def _rrf_fuse_node(spark, upstreams, opts):
         raise ValueError(
             f"RRFFuse: {len(upstreams)} upstream(s) but {len(names)} source name(s)"
         )
-    return rrf_fuse(
-        dict(zip(names, upstreams)),
-        k=int(opts.get("k", 10)),
-        c=int(opts.get("c", 60)),
-        id_col=opts.get("id_column", "doc_id"),
-    )
+    kw = _kwargs(opts, "k", "c", id_col="id_column")
+    return rrf_fuse(dict(zip(names, upstreams)), **_cast(kw, k=int, c=int))
 
 
 @node_class("SQLExecute")
@@ -605,7 +551,7 @@ def _fn_of_message(spark, upstreams, opts):
     """node.py:996-1013 — named function applied per record; compiled to a
     typed UDF column rather than a whole-row Python pass."""
     df = _one(upstreams, "FunctionOfMessage")
-    fn = wrap_udf(opts["function"], opts.get("return_type", "string"), mode=opts.get("mode", "pandas"))
+    fn = wrap_udf(opts["function"], **_kwargs(opts, "return_type", "mode"))
     cols = [opts["key"]] if "key" in opts else df.columns
     return df.withColumn(opts.get("output_key", "result"), fn(*cols))
 
@@ -613,19 +559,13 @@ def _fn_of_message(spark, upstreams, opts):
 # -- streaming sources ------------------------------------------------------
 
 
-@node_class("LocalDirectoryWatchdog")
-def _watchdog(spark, upstreams, opts):
-    """node.py:1500-1525 — directory poller as the Structured Streaming
-    file source (checkpointed discovery instead of mtime polling)."""
-    from metalpipe_spark.streaming.streams import file_watchdog
-
-    return file_watchdog(
-        spark,
-        opts["directory"],
-        opts["schema"],
-        fmt=opts.get("format", "parquet"),
-        max_files_per_trigger=opts.get("max_files_per_trigger"),
-    )
+# node.py:1500-1525 — directory poller as the Structured Streaming file
+# source (checkpointed discovery instead of mtime polling).
+operator_node(
+    "LocalDirectoryWatchdog", "metalpipe_spark.streaming.streams.file_watchdog",
+    required=("directory", "schema"), optional=("max_files_per_trigger",),
+    renamed={"fmt": "format"}, source=True,
+)
 
 
 @node_class("WETStream")
@@ -635,15 +575,8 @@ def _wet_stream(spark, upstreams, opts):
     behind it."""
     from metalpipe_spark.sources.warc import stream_wet
 
-    types = opts.get("record_types", ["conversion"])
-    return stream_wet(
-        spark,
-        opts["directory"],
-        warc_version=str(opts.get("warc_version", "1.0")),
-        record_types=tuple(types) if types is not None else None,
-        glob=opts.get("glob", "*.gz"),
-        max_files_per_trigger=opts.get("max_files_per_trigger"),
-    )
+    kw = _kwargs(opts, "warc_version", "record_types", "glob", "max_files_per_trigger")
+    return stream_wet(spark, opts["directory"], **_cast(kw, warc_version=str, record_types=_tuple))
 
 
 @node_class("TimeWindowAccumulator")
@@ -661,12 +594,7 @@ def _time_window(spark, upstreams, opts):
         col = FF.lit(1) if spec.get("column", "*") == "*" else FF.col(spec["column"])
         aggs.append(fn(col).alias(spec.get("alias", spec["fn"])))
     return tumbling_window(
-        df,
-        opts["ts_col"],
-        opts["window"],
-        aggs,
-        watermark=opts.get("watermark", "30 seconds"),
-        group_by=opts.get("group_by"),
+        df, opts["ts_col"], opts["window"], aggs, **_kwargs(opts, "watermark", "group_by")
     )
 
 
@@ -685,9 +613,7 @@ def _streaming_join(spark, upstreams, opts):
         on=opts["on"],
         left_ts=opts["left_ts"],
         right_ts=opts["right_ts"],
-        window=opts.get("window", "30 seconds"),
-        watermark=opts.get("watermark", "30 seconds"),
-        how=opts.get("how", "inner"),
+        **_kwargs(opts, "window", "watermark", "how"),
     )
 
 
@@ -724,15 +650,9 @@ def _blocker(spark, upstreams, opts):
 # -- training-data curation nodes (beyond the reference; COVERAGE.md) -------
 
 
-@node_class("ScrubPII")
-def _scrub_pii(spark, upstreams, opts):
-    from metalpipe_spark.operators.text import scrub_pii
-
-    return scrub_pii(
-        _one(upstreams, "ScrubPII"),
-        text_col=opts.get("text_col", "text"),
-        out_col=opts.get("out_col"),
-    )
+operator_node(
+    "ScrubPII", "metalpipe_spark.operators.text.scrub_pii", optional=("text_col", "out_col"),
+)
 
 
 @node_class("DetectLanguage")
@@ -757,10 +677,7 @@ def _detect_language_model_node(spark, upstreams, opts):
         opts.get("output_key", "lang_pred"),
         detect_language_model(
             opts.get("text_key", "text"),
-            classes=opts.get("classes"),
-            weights=opts.get("weights"),
-            biases=opts.get("biases"),
-            script_weights=opts.get("script_weights"),
+            **_kwargs(opts, "classes", "weights", "biases", "script_weights"),
         ),
     )
 
@@ -784,7 +701,7 @@ def _exact_dedup_node(spark, upstreams, opts):
 
     df = _one(upstreams, "ExactDedup")
     id_col = opts.get("id_col", "doc_id")
-    keep = exact_dedup(df, opts.get("text_col", "text"), id_col)
+    keep = exact_dedup(df, id_col=id_col, **_kwargs(opts, "text_col"))
     return df.join(keep, id_col, "left_semi")
 
 
@@ -796,34 +713,24 @@ def _near_dup_dedup_node(spark, upstreams, opts):
     threshold = opts.get("threshold", 0.5)
     pairs = minhash_lsh_pairs(
         df,
-        text_col=opts.get("text_col", "text"),
-        id_col=opts.get("id_col", "doc_id"),
-        num_hashes=opts.get("num_hashes", 16),
+        # hash: xxhash64 is the production knob (1.3-1.4x measured on
+        # the minhash family); md5 stays the portable default.
+        **_kwargs(opts, "text_col", "id_col", "num_hashes", "hash"),
+        # 8 bands of 2 rows, not minhash_lsh_pairs' 4 of 4: the S-curve
+        # knee (~0.35) sits below the default 0.5 est_jaccard cut
         bands=opts.get("bands", 8),
         # auto_bands: let the S-curve tuner size the banding for the
         # SAME threshold the est_jaccard cut uses (tune_lsh_bands)
         threshold=threshold if opts.get("auto_bands") else None,
-        # hash: xxhash64 is the production knob (1.3-1.4x measured on
-        # the minhash family); md5 stays the portable default.
-        hash=opts.get("hash", "md5"),
     ).where(F.col("est_jaccard") >= threshold)
-    return dedup_corpus(df, pairs, id_col=opts.get("id_col", "doc_id"))
+    return dedup_corpus(df, pairs, **_kwargs(opts, "id_col"))
 
 
-@node_class("ExactSubstrDedup")
-def _exact_substr_dedup_node(spark, upstreams, opts):
-    """Exact duplicated-substring removal (Lee et al. 2022 ExactSubstr
-    semantics): operators/dedup.exact_substr_dedup."""
-    from metalpipe_spark.operators.dedup import exact_substr_dedup
-
-    df = _one(upstreams, "ExactSubstrDedup")
-    return exact_substr_dedup(
-        df,
-        text_col=opts.get("text_col", "text"),
-        id_col=opts.get("id_col", "doc_id"),
-        min_length=opts.get("min_length", 32),
-        hash=opts.get("hash", "md5"),
-    )
+# Exact duplicated-substring removal (Lee et al. 2022 ExactSubstr semantics).
+operator_node(
+    "ExactSubstrDedup", "metalpipe_spark.operators.dedup.exact_substr_dedup",
+    optional=("text_col", "id_col", "min_length", "hash"),
+)
 
 
 @node_class("IncrementalExactSubstr")
@@ -843,54 +750,25 @@ def _incremental_exact_substr_node(spark, upstreams, opts):
     clean, store = incremental_exact_substr(
         upstreams[0],
         upstreams[1] if len(upstreams) == 2 else None,
-        text_col=opts.get("text_col", "text"),
-        id_col=opts.get("id_col", "doc_id"),
-        min_length=opts.get("min_length", 32),
-        hash=opts.get("hash", "md5"),
+        **_kwargs(opts, "text_col", "id_col", "min_length", "hash"),
     )
     if opts.get("store_view"):
         store.createOrReplaceTempView(opts["store_view"])
     return clean
 
 
-@node_class("ChunkDocuments")
-def _chunk_documents_node(spark, upstreams, opts):
-    from metalpipe_spark.operators.text import chunk_documents
-
-    return chunk_documents(
-        _one(upstreams, "ChunkDocuments"),
-        text_col=opts.get("text_col", "text"),
-        id_col=opts.get("id_col", "doc_id"),
-        chunk_tokens=opts.get("chunk_tokens", 64),
-        overlap=opts.get("overlap", 16),
-    )
-
-
-@node_class("StratifiedSample")
-def _stratified_sample_node(spark, upstreams, opts):
-    from metalpipe_spark.operators.curation import stratified_sample
-
-    return stratified_sample(
-        _one(upstreams, "StratifiedSample"),
-        strata_col=opts["strata_col"],
-        fractions=opts["fractions"],
-        key_col=opts["key_col"],
-        default_fraction=opts.get("default_fraction", 0.0),
-    )
-
-
-@node_class("TopKPerGroup")
-def _topk_per_group_node(spark, upstreams, opts):
-    from metalpipe_spark.operators.curation import topk_per_group
-
-    return topk_per_group(
-        _one(upstreams, "TopKPerGroup"),
-        group_col=opts["group_col"],
-        order_col=opts["order_col"],
-        k=opts["k"],
-        tie_col=opts.get("tie_col"),
-        descending=opts.get("descending", True),
-    )
+operator_node(
+    "ChunkDocuments", "metalpipe_spark.operators.text.chunk_documents",
+    optional=("text_col", "id_col", "chunk_tokens", "overlap"),
+)
+operator_node(
+    "StratifiedSample", "metalpipe_spark.operators.curation.stratified_sample",
+    required=("strata_col", "fractions", "key_col"), optional=("default_fraction",),
+)
+operator_node(
+    "TopKPerGroup", "metalpipe_spark.operators.curation.topk_per_group",
+    required=("group_col", "order_col", "k"), optional=("tie_col", "descending"),
+)
 
 
 @node_class("QualityFilter")
@@ -901,43 +779,24 @@ def _quality_filter_node(spark, upstreams, opts):
 
     df = _one(upstreams, "QualityFilter")
     id_col = opts.get("id_col", "doc_id")
-    verdicts = quality_filter(df, opts.get("text_col", "text"), id_col)
+    verdicts = quality_filter(df, id_col=id_col, **_kwargs(opts, "text_col"))
     if opts.get("keep_only", True):
         keepers = verdicts.where(F.col("keep")).select(id_col)
         return df.join(keepers, id_col, "left_semi")
     return df.join(verdicts, id_col)
 
 
-@node_class("ParagraphDedup")
-def _paragraph_dedup_node(spark, upstreams, opts):
-    from metalpipe_spark.operators.dedup import chunk_level_dedup
-
-    return chunk_level_dedup(
-        _one(upstreams, "ParagraphDedup"),
-        text_col=opts.get("text_col", "text"),
-        id_col=opts.get("id_col", "doc_id"),
-        chunk_tokens=opts.get("chunk_tokens", 32),
-    )
-
-
-@node_class("EmbedDocuments")
-def _embed_documents_node(spark, upstreams, opts):
-    """Batched embedding inference (operators/inference.py): appends
-    ``output_col`` = model(text_col) via mapInPandas with executor-side
-    model caching.  ``model`` is a spec string — the built-in
-    deterministic fixture is ``hashed-projection:{dim}[:{salt}]``; real
-    encoders plug in via register_embedding_model."""
-    from metalpipe_spark.operators.inference import embed_documents
-
-    df = _one(upstreams, "EmbedDocuments")
-    return embed_documents(
-        df,
-        text_col=opts.get("text_col", "text"),
-        model=opts.get("model", "hashed-projection:64"),
-        output_col=opts.get("output_col", "embedding"),
-        batch_size=opts.get("batch_size", 256),
-        max_concurrent=opts.get("max_concurrent"),
-    )
+operator_node(
+    "ParagraphDedup", "metalpipe_spark.operators.dedup.chunk_level_dedup",
+    optional=("text_col", "id_col", "chunk_tokens"),
+)
+# ``model`` is a spec string: the built-in deterministic fixture is
+# ``hashed-projection:{dim}[:{salt}]``; real encoders plug in via
+# register_embedding_model.
+operator_node(
+    "EmbedDocuments", "metalpipe_spark.operators.inference.embed_documents",
+    optional=("text_col", "model", "output_col", "batch_size", "max_concurrent"),
+)
 
 
 @node_class("IncrementalEmbed")
@@ -957,11 +816,7 @@ def _incremental_embed_node(spark, upstreams, opts):
     fresh, updated = incremental_embed(
         batch,
         store,
-        text_col=opts.get("text_col", "text"),
-        id_col=opts.get("id_col", "doc_id"),
-        model=opts.get("model", "hashed-projection:64"),
-        batch_size=opts.get("batch_size", 256),
-        max_concurrent=opts.get("max_concurrent"),
+        **_kwargs(opts, "text_col", "id_col", "model", "batch_size", "max_concurrent"),
     )
     if opts.get("fresh_view"):
         fresh.createOrReplaceTempView(opts["fresh_view"])
@@ -986,19 +841,12 @@ def _decontaminate_node(spark, upstreams, opts):
     if len(upstreams) != 2:
         raise ValueError("Decontaminate requires [corpus, benchmark] upstreams")
     corpus, benchmark = upstreams
+    kw = _kwargs(opts, "text_col", "id_col", "n")
     if method == "bloom":
         from metalpipe_spark.operators.sketches import bloom_decontaminate
 
         clean, report = bloom_decontaminate(
-            corpus,
-            benchmark,
-            text_col=opts.get("text_col", "text"),
-            id_col=opts.get("id_col", "doc_id"),
-            n=opts.get("n", 3),
-            m_bits=opts.get("m_bits", 1 << 18),
-            k=opts.get("k", 4),
-            min_hits=opts.get("min_hits", 3),
-            hash=opts.get("hash", "md5"),
+            corpus, benchmark, **kw, **_kwargs(opts, "m_bits", "k", "min_hits", "hash")
         )
     elif method == "exact":
         from metalpipe_spark.operators.dedup import decontaminate
@@ -1009,14 +857,7 @@ def _decontaminate_node(spark, upstreams, opts):
                 "hashes nothing — the hash option only applies to "
                 "method: bloom"
             )
-        clean, report = decontaminate(
-            corpus,
-            benchmark,
-            text_col=opts.get("text_col", "text"),
-            id_col=opts.get("id_col", "doc_id"),
-            n=opts.get("n", 3),
-            min_shared=opts.get("min_shared", 3),
-        )
+        clean, report = decontaminate(corpus, benchmark, **kw, **_kwargs(opts, "min_shared"))
     else:
         raise ValueError(
             f"Decontaminate method must be 'exact' or 'bloom', got {method!r}"
@@ -1026,31 +867,14 @@ def _decontaminate_node(spark, upstreams, opts):
     return clean
 
 
-@node_class("PackShards")
-def _pack_shards_node(spark, upstreams, opts):
-    from metalpipe_spark.operators.curation import pack_shards
-
-    return pack_shards(
-        _one(upstreams, "PackShards"),
-        weight_col=opts["weight_col"],
-        order_col=opts["order_col"],
-        shard_budget=opts["shard_budget"],
-    )
-
-
-@node_class("BoilerplateRemoval")
-def _boilerplate_removal_node(spark, upstreams, opts):
-    """Strip every occurrence of a chunk appearing in >= min_df distinct
-    docs (catalog row q_boilerplate_removal)."""
-    from metalpipe_spark.operators.dedup import boilerplate_chunk_removal
-
-    return boilerplate_chunk_removal(
-        _one(upstreams, "BoilerplateRemoval"),
-        text_col=opts.get("text_col", "text"),
-        id_col=opts.get("id_col", "doc_id"),
-        chunk_tokens=opts.get("chunk_tokens", 32),
-        min_df=opts.get("min_df", 3),
-    )
+operator_node(
+    "PackShards", "metalpipe_spark.operators.curation.pack_shards",
+    required=("weight_col", "order_col", "shard_budget"),
+)
+operator_node(
+    "BoilerplateRemoval", "metalpipe_spark.operators.dedup.boilerplate_chunk_removal",
+    optional=("text_col", "id_col", "chunk_tokens", "min_df"),
+)
 
 
 @node_class("KeepBestDedup")
@@ -1063,11 +887,7 @@ def _keep_best_dedup_node(spark, upstreams, opts):
         raise ValueError("KeepBestDedup requires [docs, assignments] upstreams")
     docs, assignments = upstreams
     return dedup_corpus_keep_best(
-        docs,
-        assignments,
-        score_col=opts["score_col"],
-        id_col=opts.get("id_col", "doc_id"),
-        cluster_col=opts.get("cluster_col", "cluster_id"),
+        docs, assignments, score_col=opts["score_col"], **_kwargs(opts, "id_col", "cluster_col")
     )
 
 
@@ -1085,16 +905,9 @@ def _vocab_coverage_node(spark, upstreams, opts):
     else:
         raise ValueError("VocabCoverage takes [docs] or [docs, vocab_corpus]")
     vocab = build_vocabulary(
-        vocab_src,
-        text_col=opts.get("text_col", "text"),
-        vocab_size=int(opts.get("vocab_size", 50_000)),
+        vocab_src, **_cast(_kwargs(opts, "text_col", "vocab_size"), vocab_size=int)
     )
-    return oov_rate(
-        docs,
-        vocab,
-        text_col=opts.get("text_col", "text"),
-        id_col=opts.get("id_col", "doc_id"),
-    )
+    return oov_rate(docs, vocab, **_kwargs(opts, "text_col", "id_col"))
 
 
 @node_class("LeakageFreeSplit")
@@ -1111,55 +924,24 @@ def _leakage_free_split_node(spark, upstreams, opts):
         docs,
         assignments,
         fractions=opts["fractions"],
-        id_col=opts.get("id_col", "doc_id"),
-        cluster_col=opts.get("cluster_col", "cluster_id"),
-        split_col=opts.get("split_col", "split"),
-        salt=opts.get("salt", ""),
+        **_kwargs(opts, "id_col", "cluster_col", "split_col", "salt"),
     )
 
 
-@node_class("TokenBudgetSample")
-def _token_budget_sample_node(spark, upstreams, opts):
-    """Document-atomic token-budget cut in order_col order
-    (q_token_budget_sample)."""
-    from metalpipe_spark.operators.curation import token_budget_sample
-
-    return token_budget_sample(
-        _one(upstreams, "TokenBudgetSample"),
-        weight_col=opts["weight_col"],
-        order_col=opts["order_col"],
-        budget=opts["budget"],
-    )
-
-
-@node_class("PivotPinned")
-def _pivot_pinned_node(spark, upstreams, opts):
-    """Pivot with pinned values as ONE conditional aggregate — never
-    the double-aggregate .pivot() plan (q_pivot_orders)."""
-    from metalpipe_spark.operators.aggregate import pivot_pinned
-
-    return pivot_pinned(
-        _one(upstreams, "PivotPinned"),
-        group_cols=opts["group_cols"],
-        pivot_col=opts["pivot_col"],
-        values=opts["values"],
-        agg_col=opts["agg_col"],
-        agg=opts.get("agg", "sum"),
-        out_names=opts.get("out_names"),
-    )
-
-
-@node_class("NormalizedDedup")
-def _normalized_dedup_node(spark, upstreams, opts):
-    """Exact dedup over CCNet-normalized text: min-id survivor per
-    normalized fingerprint (catalog row q_normalized_dedup)."""
-    from metalpipe_spark.operators.text import normalized_dedup
-
-    return normalized_dedup(
-        _one(upstreams, "NormalizedDedup"),
-        text_col=opts.get("text_col", "text"),
-        id_col=opts.get("id_col", "doc_id"),
-    )
+operator_node(
+    "TokenBudgetSample", "metalpipe_spark.operators.curation.token_budget_sample",
+    required=("weight_col", "order_col", "budget"),
+)
+# Pivot with pinned values as ONE conditional aggregate — never the
+# double-aggregate .pivot() plan (q_pivot_orders).
+operator_node(
+    "PivotPinned", "metalpipe_spark.operators.aggregate.pivot_pinned",
+    required=("group_cols", "pivot_col", "values", "agg_col"), optional=("agg", "out_names"),
+)
+operator_node(
+    "NormalizedDedup", "metalpipe_spark.operators.text.normalized_dedup",
+    optional=("text_col", "id_col"),
+)
 
 
 @node_class("ExtractHost")
@@ -1170,9 +952,7 @@ def _extract_host_node(spark, upstreams, opts):
     df = _one(upstreams, "ExtractHost")
     return df.withColumn(
         opts.get("output_key", "host"),
-        extract_host(
-            opts.get("url_key", "url"), strip_www=opts.get("strip_www", True)
-        ),
+        extract_host(opts.get("url_key", "url"), **_kwargs(opts, "strip_www")),
     )
 
 
@@ -1182,82 +962,34 @@ def _url_normalize_node(spark, upstreams, opts):
     from metalpipe_spark.operators.web import url_normalize
 
     df = _one(upstreams, "URLNormalize")
-    url_key = opts.get("url_key", "url")
     return df.withColumn(
         opts.get("output_key", "url_norm"),
-        url_normalize(url_key, strip_www=opts.get("strip_www", True)),
+        url_normalize(opts.get("url_key", "url"), **_kwargs(opts, "strip_www")),
     )
 
 
-@node_class("DomainStats")
-def _domain_stats_node(spark, upstreams, opts):
-    """Per-domain aggregates (host, n_docs, n_urls[, total_size])."""
-    from metalpipe_spark.operators.web import domain_stats
-
-    return domain_stats(
-        _one(upstreams, "DomainStats"),
-        url_col=opts.get("url_key", "url"),
-        size_col=opts.get("size_key"),
-        strip_www=opts.get("strip_www", True),
-    )
-
-
-@node_class("HostFilter")
-def _host_filter_node(spark, upstreams, opts):
-    """Allow/block-list host filtering (lists inline as plan literals)."""
-    from metalpipe_spark.operators.web import host_filter
-
-    return host_filter(
-        _one(upstreams, "HostFilter"),
-        url_col=opts.get("url_key", "url"),
-        allowlist=opts.get("allowlist"),
-        blacklist=opts.get("blacklist"),
-        strip_www=opts.get("strip_www", True),
-    )
-
-
-@node_class("URLDedup")
-def _url_dedup_node(spark, upstreams, opts):
-    """Min-id survivor per canonical URL (url_normalize key)."""
-    from metalpipe_spark.operators.web import url_dedup
-
-    return url_dedup(
-        _one(upstreams, "URLDedup"),
-        url_col=opts.get("url_key", "url"),
-        id_col=opts.get("id_key", "doc_id"),
-        strip_www=opts.get("strip_www", True),
-    )
-
-
-@node_class("HostRank")
-def _host_rank_node(spark, upstreams, opts):
-    """PageRank over a host-link graph (operators/web.py:host_rank) —
-    upstream rows are edges (src/dst host columns); set
-    ``fixed_point_scale`` for bit-reproducible ranks."""
-    from metalpipe_spark.operators.web import host_rank
-
-    return host_rank(
-        _one(upstreams, "HostRank"),
-        src=opts.get("src", "src_host"),
-        dst=opts.get("dst", "dst_host"),
-        damping=opts.get("damping", 0.85),
-        iterations=opts.get("iterations", 3),
-        fixed_point_scale=opts.get("fixed_point_scale"),
-    )
-
-
-@node_class("TrainBPE")
-def _train_bpe_node(spark, upstreams, opts):
-    """Learn a BPE merge table from the upstream corpus
-    (operators/bpe.py:train_bpe)."""
-    from metalpipe_spark.operators.bpe import train_bpe
-
-    return train_bpe(
-        _one(upstreams, "TrainBPE"),
-        text_col=opts.get("text_column", "text"),
-        num_merges=opts.get("num_merges", 100),
-        min_pair_count=opts.get("min_pair_count", 2),
-    )
+operator_node(
+    "DomainStats", "metalpipe_spark.operators.web.domain_stats",
+    optional=("strip_www",), renamed={"url_col": "url_key", "size_col": "size_key"},
+)
+operator_node(
+    "HostFilter", "metalpipe_spark.operators.web.host_filter",
+    optional=("allowlist", "blacklist", "strip_www"), renamed={"url_col": "url_key"},
+)
+operator_node(
+    "URLDedup", "metalpipe_spark.operators.web.url_dedup",
+    optional=("strip_www",), renamed={"url_col": "url_key", "id_col": "id_key"},
+)
+# PageRank over a host-link graph — upstream rows are edges (src/dst host
+# columns); set ``fixed_point_scale`` for bit-reproducible ranks.
+operator_node(
+    "HostRank", "metalpipe_spark.operators.web.host_rank",
+    optional=("src", "dst", "damping", "iterations", "fixed_point_scale"),
+)
+operator_node(
+    "TrainBPE", "metalpipe_spark.operators.bpe.train_bpe",
+    optional=("num_merges", "min_pair_count"), renamed={"text_col": "text_column"},
+)
 
 
 @node_class("BPEEncode")
@@ -1282,26 +1014,14 @@ def _bpe_encode_node(spark, upstreams, opts):
         merges = tables[0]
         corpus = next(u for u in upstreams if u is not merges)
     return bpe_encode(
-        corpus,
-        merges,
-        text_col=opts.get("text_column", "text"),
-        id_col=opts.get("id_column", "doc_id"),
+        corpus, merges, **_kwargs(opts, text_col="text_column", id_col="id_column")
     )
 
 
-@node_class("TrainUnigram")
-def _train_unigram_node(spark, upstreams, opts):
-    """Learn a unigram (SentencePiece-family) piece table
-    (operators/unigram.py:train_unigram)."""
-    from metalpipe_spark.operators.unigram import train_unigram
-
-    return train_unigram(
-        _one(upstreams, "TrainUnigram"),
-        text_col=opts.get("text_column", "text"),
-        vocab_size=opts.get("vocab_size", 200),
-        max_piece_len=opts.get("max_piece_len", 6),
-        em_iters=opts.get("em_iters", 2),
-    )
+operator_node(
+    "TrainUnigram", "metalpipe_spark.operators.unigram.train_unigram",
+    optional=("vocab_size", "max_piece_len", "em_iters"), renamed={"text_col": "text_column"},
+)
 
 
 @node_class("UnigramEncode")
@@ -1325,25 +1045,16 @@ def _unigram_encode_node(spark, upstreams, opts):
         pieces = tables[0]
         corpus = next(u for u in upstreams if u is not pieces)
     return unigram_encode(
-        corpus,
-        pieces,
-        text_col=opts.get("text_column", "text"),
-        id_col=opts.get("id_column", "doc_id"),
+        corpus, pieces, **_kwargs(opts, text_col="text_column", id_col="id_column")
     )
 
 
-@node_class("ParseRobots")
-def _parse_robots_node(spark, upstreams, opts):
-    """robots.txt bodies -> RFC 9309 rule table for one user-agent
-    (operators/web.py:parse_robots); upstream rows carry host + body."""
-    from metalpipe_spark.operators.web import parse_robots
-
-    return parse_robots(
-        _one(upstreams, "ParseRobots"),
-        host_col=opts.get("host_key", "host"),
-        body_col=opts.get("body_key", "body"),
-        agent=opts.get("agent", "*"),
-    )
+# robots.txt bodies -> RFC 9309 rule table for one user-agent; upstream
+# rows carry host + body.
+operator_node(
+    "ParseRobots", "metalpipe_spark.operators.web.parse_robots",
+    optional=("agent",), renamed={"host_col": "host_key", "body_col": "body_key"},
+)
 
 
 @node_class("ParseSitemap")
@@ -1353,8 +1064,7 @@ def _parse_sitemap_node(spark, upstreams, opts):
     from metalpipe_spark.operators.web import parse_sitemap
 
     out = parse_sitemap(
-        _one(upstreams, "ParseSitemap"),
-        body_col=opts.get("body_key", "body"),
+        _one(upstreams, "ParseSitemap"), **_kwargs(opts, body_col="body_key")
     )
     if opts.get("urls_only"):
         out = out.where(F.col("kind") == "url")
@@ -1388,11 +1098,7 @@ def _robots_filter_node(spark, upstreams, opts):
             f"rule table (host/rule/prefix/wild/pattern); got {is_rules}"
         )
     return robots_filter(
-        frontier,
-        rules,
-        url_col=opts.get("url_key", "url"),
-        keep=opts.get("keep", "allowed"),
-        strip_www=opts.get("strip_www", True),
+        frontier, rules, **_kwargs(opts, "keep", "strip_www", url_col="url_key")
     )
 
 
@@ -1402,15 +1108,13 @@ def _histogram_quantiles_node(spark, upstreams, opts):
     (operators/sketches.py:histogram_sketch_quantiles)."""
     from metalpipe_spark.operators.sketches import histogram_sketch_quantiles
 
+    kw = _kwargs(opts, "qs", "bins", "scale", group_cols="group_by")
     return histogram_sketch_quantiles(
         _one(upstreams, "HistogramQuantiles"),
         opts["column"],
         lo=opts["lo"],
         hi=opts["hi"],
-        qs=tuple(opts.get("qs", (0.5, 0.9, 0.99))),
-        bins=opts.get("bins", 128),
-        group_cols=opts.get("group_by"),
-        scale=opts.get("scale", "linear"),
+        **_cast(kw, qs=tuple),
     )
 
 
@@ -1422,11 +1126,7 @@ def _model_quality_filter_node(spark, upstreams, opts):
 
     df = _one(upstreams, "ModelQualityFilter")
     out = model_quality_filter(
-        df,
-        weights=opts["weights"],
-        threshold=opts.get("threshold", 0.0),
-        text_col=opts.get("text_col", "text"),
-        bias=opts.get("bias", 0.0),
+        df, weights=opts["weights"], **_kwargs(opts, "threshold", "text_col", "bias")
     )
     if opts.get("keep_only", True):
         return out.where(F.col("keep")).drop("logit", "keep")
@@ -1445,11 +1145,7 @@ def _dsir_weights_node(spark, upstreams, opts):
     return dsir_importance_weights(
         corpus,
         target,
-        text_col=opts.get("text_col", "text"),
-        id_col=opts.get("id_col", "doc_id"),
-        buckets=opts.get("buckets", 8192),
-        smoothing=opts.get("smoothing", 1.0),
-        exact=opts.get("exact", False),
+        **_kwargs(opts, "text_col", "id_col", "buckets", "smoothing", "exact"),
     )
 
 
@@ -1466,10 +1162,7 @@ def _dsir_sample_node(spark, upstreams, opts):
         corpus,
         weights,
         k=opts["k"],
-        id_col=opts.get("id_col", "doc_id"),
-        weight_col=opts.get("weight_col", "log_weight"),
-        temperature=opts.get("temperature"),
-        seed=opts.get("seed", 0),
+        **_kwargs(opts, "id_col", "weight_col", "temperature", "seed"),
     )
 
 
@@ -1479,13 +1172,12 @@ def _curriculum_order_node(spark, upstreams, opts):
     (operators/curation.py:curriculum_order)."""
     from metalpipe_spark.operators.curation import curriculum_order
 
+    kw = _kwargs(opts, "n_buckets", "seed", "ascending")
     return curriculum_order(
         _one(upstreams, "CurriculumOrder"),
         score_col=opts["score_col"],
         key_col=opts["key_col"],
-        n_buckets=int(opts.get("n_buckets", 4)),
-        seed=int(opts.get("seed", 0)),
-        ascending=opts.get("ascending", True),
+        **_cast(kw, n_buckets=int, seed=int),
     )
 
 
@@ -1495,53 +1187,27 @@ def _temperature_epochs_node(spark, upstreams, opts):
     (operators/curation.py:temperature_resample_epochs)."""
     from metalpipe_spark.operators.curation import temperature_resample_epochs
 
+    kw = _kwargs(opts, "alpha", "budget_frac", "budget_rows", "epoch_col")
     return temperature_resample_epochs(
         _one(upstreams, "TemperatureEpochs"),
         domain_col=opts["domain_col"],
         key_col=opts["key_col"],
-        alpha=float(opts.get("alpha", 0.3)),
-        budget_frac=opts.get("budget_frac"),
-        budget_rows=opts.get("budget_rows"),
-        epoch_col=opts.get("epoch_col", "epoch"),
+        **_cast(kw, alpha=float),
     )
 
 
-@node_class("DomainMixSample")
-def _domain_mix_sample_node(spark, upstreams, opts):
-    from metalpipe_spark.operators.curation import domain_mix_sample
-
-    return domain_mix_sample(
-        _one(upstreams, "DomainMixSample"),
-        domain_col=opts["domain_col"],
-        key_col=opts["key_col"],
-        weights=opts["weights"],
-        budget_frac=opts.get("budget_frac"),
-        budget_rows=opts.get("budget_rows"),
-    )
-
-
-@node_class("SplitCorpus")
-def _split_corpus_node(spark, upstreams, opts):
-    from metalpipe_spark.operators.curation import split_corpus
-
-    return split_corpus(
-        _one(upstreams, "SplitCorpus"),
-        key_col=opts["key_col"],
-        fractions=opts["fractions"],
-        split_col=opts.get("split_col", "split"),
-        salt=opts.get("salt", ""),
-    )
-
-
-@node_class("GlobalShuffle")
-def _global_shuffle_node(spark, upstreams, opts):
-    from metalpipe_spark.operators.curation import global_shuffle
-
-    return global_shuffle(
-        _one(upstreams, "GlobalShuffle"),
-        key_col=opts["key_col"],
-        seed=opts.get("seed", 0),
-    )
+operator_node(
+    "DomainMixSample", "metalpipe_spark.operators.curation.domain_mix_sample",
+    required=("domain_col", "key_col", "weights"), optional=("budget_frac", "budget_rows"),
+)
+operator_node(
+    "SplitCorpus", "metalpipe_spark.operators.curation.split_corpus",
+    required=("key_col", "fractions"), optional=("split_col", "salt"),
+)
+operator_node(
+    "GlobalShuffle", "metalpipe_spark.operators.curation.global_shuffle",
+    required=("key_col",), optional=("seed",),
+)
 
 
 @node_class("SemanticDedup")
@@ -1583,26 +1249,15 @@ def _semantic_dedup_node(spark, upstreams, opts):
             "(k = n / target_cell_size) — drop centroids/num_centroids "
             "or drop scaled/target_cell_size"
         )
+    kw = _kwargs(opts, "threshold", "vec_col", "id_col")
     if scaled:
         return semantic_dedup_scaled(
-            df,
-            threshold=opts.get("threshold", 0.9),
-            target_cell_size=opts.get("target_cell_size", 1024),
-            vec_col=opts.get("vec_col", "embedding"),
-            id_col=opts.get("id_col", "vec_id"),
-            fit_fraction=opts.get("fit_fraction"),
-            seed=opts.get("seed", 42),
+            df, **kw, **_kwargs(opts, "target_cell_size", "fit_fraction", "seed")
         )
     cents = opts.get("centroids") or deterministic_centroids(
         opts.get("num_centroids", 8), opts.get("dim", 64)
     )
-    return semantic_dedup_gemm(
-        df,
-        cents,
-        threshold=opts.get("threshold", 0.9),
-        vec_col=opts.get("vec_col", "embedding"),
-        id_col=opts.get("id_col", "vec_id"),
-    )
+    return semantic_dedup_gemm(df, cents, **kw)
 
 
 @node_class("TrainingShardWriter")
@@ -1615,8 +1270,7 @@ def _training_shard_writer_node(spark, upstreams, opts):
         path=opts["path"],
         key_col=opts["key_col"],
         num_shards=opts["num_shards"],
-        seed=opts.get("seed", 0),
-        max_records_per_file=opts.get("max_records_per_file"),
+        **_kwargs(opts, "seed", "max_records_per_file"),
     )
     return df
 
@@ -1639,15 +1293,8 @@ def _wet_writer(spark, upstreams, opts):
     from metalpipe_spark.sources.warc import write_wet
 
     df = _one(upstreams, "WETWriter")
-    write_wet(
-        df,
-        opts["path"],
-        url=opts.get("url", "url"),
-        text=opts.get("text", "text"),
-        date=opts.get("date", "2026-01-01T00:00:00Z"),
-        warc_version=str(opts.get("warc_version", "1.0")),
-        compression=opts.get("compression", "gzip"),
-    )
+    kw = _kwargs(opts, "url", "text", "date", "warc_version", "compression")
+    write_wet(df, opts["path"], **_cast(kw, warc_version=str))
     return df
 
 

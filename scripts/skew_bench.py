@@ -67,18 +67,12 @@ def main() -> int:
         print("skew fixture missing — run scripts/make_skew_fixture.py first")
         return 2
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '16')}]"
-        )
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
+    from metalpipe_spark.session import get_spark
+
+    spark = get_spark(
+        app_name="skew-bench", conf={"spark.sql.shuffle.partitions": "32"}
     )
     spark.sparkContext.setLogLevel("ERROR")
     from metalpipe_spark.catalog import load_all

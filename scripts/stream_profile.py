@@ -43,20 +43,12 @@ STREAM_ROWS = [
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    from pyspark.sql import SparkSession
-
     from metalpipe_spark.catalog import load_all
     from metalpipe_spark.monitoring import attach_streaming_progress
+    from metalpipe_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="stream-profile", conf={"spark.sql.shuffle.partitions": "32"}
     )
     registry = load_all()
     sink: list[dict] = []

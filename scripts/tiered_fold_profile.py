@@ -43,19 +43,11 @@ def _dir_bytes(path: str) -> int:
 def main() -> int:
     n_batches = int(sys.argv[1]) if len(sys.argv) > 1 else 120
     fan_in = int(sys.argv[2]) if len(sys.argv) > 2 else 4
-    from pyspark.sql import SparkSession
-
     import metalpipe_spark.streaming.streams as S
+    from metalpipe_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="tiered-fold-profile", conf={"spark.sql.shuffle.partitions": "8"}
     )
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -77,10 +69,10 @@ def main() -> int:
     per_batch: list[dict] = []
 
     def wrapped(spark_, fs, hpath, dst, sp, data_files, parts,
-                version, k, created):
+                version, k, created, **kw):
         v, p = real_fold(
             spark_, fs, hpath, dst, sp, data_files, parts, version,
-            k, created,
+            k, created, **kw,
         )
         delta_dir = sorted(created)[0]
         per_batch.append(

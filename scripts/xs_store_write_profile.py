@@ -40,7 +40,6 @@ def main() -> int:
     )
     K = int(sys.argv[2]) if len(sys.argv) > 2 else 8
     sink_kind = sys.argv[3] if len(sys.argv) > 3 else "exact_substr"
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from metalpipe_spark.monitoring import attach_streaming_progress
@@ -49,6 +48,7 @@ def main() -> int:
         deterministic_centroids,
         incremental_semantic_dedup,
     )
+    from metalpipe_spark.session import get_spark
     from metalpipe_spark.streaming.streams import (
         _incremental_store_sink,
         file_watchdog,
@@ -56,15 +56,8 @@ def main() -> int:
         stream_semantic_dedup_sink,
     )
 
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="xs-store-write-profile", conf={"spark.sql.shuffle.partitions": "32"}
     )
     spark.sparkContext.setLogLevel("ERROR")
     if sink_kind == "semantic":
