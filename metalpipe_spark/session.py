@@ -63,6 +63,14 @@ _DEFAULT_CONF = {
 }
 
 
+def _local_driver_mem() -> str:
+    """Half the host's physical memory, capped at 16 GiB: a local JVM
+    (heap plus off-heap, RocksDB and Python workers) sized to all of it
+    or more lets one test run or sweep take the host down."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(phys // 2, 16 << 30) >> 20}m"
+
+
 def get_spark(
     app_name: str = "metalpipe-spark",
     master: str | None = None,
@@ -92,7 +100,7 @@ def get_spark(
         # sf0.1, OOM at sf1).  Size it for the host; a cluster launcher
         # overrides via spark-submit and never hits this branch.
         merged["spark.driver.memory"] = os.environ.get(
-            "SPARK_GRAFT_DRIVER_MEM", "16g"
+            "SPARK_GRAFT_DRIVER_MEM", _local_driver_mem()
         )
         # Streaming checkpoints (offsets, commits, state files) through
         # the FileSystem API instead of Spark's FileContext default.  On

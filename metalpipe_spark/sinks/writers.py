@@ -260,10 +260,11 @@ def read_manifest_body(spark, path: str):
 def read_current_manifest(spark, path: str):
     """Highest-version ``_manifest-v{N}.json`` at ``path`` as
     ``(version, {partition_dir: [file, ...]})``, or ``None`` when the
-    table has never been published with ``upsert_parquet(...,
-    manifest=True)``.  Each manifest is immutable once renamed into
-    place, so a racing reader resolves either version N-1 or N — both
-    complete, internally consistent file sets — never a mix."""
+    path has never been published by a streaming store sink
+    (:mod:`metalpipe_spark.streaming.streams`).  Each manifest is
+    immutable once renamed into place, so a racing reader resolves
+    either version N-1 or N — both complete, internally consistent file
+    sets — never a mix."""
     got = read_manifest_body(spark, path)
     if got is None:
         return None
@@ -302,52 +303,9 @@ def _write_manifest(
         raise IOError(f"manifest publish failed: {name} at {path}")
 
 
-def _list_partition_files(fs, jvm, target_p, partition_col: str) -> dict:
-    """Current on-disk state as ``{partition_dir: [file, ...]}`` —
-    synthesizes a manifest for a table that predates manifest mode."""
-    out = {}
-    for status in fs.listStatus(target_p):
-        name = status.getPath().getName()
-        if not status.isDirectory() or not name.startswith(f"{partition_col}="):
-            continue
-        files = [
-            f.getPath().getName()
-            for f in fs.listStatus(status.getPath())
-            if not f.isDirectory()
-            and not f.getPath().getName().startswith(("_", "."))
-        ]
-        out[name] = files
-    return out
-
-
-def _recover_manifest_promotion(spark, path: str, partition_col: str, manifest: dict) -> None:
-    """Reconcile the directory tree with the CURRENT manifest before a
-    new merge: delete any non-hidden data file the manifest does not
-    list (v{N} orphans from a promotion that crashed before its flip,
-    or superseded v{N-1} files from one that crashed after it), and any
-    partition dir the manifest has never heard of.  The manifest is the
-    single source of truth, so recovery needs no crash-point case
-    analysis — disk state converges to the published version."""
-    jvm, fs, target_p = _fs_for(spark, path)
-    for status in fs.listStatus(target_p):
-        name = status.getPath().getName()
-        if not status.isDirectory() or not name.startswith(f"{partition_col}="):
-            continue
-        if name not in manifest:
-            fs.delete(status.getPath(), True)
-            continue
-        live = set(manifest[name])
-        for f in fs.listStatus(status.getPath()):
-            fname = f.getPath().getName()
-            if f.isDirectory() or fname.startswith(("_", ".")):
-                continue
-            if fname not in live:
-                fs.delete(f.getPath(), False)
-
-
 def load_published(spark, path: str) -> DataFrame:
-    """Read a table published by ``upsert_parquet(..., manifest=True)``
-    at its CURRENT manifest version: the scan is pinned to the exact
+    """Read a store published by a streaming store sink at its
+    CURRENT manifest version: the scan is pinned to the exact
     file set of one published version, so a reader racing a promotion
     sees entirely-old or entirely-new — never the mixed snapshot a
     plain directory read can observe.  Partition columns still parse
@@ -420,7 +378,6 @@ def upsert_parquet(
     key_cols: list[str] | str,
     partition_col: str,
     order_col: str | None = None,
-    manifest: bool = False,
 ) -> None:
     """MERGE into a partitioned parquet directory — the lakehouse-free
     upsert.  Only the partitions the batch touches are rewritten:
@@ -455,80 +412,23 @@ def upsert_parquet(
     make the loss permanent.  No lineage-cut checkpoint is needed: the
     slice is written to a different directory than the one being read.
     Readers racing the promotion can still observe a mix of old and new
-    partitions; ``manifest=True`` (below) or a table format
-    (Delta/Iceberg) is the reader-atomic upgrade.  Replaying the same
+    partitions; a table format (:func:`upsert_delta`) is the
+    reader-atomic upgrade.  Replaying the same
     batch restores the BATCH's full effect — MERGE on key is idempotent
-    (pinned by test_upsert_parquet_replay_repairs_partial_rewrite).
-
-    **Reader-atomic publish (``manifest=True``)**: touched partitions
-    promote by moving the staged data FILES into the live partition
-    dirs under version-prefixed names (``v{N}-...``) — the previous
-    version's files are untouched until after a versioned
-    ``_manifest-v{N}.json`` (the exact live file set) is renamed into
-    place, then GC'd.  :func:`load_published` pins its scan to the
-    current manifest, so a reader racing the promotion sees version
-    N-1 or N in full — never the mixed old/new snapshot a plain
-    directory read can observe mid-promotion.  Crash recovery is
-    manifest-driven (:func:`_recover_manifest_promotion`): disk
-    converges to the published version, and the replayed batch merges
-    against it.  Single writer assumed (as above); plain
-    ``spark.read.parquet`` on a manifest table stays correct between
-    promotions and can only observe mixing DURING one — the same
-    contract as ``staged``."""
+    (pinned by test_upsert_parquet_replay_repairs_partial_rewrite)."""
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     spark = updates.sparkSession
     if order_col is not None:
         updates = _last_wins(updates, keys, order_col)
     if not _target_exists(spark, path):
         updates.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-        if manifest:
-            jvm, fs, target_p = _fs_for(spark, path)
-            _write_manifest(
-                spark, path, 1,
-                _list_partition_files(fs, jvm, target_p, partition_col),
-            )
         return
 
     # Heal any crashed previous promotion BEFORE the target is read:
     # the merge below must see every partition's complete data, or a
     # checkpoint replay would rebuild the stage from a merge computed
     # against the crash-damaged target and make the loss permanent.
-    cur_version, cur_parts = 0, None
-    if manifest:
-        cur = read_current_manifest(spark, path)
-        if cur is None:
-            # First manifest-mode publish over a legacy table.  BEFORE
-            # adopting the directory listing as the current version,
-            # heal whatever a crash may have left behind — otherwise
-            # the debris gets baked into manifest v1 as live data:
-            # (a) staged-mode debris (a stranded stage copy whose live
-            #     dir is gone, or a hidden .upsert_old__ aside) — the
-            #     staged recovery handles both;
-            # (b) version-prefixed data files with NO manifest anywhere
-            #     — a manifest-mode promotion that crashed before its
-            #     very first flip; the files are orphans (the batch
-            #     replays), and listing them alongside the old files
-            #     would duplicate every non-batch row in the merge.
-            import re as _re
-
-            _recover_staged_promotion(spark, path, partition_col)
-            jvm, fs, target_p = _fs_for(spark, path)
-            for status in fs.listStatus(target_p):
-                name = status.getPath().getName()
-                if not status.isDirectory() or not name.startswith(
-                    f"{partition_col}="
-                ):
-                    continue
-                for f in fs.listStatus(status.getPath()):
-                    fname = f.getPath().getName()
-                    if not f.isDirectory() and _re.match(r"v\d{10}-", fname):
-                        fs.delete(f.getPath(), False)
-            cur_parts = _list_partition_files(fs, jvm, target_p, partition_col)
-        else:
-            cur_version, cur_parts = cur
-            _recover_manifest_promotion(spark, path, partition_col, cur_parts)
-    else:
-        _recover_staged_promotion(spark, path, partition_col)
+    _recover_staged_promotion(spark, path, partition_col)
 
     touched = [r[0] for r in updates.select(partition_col).distinct().collect()]
     # NULL partition values land in __HIVE_DEFAULT_PARTITION__ and are
@@ -538,76 +438,13 @@ def upsert_parquet(
     slice_pred = F.col(partition_col).isin([t for t in touched if t is not None])
     if any(t is None for t in touched):
         slice_pred = slice_pred | F.col(partition_col).isNull()
-    if manifest:
-        # merge against the PUBLISHED version's exact file set (never a
-        # raw dir listing that could include crash debris).
-        base = path.rstrip("/")
-        mfiles = [
-            f"{base}/{d}/{f}" for d, fl in sorted(cur_parts.items()) for f in fl
-        ]
-        target_slice = (
-            spark.read.option("basePath", base).parquet(*mfiles).where(slice_pred)
-            if mfiles
-            else spark.read.parquet(path).where(slice_pred)
-        )
-    else:
-        target_slice = spark.read.parquet(path).where(slice_pred)
+    target_slice = spark.read.parquet(path).where(slice_pred)
     merged = merge_upsert(target_slice, updates, keys)
 
     stage = path.rstrip("/") + "__stage"
     merged.write.mode("overwrite").partitionBy(partition_col).parquet(stage)
     jvm, fs, target_p = _fs_for(spark, path)
     stage_p = jvm.org.apache.hadoop.fs.Path(stage)
-    if manifest:
-        new_version = cur_version + 1
-        new_parts = dict(cur_parts)
-        replaced: list[str] = []
-        for status in fs.listStatus(stage_p):
-            name = status.getPath().getName()
-            if not status.isDirectory() or not name.startswith(f"{partition_col}="):
-                continue
-            dst_dir = jvm.org.apache.hadoop.fs.Path(target_p, name)
-            fs.mkdirs(dst_dir)
-            moved = []
-            for f in fs.listStatus(status.getPath()):
-                fname = f.getPath().getName()
-                if f.isDirectory() or fname.startswith(("_", ".")):
-                    continue
-                new_name = f"v{new_version:010d}-{fname}"
-                if not fs.rename(
-                    f.getPath(), jvm.org.apache.hadoop.fs.Path(dst_dir, new_name)
-                ):
-                    raise IOError(
-                        f"file promotion failed: {name}/{fname} -> {path}"
-                    )
-                moved.append(new_name)
-            replaced.append(name)
-            new_parts[name] = moved
-        # The atomic flip: readers move from version N-1 to N here.
-        _write_manifest(spark, path, new_version, new_parts)
-        # GC superseded files (old versions of the replaced partitions)
-        # and manifests older than N-1 (N-1 itself stays so a reader
-        # that resolved it just before the flip still parses it; its
-        # FILES are gone — the documented retryable-read caveat).
-        import re as _re
-
-        for name in replaced:
-            keep = set(new_parts[name])
-            for fname in cur_parts.get(name, []):
-                if fname not in keep:
-                    fs.delete(
-                        jvm.org.apache.hadoop.fs.Path(
-                            target_p, f"{name}/{fname}"
-                        ),
-                        False,
-                    )
-        for status in fs.listStatus(target_p):
-            m = _re.fullmatch(_MANIFEST_RE, status.getPath().getName())
-            if m and int(m.group(1)) < new_version - 1:
-                fs.delete(status.getPath(), False)
-        fs.delete(stage_p, True)
-        return
-
     for status in fs.listStatus(stage_p):
         name = status.getPath().getName()
         if not status.isDirectory() or not name.startswith(
@@ -683,7 +520,7 @@ def upsert_delta(
     partition_col: str | None = None,
 ) -> None:
     """MERGE into a Delta Lake table — the open-format alternative to
-    :func:`upsert_parquet`'s hand-rolled staged/manifest protocol
+    :func:`upsert_parquet`'s hand-rolled staged protocol
     (r16 verdict "What's missing" #5).  Same last-write-wins contract:
     matched keys update, new keys insert, ``order_col`` picks a
     deterministic winner when one batch carries several updates per

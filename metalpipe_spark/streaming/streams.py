@@ -317,15 +317,11 @@ def stream_upsert_sink(
     partition_col: str,
     checkpoint: str,
     order_col: str | None = None,
-    manifest: bool = False,
 ):
     """Continuous MERGE: each micro-batch upserts into a partitioned
     parquet target (matched keys replaced, new keys inserted) — the
     streaming face of ``sinks.writers.upsert_parquet`` and the engine's
-    CDC-apply pattern.  ``manifest=True`` publishes each batch through
-    the versioned-manifest protocol, upgrading readers that use
-    ``load_published`` to snapshot-consistent scans (see
-    ``upsert_parquet``).  Exactly-once comes from the combination of the
+    CDC-apply pattern.  Exactly-once comes from the combination of the
     streaming checkpoint (no batch replayed after commit) and the
     idempotence of MERGE on key (a replayed batch rewrites the same
     rows to the same values).  State is bounded: each batch touches
@@ -342,14 +338,13 @@ def stream_upsert_sink(
     effect, non-batch rows included.  (Replay alone only re-applies the
     BATCH's rows; it is the recovery pass that preserves everything
     else — see ``_recover_staged_promotion``.)  Readers racing the
-    promotion can observe a mix of old and new partitions unless they
-    read a ``manifest=True`` target through ``load_published``."""
+    promotion can observe a mix of old and new partitions."""
     from metalpipe_spark.sinks.writers import upsert_parquet
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         upsert_parquet(
             batch_df, path, key_cols, partition_col,
-            order_col=order_col, manifest=manifest,
+            order_col=order_col,
         )
 
     return foreach_batch_sink(df, apply, checkpoint)
@@ -365,7 +360,6 @@ def stream_semantic_dedup_sink(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     centroid_table: DataFrame | None = None,
-    compact_segments: int = 8,
 ):
     """Continuously-ingesting semantic dedup: each micro-batch dedups
     against the cell store persisted so far
@@ -381,14 +375,14 @@ def stream_semantic_dedup_sink(
     committed batch is a no-op — no duplicate survivors, no lost rows.
 
     The store itself publishes through ``_incremental_store_sink``'s
-    versioned-manifest protocol (the same reader-atomicity as
-    ``upsert_parquet(manifest=True)``): the survivor-vector store is
+    versioned-manifest protocol (reader-atomic through
+    ``load_store``): the survivor-vector store is
     strictly append-only, so each batch writes ONLY its new rows as a
     delta segment (``append_only=True`` — O(batch) per trigger; the
     store is VECTOR-scale, an embedding per survivor, so a full
     rewrite per trigger would be the dominant bill at crawl scale),
     flips an immutable manifest referencing prior segments plus the
-    delta, size-tier-folds segments once ``compact_segments``
+    delta, size-tier-folds segments once ``_FOLD_FAN_IN``
     similar-sized ones accumulate (LSM-style, O(log) write
     amplification), and
     self-heals any crash debris at the start of the next batch — no
@@ -442,7 +436,7 @@ def stream_semantic_dedup_sink(
 
     return _incremental_store_sink(
         df, kept_path, store_path, checkpoint, step,
-        append_only=True, compact_segments=compact_segments,
+        append_only=True,
     )
 
 
@@ -455,7 +449,6 @@ def stream_exact_substr_sink(
     id_col: str = "doc_id",
     min_length: int = 32,
     hash: str = "md5",
-    compact_segments: int = 8,
 ):
     """Continuously-ingesting ExactSubstr dedup: each micro-batch's
     duplicated token windows are removed against the distinct-window
@@ -478,7 +471,7 @@ def stream_exact_substr_sink(
     prior segments plus the delta — per-batch store write is O(batch),
     not O(total windows seen), the property that makes this face
     viable at crawl scale where the store is token-shaped.  Once
-    ``compact_segments`` similar-sized segments accumulate they fold
+    ``_FOLD_FAN_IN`` similar-sized segments accumulate they fold
     into one (size-tiered, LSM-style — O(log) write amplification,
     bounded reader fan-in).  Geometry markers verify on the FIRST
     batch only: later versions were written by this sink under the
@@ -507,7 +500,7 @@ def stream_exact_substr_sink(
 
     return _incremental_store_sink(
         df, kept_path, store_path, checkpoint, step,
-        append_only=True, compact_segments=compact_segments,
+        append_only=True,
     )
 
 
@@ -659,6 +652,10 @@ def stream_score_sink(
 
 _STORE_VDIR_RE = r"v-(\d{10})"
 
+# Segments per size tier that trigger a fold in an append-only store
+# (:func:`_tiered_fold`); read on every micro-batch.
+_FOLD_FAN_IN = 8
+
 
 def load_store(spark, store_path: str) -> DataFrame:
     """Read an ``_incremental_store_sink`` store at its CURRENT manifest
@@ -667,8 +664,7 @@ def load_store(spark, store_path: str) -> DataFrame:
     entirely-new, never a mix).  This is THE reader for store state —
     data lives under versioned subdirectories, which a plain
     non-recursive ``spark.read.parquet(store_path)`` cannot see.
-    Delegates to the same ``load_published`` machinery as
-    ``upsert_parquet(manifest=True)``."""
+    Delegates to ``sinks.writers.load_published``."""
     from metalpipe_spark.sinks.writers import load_published
 
     return load_published(spark, store_path)
@@ -680,7 +676,6 @@ def stream_ngram_count_sink(
     checkpoint: str,
     n: int = 3,
     text_col: str = "text",
-    compact_segments: int = 8,
 ):
     """Incrementally maintain the ``(order, ngram, n_count)`` gram
     COUNT table over a document stream — the statistic that makes LM
@@ -729,7 +724,6 @@ def stream_ngram_count_sink(
         checkpoint,
         step,
         append_only=True,
-        compact_segments=compact_segments,
         fold_merge=fold_merge,
     )
 
@@ -824,7 +818,6 @@ def _incremental_store_sink(
     checkpoint: str,
     step,
     append_only: bool = False,
-    compact_segments: int = 8,
     fold_merge=None,
 ):
     """The shared skeleton of every store-backed incremental dedup sink
@@ -834,9 +827,8 @@ def _incremental_store_sink(
     append the fresh rows, publish the store's next version (a DELTA
     segment for append-only stores — every dedup store sink; a full
     rewrite only for merge-style stores whose state is bounded, like
-    DSIR's fixed bucket-count table), then flip the manifest — the
-    same reader-atomic versioned publish as
-    ``upsert_parquet(manifest=True)`` (one immutable
+    DSIR's fixed bucket-count table), then flip the manifest — a
+    reader-atomic versioned publish (one immutable
     ``_manifest-v{N}.json`` per version, flipped by a single rename),
     so a reader racing the swap sees entirely-old or entirely-new state
     and NO crash point ever leaves zero complete copies on disk:
@@ -854,12 +846,12 @@ def _incremental_store_sink(
     untouched: a racing scan still resolves exactly one manifest's
     file set.  Segment growth is bounded by SIZE-TIERED folding
     (:func:`_tiered_fold`, r16 verdict task 3): once
-    ``compact_segments`` similar-sized segments accumulate (power-of-
+    ``_FOLD_FAN_IN`` similar-sized segments accumulate (power-of-
     two byte tiers) they merge into one directory, cascading upward
     LSM-style — per-byte write amplification is O(log #batches) over
     the stream's lifetime instead of the every-K full fold's periodic
     O(store), and reader fan-in/small-file growth stay bounded at
-    ~``compact_segments`` per tier; crash points during a fold heal
+    ~``_FOLD_FAN_IN`` per tier; crash points during a fold heal
     exactly like any unflipped version dir.
 
     - crash before the manifest flip → the new ``v-{N+1}`` dir is
@@ -868,12 +860,7 @@ def _incremental_store_sink(
       ``v-{N}`` dir lingers; the next batch GCs it.
 
     Layout: ``store_path/v-{N:010d}/part-*.parquet`` + manifests.  A
-    pre-manifest flat store (data files at the top level, possibly with
-    a crashed ``_next`` sibling from the old delete-then-rename swap)
-    is adopted in place: ``_next`` promotes first if it holds the only
-    copy, then top-level files move into ``v-0000000001`` and manifest
-    v1 publishes them — idempotent under crashes (file moves are
-    re-runnable; the manifest appears only after every file is in).
+    store path with no manifest is an empty store.
 
     A ``cleanup`` callable (optional third element of ``step``'s
     return) runs after the swap so a step that materialized batch-scale
@@ -890,7 +877,6 @@ def _incremental_store_sink(
     )
 
     spark = df.sparkSession
-    next_path = store_path + "_next"
     batch_dir = _batch_dir(kept_path, checkpoint)
 
     def _data_files(fs, dir_path):
@@ -902,77 +888,11 @@ def _incremental_store_sink(
         )
 
     def _apply_inner(batch_df: DataFrame, batch_id: int) -> None:
-        jvm = spark._jvm
         hconf = spark._jsc.hadoopConfiguration()
-        hpath = jvm.org.apache.hadoop.fs.Path
-        src = hpath(next_path)
+        hpath = spark._jvm.org.apache.hadoop.fs.Path
         dst = hpath(store_path)
         fs = dst.getFileSystem(hconf)
-        # Legacy self-heal: the old delete-then-rename swap could crash
-        # with the only complete copy at _next; promote it before
-        # anything is read (skipping this would dedup the replayed
-        # batch against nothing and then bury the recovery copy).
-        if not fs.exists(dst) and fs.exists(src):
-            if not fs.rename(src, dst):
-                raise IOError(
-                    f"store recovery failed: rename {next_path} -> {store_path}"
-                )
         cur = read_manifest_body(spark, store_path)
-        if cur is None and fs.exists(dst):
-            # Adopt a pre-manifest flat store: move top-level data files
-            # into a version dir, publish manifest v1 over the result.
-            # A durable MARKER makes every crash point resumable — the
-            # unmarked version of this sequence had a window (all files
-            # moved, manifest not yet written) where the next batch saw
-            # "no manifest, no flat files", treated the store as empty,
-            # and overwrite-destroyed v1, the only complete copy.
-            import json as _json
-
-            marker = hpath(dst, "_adopting-v1.json")
-            flat = _data_files(fs, dst)
-            if flat and not fs.exists(marker):
-                tmp = hpath(dst, "._adopting-v1.json.tmp")
-                out = fs.create(tmp, True)
-                try:
-                    out.write(bytearray(_json.dumps(sorted(flat)).encode()))
-                finally:
-                    out.close()
-                if not fs.rename(tmp, marker):
-                    raise IOError(f"adoption marker failed at {store_path}")
-            if fs.exists(marker):
-                vdir = hpath(dst, "v-0000000001")
-                fs.mkdirs(vdir)
-                stream = fs.open(marker)
-                try:
-                    names = _json.loads(
-                        bytes(
-                            jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-                        ).decode("utf-8")
-                    )
-                finally:
-                    stream.close()
-                for fname in names:
-                    src_f = hpath(dst, fname)
-                    # Idempotent resume: a file already moved by a
-                    # crashed predecessor is simply absent here.
-                    if fs.exists(src_f) and not fs.rename(
-                        src_f, hpath(vdir, fname)
-                    ):
-                        raise IOError(
-                            f"store adoption failed: {fname} in {store_path}"
-                        )
-                _write_manifest(
-                    spark, store_path, 1,
-                    {"v-0000000001": _data_files(fs, vdir)},
-                )
-                fs.delete(marker, False)
-                cur = read_manifest_body(spark, store_path)
-        elif cur is not None:
-            # A marker surviving past its manifest (crash between the
-            # v1 flip and the marker delete) is spent — drop it.
-            stale = hpath(dst, "_adopting-v1.json")
-            if fs.exists(stale):
-                fs.delete(stale, False)
         if cur is not None:
             version, body = cur
             # Exactly-once replay guard: the manifest records the LAST
@@ -1032,19 +952,17 @@ def _incremental_store_sink(
             )
             parts = dict(live_parts)
             parts[new_dir] = _data_files(fs, hpath(dst, new_dir))
-            if compact_segments is not None:
-                # Size-tiered fold (r16 verdict task 3): merge only
-                # when >= compact_segments SIMILAR-SIZED segments
-                # accumulate (power-of-two byte tiers), cascading
-                # upward LSM-style — per-byte write amplification is
-                # O(log segments) instead of the every-K full fold's
-                # periodic O(store), while reader fan-in stays
-                # bounded at ~fan_in x #tiers.
-                new_version, parts = _tiered_fold(
-                    spark, fs, hpath, dst, store_path, _data_files,
-                    parts, new_version, compact_segments, created,
-                    fold_merge=fold_merge,
-                )
+            # Size-tiered fold (r16 verdict task 3): merge only when
+            # >= _FOLD_FAN_IN SIMILAR-SIZED segments accumulate
+            # (power-of-two byte tiers), cascading upward LSM-style —
+            # per-byte write amplification is O(log segments) instead
+            # of the every-K full fold's periodic O(store), while
+            # reader fan-in stays bounded at ~fan_in x #tiers.
+            new_version, parts = _tiered_fold(
+                spark, fs, hpath, dst, store_path, _data_files,
+                parts, new_version, _FOLD_FAN_IN, created,
+                fold_merge=fold_merge,
+            )
         else:
             updated.write.mode("overwrite").parquet(f"{store_path}/{new_dir}")
             parts = {new_dir: _data_files(fs, hpath(dst, new_dir))}
@@ -1102,7 +1020,6 @@ def stream_image_dedup_sink(
     blocks: int = 4,
     combo: int = 1,
     id_col: str = "id",
-    compact_segments: int = 8,
 ):
     """Continuously-ingesting IMAGE near-dup dedup: each micro-batch of
     raw-RGB rows ``(id, content, width, height)`` hashes to dHash codes
@@ -1138,7 +1055,7 @@ def stream_image_dedup_sink(
 
     return _incremental_store_sink(
         df, kept_path, store_path, checkpoint, step,
-        append_only=True, compact_segments=compact_segments,
+        append_only=True,
     )
 
 
@@ -1215,7 +1132,6 @@ def stream_corpus_pipeline(
     min_hits: int = 3,
     rebalance_partitions: int | None = None,
     hash: str = "md5",
-    compact_segments: int = 8,
 ):
     """The CURATION pipeline as one continuously-ingesting stream —
     the streaming twin of q_corpus_pipeline's scrub → quality → dedup
@@ -1303,7 +1219,7 @@ def stream_corpus_pipeline(
 
     return _incremental_store_sink(
         scrubbed, kept_path, store_path, checkpoint, step,
-        append_only=True, compact_segments=compact_segments,
+        append_only=True,
     )
 
 

@@ -52,6 +52,15 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     tmp = tempfile.mkdtemp(prefix="tiered_prof_")
+    real_fold, real_fan_in = S._tiered_fold, S._FOLD_FAN_IN
+    try:
+        return _profile(spark, S, tmp, n_batches, fan_in, real_fold)
+    finally:
+        S._tiered_fold, S._FOLD_FAN_IN = real_fold, real_fan_in
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _profile(spark, S, tmp: str, n_batches: int, fan_in: int, real_fold) -> int:
     src = f"{tmp}/src"
     store_path = f"{tmp}/store"
     # One file per batch; every doc is all-new windows so each delta
@@ -65,7 +74,6 @@ def main() -> int:
     # Instrument: after each batch's _tiered_fold returns, every dir
     # this batch created (delta + fold outputs) is still on disk —
     # their sizes ARE the batch's store-write bytes.
-    real_fold = S._tiered_fold
     per_batch: list[dict] = []
 
     def wrapped(spark_, fs, hpath, dst, sp, data_files, parts,
@@ -88,20 +96,25 @@ def main() -> int:
         return v, p
 
     S._tiered_fold = wrapped
-    try:
-        t0 = time.time()
-        S.stream_exact_substr_sink(
-            S.file_watchdog(
-                spark, src, "doc_id long, text string",
-                max_files_per_trigger=1,
-            ),
-            f"{tmp}/kept", store_path, f"{tmp}/ckpt",
-            min_length=6, compact_segments=fan_in,
-        ).awaitTermination()
-        wall = time.time() - t0
-    finally:
-        S._tiered_fold = real_fold
+    S._FOLD_FAN_IN = fan_in
+    t0 = time.time()
+    S.stream_exact_substr_sink(
+        S.file_watchdog(
+            spark, src, "doc_id long, text string",
+            max_files_per_trigger=1,
+        ),
+        f"{tmp}/kept", store_path, f"{tmp}/ckpt", min_length=6,
+    ).awaitTermination()
+    wall = time.time() - t0
 
+    print(
+        f"{n_batches} batches, fan_in={fan_in}, wall {wall:.1f}s"
+    )
+    # The first batch publishes a full store version without a fold, so
+    # only later batches are tallied.
+    if not per_batch:
+        print("no batch after the first: nothing to tally")
+        return 0
     total_written = sum(b["written"] for b in per_batch)
     final_store = _dir_bytes(store_path)
     deltas = [b["delta"] for b in per_batch]
@@ -115,9 +128,6 @@ def main() -> int:
         else:
             old_total += d  # plain delta
     print(
-        f"{n_batches} batches, fan_in={fan_in}, wall {wall:.1f}s"
-    )
-    print(
         f"tiered: total store-write {total_written / 1e6:.1f} MB, "
         f"final store {final_store / 1e6:.1f} MB, "
         f"amplification {total_written / max(final_store, 1):.2f}x"
@@ -129,11 +139,13 @@ def main() -> int:
         f"tiered saves {old_total / max(total_written, 1):.2f}x"
     )
     segs = [b["live_segments"] for b in per_batch]
-    q = len(per_batch) // 4
+    # Quartiles of the batch sequence; with fewer than 4 tallied
+    # batches some quartiles are empty and are left out.
+    quarters = [segs[len(segs) * i // 4:len(segs) * (i + 1) // 4] for i in range(4)]
     print(
         f"live segments: max {max(segs)}, last {segs[-1]}, "
         f"quartile means "
-        f"{[round(sum(segs[i * q:(i + 1) * q]) / q, 1) for i in range(4)]}"
+        f"{[round(sum(c) / len(c), 1) for c in quarters if c]}"
     )
     fold_batches = [i for i, b in enumerate(per_batch) if b["folds"]]
     print(
@@ -141,9 +153,7 @@ def main() -> int:
         f"(largest single-batch write "
         f"{max(b['written'] for b in per_batch) / 1e6:.2f} MB)"
     )
-    shutil.rmtree(tmp, ignore_errors=True)
     return 0
-
 
 if __name__ == "__main__":
     raise SystemExit(main())

@@ -383,7 +383,8 @@ def test_write_training_shards_balanced_and_reproducible(spark, tmp_path):
 def test_upsert_parquet_staged_incl_null_partition(spark, tmp_path):
     """The staged-rename promotion merges every touched partition —
     including the NULL partition (__HIVE_DEFAULT_PARTITION__) — and
-    cleans up its stage."""
+    cleans up its stage; ``order_col`` resolves several updates of one
+    key in a batch last-wins, inside the NULL partition too."""
     import os
 
     from metalpipe_spark.sinks.writers import upsert_parquet
@@ -406,6 +407,26 @@ def test_upsert_parquet_staged_incl_null_partition(spark, tmp_path):
         (1, "a", 10.0), (2, None, 99.0), (3, "b", 30.0),
         (4, "a", 40.0), (5, None, 50.0),
     ]
+
+    path = str(tmp_path / "last_wins")
+    schema = "id bigint, part string, v double, seq bigint"
+    initial = spark.createDataFrame(
+        [(1, None, 10.0, 0), (2, None, 20.0, 0), (3, "b", 30.0, 0)], schema
+    )
+    upsert_parquet(initial, path, "id", "part")
+    batch = spark.createDataFrame(
+        [(2, None, 50.0, 1), (2, None, 99.0, 2), (4, "b", 40.0, 1)], schema
+    )
+    upsert_parquet(batch, path, "id", "part", order_col="seq")
+    rows = {
+        r["id"]: (r["part"], r["v"]) for r in spark.read.parquet(path).collect()
+    }
+    assert rows == {
+        1: (None, 10.0),
+        2: (None, 99.0),   # last-wins by seq
+        3: ("b", 30.0),
+        4: ("b", 40.0),
+    }
 
 
 def test_upsert_parquet_heals_crash_between_aside_and_promote(spark, tmp_path):
@@ -473,189 +494,6 @@ def test_upsert_parquet_heals_set_aside_old_copies(spark, tmp_path):
     )
     rows = {r["id"]: (r["part"], r["v"]) for r in spark.read.parquet(path).collect()}
     assert rows == {1: ("a", 10.0), 3: ("b", 32.0)}
-
-
-def test_upsert_parquet_manifest_mode_merges_and_versions(spark, tmp_path):
-    """manifest=True end-to-end: same MERGE semantics as staged mode,
-    plus a versioned manifest that load_published pins its scan to."""
-    import os
-
-    from metalpipe_spark.sinks.writers import (
-        load_published,
-        read_current_manifest,
-        upsert_parquet,
-    )
-
-    path = str(tmp_path / "mtable")
-    initial = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "a", 20.0), (3, "b", 30.0)], ["id", "part", "v"]
-    )
-    upsert_parquet(initial, path, "id", "part", manifest=True)
-    v1, parts1 = read_current_manifest(spark, path)
-    assert v1 == 1 and set(parts1) == {"part=a", "part=b"}
-
-    batch = spark.createDataFrame(
-        [(2, "a", 99.0), (4, "c", 40.0)], ["id", "part", "v"]
-    )
-    upsert_parquet(batch, path, "id", "part", manifest=True)
-    v2, parts2 = read_current_manifest(spark, path)
-    assert v2 == 2
-    assert set(parts2) == {"part=a", "part=b", "part=c"}
-    # replaced partition's files are version-prefixed; untouched carry over
-    assert all(f.startswith("v0000000002-") for f in parts2["part=a"])
-    assert parts2["part=b"] == parts1["part=b"]
-
-    rows = {r["id"]: (r["part"], r["v"]) for r in load_published(spark, path).collect()}
-    assert rows == {
-        1: ("a", 10.0), 2: ("a", 99.0), 3: ("b", 30.0), 4: ("c", 40.0),
-    }
-    # plain directory read agrees between promotions (superseded files GC'd)
-    plain = {r["id"]: (r["part"], r["v"]) for r in spark.read.parquet(path).collect()}
-    assert plain == rows
-    assert not os.path.exists(path + "__stage")
-
-
-def test_manifest_reader_sees_exactly_one_version_during_promotion(spark, tmp_path):
-    """The reader-atomicity contract: at every crash point of a promotion
-    (new files moved in but manifest not flipped; manifest flipped), a
-    load_published reader sees one complete version — never mixed."""
-    import shutil
-
-    from metalpipe_spark.sinks.writers import (
-        _write_manifest,
-        load_published,
-        read_current_manifest,
-        upsert_parquet,
-    )
-
-    path = str(tmp_path / "racing")
-    initial = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "a", 20.0), (3, "b", 30.0)], ["id", "part", "v"]
-    )
-    upsert_parquet(initial, path, "id", "part", manifest=True)
-    v1_rows = {(r["id"], r["part"], r["v"]) for r in load_published(spark, path).collect()}
-
-    # Mid-promotion state: version-2 files already moved into part=a
-    # (copies of part=b's data, so mixing would be visible as extra
-    # ids), manifest NOT yet flipped.
-    import os
-
-    new_files = []
-    for f in os.listdir(os.path.join(path, "part=b")):
-        if f.startswith(("_", ".")):
-            continue
-        dst = f"v0000000002-{f}"
-        shutil.copy(
-            os.path.join(path, "part=b", f), os.path.join(path, "part=a", dst)
-        )
-        new_files.append(dst)
-    got = {(r["id"], r["part"], r["v"]) for r in load_published(spark, path).collect()}
-    assert got == v1_rows  # still exactly version 1
-
-    # The flip: manifest v2 points part=a at the new files only.
-    _, parts = read_current_manifest(spark, path)
-    parts["part=a"] = new_files
-    _write_manifest(spark, path, 2, parts)
-    got2 = {(r["id"], r["part"], r["v"]) for r in load_published(spark, path).collect()}
-    assert got2 == {(3, "a", 30.0), (3, "b", 30.0)}  # exactly version 2
-
-
-def test_upsert_parquet_manifest_recovery_heals_crash_debris(spark, tmp_path):
-    """A crashed promotion leaves v{N} orphans in live dirs and a stale
-    stage; the next manifest-mode upsert must converge disk to the
-    published version and merge against it — non-batch rows survive."""
-    import os
-    import shutil
-
-    from metalpipe_spark.sinks.writers import load_published, upsert_parquet
-
-    path = str(tmp_path / "heal")
-    initial = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "a", 20.0), (3, "b", 30.0)], ["id", "part", "v"]
-    )
-    upsert_parquet(initial, path, "id", "part", manifest=True)
-
-    # Crash debris: orphan v2 files in part=a (copied from part=b so a
-    # bad merge would surface id=3 under part=a) + a leftover stage.
-    for f in os.listdir(os.path.join(path, "part=b")):
-        if not f.startswith(("_", ".")):
-            shutil.copy(
-                os.path.join(path, "part=b", f),
-                os.path.join(path, "part=a", f"v0000000002-{f}"),
-            )
-    os.makedirs(path + "__stage/part=a", exist_ok=True)
-    with open(path + "__stage/part=a/garbage.parquet", "w") as fh:
-        fh.write("not parquet")
-
-    batch = spark.createDataFrame([(2, "a", 99.0)], ["id", "part", "v"])
-    upsert_parquet(batch, path, "id", "part", manifest=True)
-    rows = {r["id"]: (r["part"], r["v"]) for r in load_published(spark, path).collect()}
-    assert rows == {1: ("a", 10.0), 2: ("a", 99.0), 3: ("b", 30.0)}
-
-
-def test_upsert_parquet_manifest_null_partition_and_last_wins(spark, tmp_path):
-    """Manifest mode composes with the NULL-partition slice and the
-    order_col last-wins resolution exactly like the staged mode."""
-    from metalpipe_spark.sinks.writers import load_published, upsert_parquet
-
-    path = str(tmp_path / "mnull")
-    schema = "id bigint, part string, v double, seq bigint"
-    initial = spark.createDataFrame(
-        [(1, None, 10.0, 0), (2, None, 20.0, 0), (3, "b", 30.0, 0)], schema
-    )
-    upsert_parquet(initial, path, "id", "part", manifest=True)
-    batch = spark.createDataFrame(
-        [(2, None, 50.0, 1), (2, None, 99.0, 2), (4, "b", 40.0, 1)], schema
-    )
-    upsert_parquet(batch, path, "id", "part", order_col="seq", manifest=True)
-    rows = {
-        r["id"]: (r["part"], r["v"])
-        for r in load_published(spark, path).collect()
-    }
-    assert rows == {
-        1: (None, 10.0),
-        2: (None, 99.0),   # last-wins by seq
-        3: ("b", 30.0),
-        4: ("b", 40.0),
-    }
-
-
-def test_upsert_parquet_manifest_adoption_heals_preexisting_debris(spark, tmp_path):
-    """First manifest-mode publish over a legacy table must NOT bake
-    crash debris into manifest v1: v-prefixed orphans from a crashed
-    first manifest promotion are deleted (else every non-batch row
-    would be duplicated in the merge), and staged-mode debris heals
-    through the staged recovery before adoption."""
-    import os
-    import shutil
-
-    from metalpipe_spark.sinks.writers import load_published, upsert_parquet
-
-    path = str(tmp_path / "adopt")
-    initial = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "a", 20.0), (3, "b", 30.0)], ["id", "part", "v"]
-    )
-    upsert_parquet(initial, path, "id", "part")  # legacy staged-mode table
-
-    # debris (a): orphan v1 files from a crashed first manifest publish
-    for f in os.listdir(os.path.join(path, "part=a")):
-        if not f.startswith(("_", ".")):
-            shutil.copy(
-                os.path.join(path, "part=a", f),
-                os.path.join(path, "part=a", f"v0000000001-{f}"),
-            )
-    # debris (b): a staged-mode crash state for part=b (live dir gone,
-    # only copy stranded in the stage)
-    os.makedirs(path + "__stage", exist_ok=True)
-    shutil.move(os.path.join(path, "part=b"), os.path.join(path + "__stage", "part=b"))
-
-    batch = spark.createDataFrame([(2, "a", 99.0)], ["id", "part", "v"])
-    upsert_parquet(batch, path, "id", "part", manifest=True)
-    rows = sorted(
-        (r["id"], r["part"], r["v"]) for r in load_published(spark, path).collect()
-    )
-    # no duplicated id=1, and part=b's rows survived the stranded stage
-    assert rows == [(1, "a", 10.0), (2, "a", 99.0), (3, "b", 30.0)]
 
 
 def test_mysql_type_strings_map_to_spark_types(spark):

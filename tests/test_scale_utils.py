@@ -988,8 +988,11 @@ def test_incremental_semantic_dedup_scaled_jobs_inherit_group(spark):
     ).cache()
     cells.count()  # materialize outside the measured window
     sc = spark.sparkContext
-    store_jvm = spark._jsc.sc().statusStore()
-    n_jobs_before = store_jvm.jobsList(None).size()
+    # The scheduler's job-id counter, not the status store's job list:
+    # that list keeps only spark.ui.retainedJobs jobs and shrinks when
+    # older ones are evicted mid-window.
+    dag = sc._jsc.sc().dagScheduler()
+    n_jobs_before = dag.nextJobId()
     group = "semdedup-scaled-inherit-test"
     sc.setJobGroup(group, "checkpoint-inheritance probe")
     try:
@@ -999,7 +1002,7 @@ def test_incremental_semantic_dedup_scaled_jobs_inherit_group(spark):
         fresh.collect()
     finally:
         sc.setJobGroup("", "")
-    n_jobs_after = store_jvm.jobsList(None).size()
+    n_jobs_after = dag.nextJobId()
     in_group = set(sc.statusTracker().getJobIdsForGroup(group))
     assert n_jobs_after > n_jobs_before
     # Every job of the window is in the group — including the two

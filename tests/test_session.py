@@ -2,10 +2,13 @@
 
 from __future__ import annotations
 
+import os
+
 from metalpipe_spark import session
 from tests.conftest import checkpoint_manager_class
 
 _MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+_HEAP_CONF = "spark.driver.memory"
 _FS_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
@@ -70,3 +73,17 @@ def test_checkpoint_manager_default_is_local_only_and_overridable(monkeypatch):
         ]
         == mine
     )
+
+
+def test_local_driver_heap_defaults_to_half_of_host_memory(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    sizes = {"SC_PAGE_SIZE": 4096}
+    monkeypatch.setattr(os, "sysconf", lambda name: sizes[name])
+    for host_gib, heap in ((15, "7680m"), (64, "16384m")):  # cap: 16 GiB
+        sizes["SC_PHYS_PAGES"] = (host_gib << 30) // 4096
+        assert _built_conf(monkeypatch, master="local[2]")[_HEAP_CONF] == heap
+    # The environment variable still wins.
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert _built_conf(monkeypatch, master="local[2]")[_HEAP_CONF] == "3g"
+    # A cluster master gets no heap from the engine.
+    assert _HEAP_CONF not in _built_conf(monkeypatch, master="spark://host:7077")

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from metalpipe_spark.sources.readers import load_table
+from metalpipe_spark.streaming import streams
 from metalpipe_spark.streaming.streams import (
     deduplicate_stream,
     file_watchdog,
@@ -383,90 +384,6 @@ def test_streaming_semantic_dedup_foreach_batch(spark, tmp_path):
     assert kept == want == [0, 1, 3, 5]
 
 
-def test_streaming_semantic_dedup_self_heals_lost_store(spark, tmp_path):
-    """ADVICE r7: a crash in the store swap's delete->rename window leaves
-    the only copy of the accumulated cell store in `_next`.  On restart
-    the sink must promote `_next` back BEFORE reading, so the replayed
-    batch dedups against the recovered state — not against "no store"
-    (which would also overwrite the recovery copy: total state loss)."""
-    import shutil
-    import time as _time
-
-    from metalpipe_spark.streaming.streams import stream_semantic_dedup_sink
-
-    cents = [[1.0, 0.0, 0.0, 0.0], [-1.0, 0.0, 0.0, 0.0]]
-    schema = "vec_id long, embedding array<double>"
-    first = spark.createDataFrame(
-        [(0, [1.0, 0.1, 0.0, 0.0]), (1, [0.1, -1.0, 0.0, 0.0])], schema
-    )
-    src = tmp_path / "vecs"
-    first.coalesce(1).write.mode("append").parquet(str(src))
-    store_path = str(tmp_path / "store")
-    kept_path = str(tmp_path / "kept")
-
-    stream = file_watchdog(spark, str(src), first.schema, max_files_per_trigger=1)
-    stream_semantic_dedup_sink(
-        stream, cents, kept_path, store_path, str(tmp_path / "ckpt1"),
-        threshold=0.9,
-    ).awaitTermination()
-
-    # Simulate the crash window: store gone, _next holds the only copy.
-    shutil.move(store_path, store_path + "_next")
-
-    _time.sleep(1.1)
-    second = spark.createDataFrame(
-        [(2, [2.0, 0.2, 0.0, 0.0]), (3, [-1.0, 0.0, 0.3, 0.0])], schema
-    )  # vec 2 duplicates vec 0, which lives only in the recovered store
-    second.coalesce(1).write.mode("append").parquet(str(src))
-
-    stream = file_watchdog(spark, str(src), first.schema, max_files_per_trigger=4)
-    stream_semantic_dedup_sink(
-        stream, cents, kept_path, store_path, str(tmp_path / "ckpt2"),
-        threshold=0.9,
-    ).awaitTermination()
-
-    kept = sorted(r["vec_id"] for r in spark.read.parquet(kept_path).collect())
-    # Pre-fix behavior: vec 2 survives (deduped against nothing) and the
-    # accumulated store is destroyed.  Post-fix: 2 is dropped as a dup.
-    assert kept == [0, 1, 3]
-
-
-def test_stream_upsert_sink_manifest_mode_publishes_versions(spark, tmp_path):
-    """Streaming MERGE through the versioned-manifest protocol: each
-    micro-batch bumps the manifest, and load_published reads the merged
-    state snapshot-consistently."""
-    from metalpipe_spark.sinks.writers import (
-        load_published,
-        read_current_manifest,
-        upsert_parquet,
-    )
-    from metalpipe_spark.streaming.streams import file_watchdog, stream_upsert_sink
-
-    target = str(tmp_path / "mtarget")
-    initial = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "a", 20.0), (3, "b", 30.0)], ["id", "part", "v"]
-    )
-    upsert_parquet(initial, target, "id", "part", manifest=True)
-
-    src = tmp_path / "incoming"
-    src.mkdir()
-    spark.createDataFrame(
-        [(2, "a", 99.0), (4, "c", 40.0)], ["id", "part", "v"]
-    ).coalesce(1).write.mode("overwrite").parquet(str(src / "batch1"))
-
-    stream = file_watchdog(
-        spark, str(src / "batch1"), "id long, part string, v double"
-    )
-    stream_upsert_sink(
-        stream, target, "id", "part", str(tmp_path / "ckpt"), manifest=True
-    ).awaitTermination()
-
-    version, parts = read_current_manifest(spark, target)
-    assert version == 2 and "part=c" in parts
-    rows = {r["id"]: r["v"] for r in load_published(spark, target).collect()}
-    assert rows == {1: 10.0, 2: 99.0, 3: 30.0, 4: 40.0}
-
-
 def test_streaming_image_dedup_foreach_batch(spark, tmp_path):
     """Streaming image dedup end-to-end: micro-batches of raw-RGB rows
     dedup against the persisted dHash code store; a later batch's edited
@@ -513,15 +430,14 @@ def test_streaming_image_dedup_foreach_batch(spark, tmp_path):
 
 
 def test_store_swap_reader_atomicity_and_debris_heal(spark, tmp_path):
-    """The incremental-store publish is reader-atomic, the
-    upsert_parquet(manifest=True) contract: at every crash point of a
-    swap (new version dir fully written but manifest not flipped;
+    """The incremental-store publish is reader-atomic: at every crash
+    point of a swap (new version dir fully written but manifest not flipped;
     manifest flipped), a load_store reader resolves exactly one
     complete published version — never a mix — and the next batch
     reconciles crash debris away without changing reader-visible
     state.  (A reader that pinned version N-1 immediately before a
     promotion may find its files GC'd mid-scan — the documented
-    retryable-read caveat, shared with upsert_parquet.)"""
+    retryable-read caveat of load_published.)"""
     import os
     import shutil
     import time as _time
@@ -594,81 +510,6 @@ def test_store_swap_reader_atomicity_and_debris_heal(spark, tmp_path):
     assert v3 is not None and v3[0] == 3
     got3 = sorted(r["vec_id"] for r in load_store(spark, store_path).collect())
     assert 7 in got3 and 4 in got3
-
-
-def test_adoption_survives_crash_after_moves_before_manifest(spark, tmp_path):
-    """Review fix (r9): flat-store adoption had a crash window — all
-    top-level files renamed into v-0000000001 but the manifest never
-    written — where the next batch saw "no manifest, no flat files",
-    treated the store as empty, and OVERWROTE the only complete copy.
-    The durable _adopting-v1.json marker (written before any move)
-    makes every crash point resumable.  This test constructs the exact
-    window (files moved, marker present, no manifest) and runs a batch:
-    the accumulated state must survive and dedup the replayed batch."""
-    import json
-    import os
-    import shutil
-    import time as _time
-
-    from metalpipe_spark.streaming.streams import (
-        load_store,
-        stream_semantic_dedup_sink,
-    )
-
-    cents = [[1.0, 0.0, 0.0, 0.0], [-1.0, 0.0, 0.0, 0.0]]
-    schema = "vec_id long, embedding array<double>"
-    first = spark.createDataFrame(
-        [(0, [1.0, 0.1, 0.0, 0.0]), (1, [0.1, -1.0, 0.0, 0.0])], schema
-    )
-    src = tmp_path / "vecs"
-    first.coalesce(1).write.mode("append").parquet(str(src))
-    store_path = str(tmp_path / "store")
-    kept_path = str(tmp_path / "kept")
-
-    stream = file_watchdog(spark, str(src), first.schema, max_files_per_trigger=1)
-    stream_semantic_dedup_sink(
-        stream, cents, kept_path, store_path, str(tmp_path / "ckpt1"),
-        threshold=0.9,
-    ).awaitTermination()
-
-    # Rewind the store to pre-manifest FLAT layout (legacy on-disk
-    # state): hoist v1's data files to the top level, drop manifests.
-    v1 = os.path.join(store_path, "v-0000000001")
-    flat_files = []
-    for f in os.listdir(v1):
-        if not f.startswith(("_", ".")):
-            shutil.move(os.path.join(v1, f), os.path.join(store_path, f))
-            flat_files.append(f)
-    shutil.rmtree(v1)
-    for f in list(os.listdir(store_path)):
-        if f.startswith("_manifest"):
-            os.remove(os.path.join(store_path, f))
-
-    # Now construct the CRASH WINDOW: marker written, every flat file
-    # already moved into v-0000000001, manifest NOT yet written.
-    with open(os.path.join(store_path, "_adopting-v1.json"), "w") as fh:
-        json.dump(sorted(flat_files), fh)
-    os.makedirs(v1)
-    for f in flat_files:
-        shutil.move(os.path.join(store_path, f), os.path.join(v1, f))
-
-    _time.sleep(1.1)
-    second = spark.createDataFrame(
-        [(2, [2.0, 0.2, 0.0, 0.0]), (3, [-1.0, 0.0, 0.3, 0.0])], schema
-    )  # vec 2 duplicates vec 0, which lives only in the adopted store
-    second.coalesce(1).write.mode("append").parquet(str(src))
-
-    stream = file_watchdog(spark, str(src), first.schema, max_files_per_trigger=4)
-    stream_semantic_dedup_sink(
-        stream, cents, kept_path, store_path, str(tmp_path / "ckpt2"),
-        threshold=0.9,
-    ).awaitTermination()
-
-    kept = sorted(r["vec_id"] for r in spark.read.parquet(kept_path).collect())
-    assert kept == [0, 1, 3]  # 2 deduped against the RECOVERED state
-    store = sorted(r["vec_id"] for r in load_store(spark, store_path).collect())
-    assert 0 in store and 1 in store  # accumulated state never lost
-    assert not os.path.exists(os.path.join(store_path, "_adopting-v1.json"))
 
 
 def test_bloom_decontaminate_filter_streaming_matches_batch(spark, tmp_path):
@@ -1150,13 +991,15 @@ def test_stream_exact_substr_sink_equals_one_shot(spark, tmp_path):
     assert [(r["wL"], r["h"]) for r in markers] == [(6, "md5/ds2")]
 
 
-def test_stream_exact_substr_delta_segments_and_compaction(spark, tmp_path):
+def test_stream_exact_substr_delta_segments_and_compaction(
+    spark, tmp_path, monkeypatch
+):
     """r16: the ExactSubstr window store publishes DELTA SEGMENTS — each
     micro-batch writes only its new windows (O(batch), not O(store)) and
     the flipped manifest references prior segments plus the delta; a
     reader racing the flip still resolves exactly one manifest's file
     set, unflipped debris stays invisible and reconciles away, and a
-    later sink run with a small compact_segments folds the accumulated
+    later sink run with a small fold fan-in folds the accumulated
     segments into one directory."""
     import os
     import time as _time
@@ -1227,8 +1070,8 @@ def test_stream_exact_substr_delta_segments_and_compaction(spark, tmp_path):
     )
     assert still == want
 
-    # ... and the next batch (new checkpoint lineage, compact_segments
-    # small enough to trigger) reconciles the debris away AND
+    # ... and the next batch (new checkpoint lineage, fold fan-in small
+    # enough to trigger) reconciles the debris away AND
     # SIZE-TIER-FOLDS: the three similar-sized segments plus the new
     # delta share a byte tier, 4 >= 2 -> they merge into ONE new
     # version directory.  The fold batch allocates TWO versions (v4 =
@@ -1239,10 +1082,10 @@ def test_stream_exact_substr_delta_segments_and_compaction(spark, tmp_path):
     spark.createDataFrame(
         [(9, f"{run} fresh0 fresh1 fresh2")], ["doc_id", "text"]
     ).coalesce(1).write.mode("append").parquet(str(src))
+    monkeypatch.setattr(streams, "_FOLD_FAN_IN", 2)
     stream_exact_substr_sink(
         file_watchdog(spark, str(src), docs.schema, max_files_per_trigger=8),
         kept_path, store_path, str(tmp_path / "ckpt2"), min_length=6,
-        compact_segments=2,
     ).awaitTermination()
     v5 = read_current_manifest(spark, store_path)
     assert v5 is not None and v5[0] == 5
@@ -1259,7 +1102,7 @@ def test_stream_exact_substr_delta_segments_and_compaction(spark, tmp_path):
     assert set(want) <= set(after) and len(after) > len(want)
 
 
-def test_tiered_fold_multilevel_bounds_segments(spark, tmp_path):
+def test_tiered_fold_multilevel_bounds_segments(spark, tmp_path, monkeypatch):
     """r16 verdict task 3, multi-level: many micro-batches with a
     per-tier fan-in of 2 cascade folds LSM-style — fold outputs land
     in higher byte tiers and fold again when THEIR tier fills — so
@@ -1289,10 +1132,11 @@ def test_tiered_fold_multilevel_bounds_segments(spark, tmp_path):
             "append"
         ).parquet(str(src))
         _time.sleep(1.05)
+    monkeypatch.setattr(streams, "_FOLD_FAN_IN", 2)
     stream_exact_substr_sink(
         file_watchdog(spark, str(src), docs.schema, max_files_per_trigger=1),
         str(tmp_path / "kept"), str(tmp_path / "store"),
-        str(tmp_path / "ckpt"), min_length=6, compact_segments=2,
+        str(tmp_path / "ckpt"), min_length=6,
     ).awaitTermination()
     m = read_current_manifest(spark, str(tmp_path / "store"))
     assert m is not None
@@ -1469,7 +1313,9 @@ def test_upsert_delta_loud_without_jars_or_full_merge(spark, tmp_path):
     assert got == {1: "a", 2: "b3", 3: "c"}
 
 
-def test_stream_ngram_count_sink_and_train_from_counts(spark, tmp_path):
+def test_stream_ngram_count_sink_and_train_from_counts(
+    spark, tmp_path, monkeypatch
+):
     """r17: incremental n-gram counting — three micro-batches of
     additive count deltas (with a sum-merge tiered fold at fan_in=2)
     aggregate to exactly the one-shot gram table, and
@@ -1498,13 +1344,13 @@ def test_stream_ngram_count_sink_and_train_from_counts(spark, tmp_path):
             f"doc_id >= {lo} and doc_id < {lo + 2}"
         ).coalesce(1).write.mode("append").parquet(str(src))
         _time.sleep(1.05)
+    monkeypatch.setattr(streams, "_FOLD_FAN_IN", 2)
     stream_ngram_count_sink(
         file_watchdog(
             spark, str(src), "doc_id long, text string",
             max_files_per_trigger=1,
         ),
-        str(tmp_path / "store"), str(tmp_path / "ckpt"),
-        n=2, compact_segments=2,
+        str(tmp_path / "store"), str(tmp_path / "ckpt"), n=2,
     ).awaitTermination()
     counts = load_ngram_counts(spark, str(tmp_path / "store"))
     got = sorted(
